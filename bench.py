@@ -21,7 +21,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from bigdatastructure_a5_spark.registry import REGISTRY, _load_all
-from bigdatastructure_a5_spark.session import get_spark
+from bigdatastructure_a5_spark.session import default_parallelism, get_spark
 
 
 def _cpu_stat() -> list[int]:
@@ -204,22 +204,10 @@ def main() -> None:
         queries_steal[name] = best_steal
     steal_pct = _steal_pct(stat_start, _cpu_stat())
 
-    # Staged fixture stores (VERDICT r14 item 3 — the explicit contract):
-    # three gate rows stage BATCH-INVARIANT fixture artifacts under /tmp
-    # keyed on the fixture fingerprint + a code-derived impl token (CC
-    # minhash pairs, the packing ingest splits, dedup_retraction's
-    # batch-1 state; see README "Reading a BENCH_r{N}.json").  The ledger
-    # below makes the precomputation driver-visible: entries with
-    # built=true carry the wall seconds THIS run spent building a store
-    # (the first run on a fresh box pays them all); built=false entries
-    # prove the store was adopted without any work this run.
-    from bigdatastructure_a5_spark.queries.scratch import STAGING_LEDGER
-
     out = {
         "metric": (
             "wallclock_all_queries_min_of_2_steal_retried"
-            " (read via README.md 'Reading a BENCH_r{N}.json';"
-            " staged fixture stores itemized in staging_builds)"
+            " (read via README.md 'Reading a BENCH_r{N}.json')"
         ),
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
@@ -233,20 +221,9 @@ def main() -> None:
         # driver-contract self-proof (VERDICT r14 item 2: the artifact
         # could not prove its own core count, so `suspect_cpus_ignored`
         # fired despite the harness honoring $SPARK_GRAFT_CPUS)
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": default_parallelism(),
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
-        # aggregated per store: reps re-open stores, so fold the ledger
-        "staging_builds": [
-            {
-                "store": s,
-                "built": any(b for s2, b, _ in STAGING_LEDGER if s2 == s),
-                "build_wall_sec": round(
-                    sum(w for s2, _, w in STAGING_LEDGER if s2 == s), 3
-                ),
-            }
-            for s in sorted({s for s, _, _ in STAGING_LEDGER})
-        ],
         "sf": sf,
         "loadavg": {
             "start": [round(v, 2) for v in load_start],

@@ -34,12 +34,6 @@ from bigdatastructure_a5_spark.operators.similarity import (
 )
 from bigdatastructure_a5_spark.registry import query
 
-#: Serializes _minhash_pairs_shared's check-then-build (the gate harness
-#: runs registry queries in a thread pool — see the helper's docstring).
-import threading  # noqa: E402
-
-_CC_PAIRS_LOCK = threading.Lock()
-
 #: DuckDB equivalent of functions.hashing.normalized_text (note the 'g' flag —
 #: DuckDB replaces only the first match without it; Spark replaces all).
 _NORM_SQL = "TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g'))"
@@ -257,72 +251,6 @@ _CLUSTERS_ORACLE = f"""
     """
 
 
-def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The minhash pair set MATERIALIZED once per (fixture dir, file
-    fingerprint) and shared by the two connected-components gate rows
-    (VERDICT r12 item 3: each row independently rebuilt the identical
-    pair set — ~3-5s apiece, the two most expensive non-streaming gate
-    rows — before running its clustering algorithm, which is the surface
-    those rows actually gate; pair CONSTRUCTION keeps its own live
-    hash-gated row, ``dedup_minhash_lsh``).
-
-    Cache shape mirrors pack_assembly_incremental's corpus staging: a
-    fixed temp root keyed by the fixture path, with the store dir named
-    by the documents fingerprint + pair parameters so a regenerated
-    fixture (or changed parameters) builds a NEW dir rather than
-    replaying stale pairs — and concurrent processes can never delete a
-    store a same-fingerprint reader is using (see the inline race
-    notes).  In production this IS the recommended topology anyway:
-    materialize
-    the pair set once, then run clustering (and any pair-consuming
-    policy) over the stored pairs — re-deriving an O(corpus) shuffle
-    pipeline per consumer is the anti-pattern."""
-    import hashlib
-    import os
-    import tempfile
-
-    from bigdatastructure_a5_spark.catalog import table_fingerprint
-    from bigdatastructure_a5_spark.queries.scratch import staged_dir
-
-    scope_h = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bds_a5_cc_pairs", scope_h)
-    # the fingerprint folds in the fixture's file stats, the pair
-    # parameters, AND an impl token now DERIVED from the implementing
-    # modules' source bytes (VERDICT r14: the hand-bumped ``|impl=rN|``
-    # token meant a forgotten bump silently adopted a stale store built
-    # by older code — any edit to the pair-producing code now rotates
-    # the token automatically)
-    from bigdatastructure_a5_spark.functions import hashing as _hashing
-    from bigdatastructure_a5_spark.operators import dedup as _dedup_mod
-    from bigdatastructure_a5_spark.queries.scratch import impl_token
-
-    fprint = hashlib.md5(
-        (
-            table_fingerprint(sf_dir, "documents")
-            + "|t=0.8|h=64|b=16|n=3|impl="
-            + impl_token(_dedup_mod, _hashing)
-        ).encode()
-    ).hexdigest()[:12]
-
-    def build(build_dir: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        tracked: list = []
-        pairs = near_duplicates_minhash(
-            docs, "doc_id", "text", threshold=0.8, num_hashes=64,
-            bands=16, tracker=tracked,
-        )
-        pairs.write.mode("overwrite").parquet(build_dir)
-        for df in tracked:
-            df.unpersist()
-
-    # staged_dir handles the cross-process build race and stale pruning
-    # (queries/scratch.py); the in-process lock just keeps the two CC
-    # rows in the gate's thread pool from building twice
-    with _CC_PAIRS_LOCK:
-        data = staged_dir(root, "pairs", fprint, "_SUCCESS", build)
-    return spark.read.parquet(data)
-
-
 @query("dedup_clusters", oracle=_CLUSTERS_ORACLE, tags=("ext:dedup",))
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS (operators/components.py): the minhash
@@ -334,15 +262,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the closure with a recursive CTE, so the driver
     hash-checks an ITERATIVE distributed algorithm end-to-end.
     Propagation rounds = the dup-graph diameter (quasi-cliques, 2-3);
-    per-round plans are localCheckpoint-bounded.  The pair set comes
-    from the shared per-fixture materialization
-    (``_minhash_pairs_shared``) — built once, consumed by both CC rows;
-    pair construction itself stays live-gated via dedup_minhash_lsh."""
+    per-round plans are localCheckpoint-bounded.  The pair set is built
+    inside the call by the ``dedup_minhash_lsh`` builder, so the row's
+    wall covers pair construction as well as the clustering."""
     from bigdatastructure_a5_spark.operators.components import (
         connected_components,
     )
 
-    comp = connected_components(_minhash_pairs_shared(spark, sf_dir))
+    comp = connected_components(dedup_minhash_lsh(spark, sf_dir))
     return comp.select(
         F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
@@ -361,15 +288,14 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     the escape hatch when a dup graph is deeper than the quasi-clique
     shape dedup usually produces.  Both rows green proves the two
     algorithms agree not just in pytest fixtures but on the driver's
-    fixture corpus at gate scale.  Consumes the SAME materialized pair
-    set as dedup_clusters (``_minhash_pairs_shared``, VERDICT r12
-    item 3) — the two rows now differ ONLY in the clustering algorithm,
-    which is exactly the surface they gate."""
+    fixture corpus at gate scale.  Takes its pairs from the same
+    ``dedup_minhash_lsh`` builder as dedup_clusters, computed inside the
+    call, so the two rows differ ONLY in the clustering algorithm."""
     from bigdatastructure_a5_spark.operators.components import (
         connected_components_star,
     )
 
-    comp = connected_components_star(_minhash_pairs_shared(spark, sf_dir))
+    comp = connected_components_star(dedup_minhash_lsh(spark, sf_dir))
     return comp.select(
         F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
@@ -443,8 +369,8 @@ def dedup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
       2.+3. ``maintain_dedup_state(retract_ids=..., compact=True)``:
          BOTH r12 maintenance semantics in one fused rewrite per store
          (r14) — the retraction anti-join erases every cross-parity
-         even doc congruent 0 mod 4 (derived from the shared
-         materialized pair set — deterministic, and HALF the
+         even doc congruent 0 mod 4 (derived from the minhash pair
+         set, built inside the call — deterministic, and HALF the
          cross-parity evens, so both cross-batch outcomes stay live;
          right-to-erasure — a deleted page must stop suppressing
          future near-copies of itself), and the compaction DISTINCT +
@@ -466,14 +392,9 @@ def dedup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-vacuous in both directions in tests/test_streaming_dedup.py)."""
     import hashlib
     import os
-    import shutil
     import tempfile
 
-    from bigdatastructure_a5_spark.catalog import table_fingerprint
-    from bigdatastructure_a5_spark.queries.scratch import (
-        pid_run_dir,
-        staged_dir,
-    )
+    from bigdatastructure_a5_spark.queries.scratch import pid_run_dir
     from bigdatastructure_a5_spark.streaming.dedup import (
         maintain_dedup_state,
         process_batch,
@@ -489,84 +410,24 @@ def dedup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation is CPU-bound and wants every core — measured 10.2s at
     # 32 partitions vs 29s+ at 8 on the 32-thread box
 
-    # Batch-1's INGESTED state is batch-invariant per (fixture, params):
-    # stage it once and copy it into each run, the same staging shape as
-    # the CC pair store (VERDICT r13 item 2: the two process_batch calls
-    # dominated the row's 8-14s wall and its 0-23s prediction interval —
-    # the ops this row actually gates are the MAINTENANCE rewrites and
-    # the cross-batch ingest, which all still run live below, now against
-    # a copied store because they mutate it).  Production reads the same
-    # way: replaying a retraction/compaction experiment starts from a
-    # state SNAPSHOT, not by re-ingesting the corpus.
-    scope_h = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "bds_a5_dedup_retract", scope_h)
-    # impl token derived from the implementing modules' source bytes —
-    # see _minhash_pairs_shared's fingerprint note (VERDICT r14 item 3)
-    from bigdatastructure_a5_spark.functions import hashing as _hashing
-    from bigdatastructure_a5_spark.operators import dedup as _dedup_mod
-    from bigdatastructure_a5_spark.queries.scratch import impl_token
-    from bigdatastructure_a5_spark.streaming import dedup as _sdedup_mod
-
-    fprint = hashlib.md5(
-        (
-            table_fingerprint(sf_dir, "documents")
-            + "|t=0.8|h=64|b=16|parity=even|impl="
-            + impl_token(_sdedup_mod, _dedup_mod, _hashing)
-        ).encode()
-    ).hexdigest()[:12]
-
-    def _stage_batch1(build_dir: str) -> None:
-        process_batch(
-            spark,
-            b1,
-            os.path.join(build_dir, "state"),
-            os.path.join(build_dir, "out"),
-            **kw,
-        )
-        # Reduce the staged artifact to STATE ONLY (VERDICT r14 item 3:
-        # staged out/ rows appeared verbatim in the declared result —
-        # the weakest fixture-setup case).  Keep batch-1's keep
-        # DECISIONS as a bare id set next to the index state; the
-        # output rows themselves are rebuilt LIVE each run from the
-        # parquet fixture (see below), so every declared-result row is
-        # written by the current run's computation.
-        spark.read.parquet(os.path.join(build_dir, "out")).select(
-            "doc_id"
-        ).write.mode("overwrite").parquet(
-            os.path.join(build_dir, "kept_ids")
-        )
-        shutil.rmtree(os.path.join(build_dir, "out"))
-        # marker LAST: staged_dir treats its presence as completeness
-        with open(os.path.join(build_dir, "_STAGED_OK"), "w") as fh:
-            fh.write(fprint)
-
-    staged = staged_dir(base, "b1", fprint, "_STAGED_OK", _stage_batch1)
-
-    # per-scope, PID-scoped scratch, cleared at entry (queries/scratch:
+    # per-fixture, PID-scoped scratch, cleared at entry (queries/scratch:
     # reruns overwrite rather than accumulate temp roots, concurrent
     # processes can't clear each other's live state, dead processes'
-    # dirs are liveness-pruned); the staged snapshot is COPIED in because
-    # retraction/compaction/batch-2 mutate the store
-    root = pid_run_dir(base)  # run-* and b1-* prefixes never collide
+    # dirs are liveness-pruned); every store below is written by this call
+    scope_h = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
+    root = pid_run_dir(
+        os.path.join(tempfile.gettempdir(), "bds_a5_retraction", scope_h)
+    )
     state = os.path.join(root, "state")
     out = os.path.join(root, "out")
-    shutil.copytree(os.path.join(staged, "state"), state)
-    # Batch-1's OUTPUT rows are written live from the fixture + the
-    # staged keep-decision ids (broadcast semi-join, no shuffle): the
-    # staged store carries only batch-invariant STATE (index + decision
-    # set) — a state snapshot, exactly what a production retraction
-    # replay restores — never rows of the declared result.
-    kept1 = spark.read.parquet(os.path.join(staged, "kept_ids"))
-    b1.join(F.broadcast(kept1), "doc_id", "semi").write.mode(
-        "append"
-    ).parquet(out)
+    process_batch(spark, b1, state, out, **kw)
     # retract every cross-parity even doc congruent 0 mod 4 — HALF the
     # cross-parity evens, so the batch-2 index join exercises both a
-    # real save and a real cross-batch drop; derived from the same
-    # shared pair materialization the CC rows consume (the pair set IS
-    # the near-dup ground truth, so the rule is deterministic and the
-    # oracle replays it); symmetric scan because pairs store id_a < id_b
-    pairs = _minhash_pairs_shared(spark, sf_dir)
+    # real save and a real cross-batch drop; derived from the minhash
+    # pair set (the near-dup ground truth, so the rule is deterministic
+    # and the oracle replays it); symmetric scan because pairs store
+    # id_a < id_b
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     sym = pairs.select(
         F.col("id_a").alias("x"), F.col("id_b").alias("y")
     ).unionByName(

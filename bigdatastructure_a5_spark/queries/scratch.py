@@ -1,26 +1,16 @@
-"""Shared /tmp scratch-dir machinery for the gate-query harness caches
-(r13; single copy after the first cut triplicated it across
-queries/pipeline.py and queries/mixture_queries.py).
+"""Per-invocation scratch dirs for the registry rows that write temporary
+stores (the streaming dedup and packing rows).
 
-Two shapes, both safe under concurrent PROCESSES (the driver gate may
-run queries in a thread pool or separate processes, and a bench can
-overlap a gate on the same box):
+:func:`pid_run_dir` is the only helper.  Every store such a row reads is
+written by the same call, inside its ``run-<pid>`` dir; nothing is kept
+for a later process to adopt.  The dir is safe under concurrent
+PROCESSES (a gate may run queries in separate processes, and a bench can
+overlap a gate on the same box): it is cleared at entry (reruns
+overwrite rather than accumulate), never clears another LIVE process's
+dir, and prunes dead processes' leftovers via an ``os.kill(pid, 0)``
+liveness probe.
 
-- :func:`staged_dir` — a fingerprint-NAMED store built once and adopted
-  by everyone: same-fingerprint builders produce bit-identical content,
-  so a build-race loser adopts the winner's dir (failed ``os.rename``),
-  and nothing ever deletes a dir a same-fingerprint reader could be
-  lazily reading.  The prune of STALE fingerprints (the
-  fixture-regenerated case) skips ``.build-`` work dirs — deleting a
-  concurrent builder's in-progress dir was the race the r13 code review
-  caught.
-- :func:`pid_run_dir` — per-invocation scratch keyed by PID: cleared at
-  entry (reruns overwrite rather than accumulate), never clears another
-  LIVE process's dir, and prunes dead processes' leftovers via an
-  ``os.kill(pid, 0)`` liveness probe.
-
-These are HARNESS caches for local gate/bench fixtures — plain local
-filesystem semantics (os.rename atomicity) are assumed, which is what
+Plain local filesystem semantics are assumed, which is what
 tempfile.gettempdir() gives; the production state stores use the
 Hadoop-FS staging-swap protocol in streaming/state.py instead.
 """
@@ -29,99 +19,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
-from collections.abc import Callable
-
-#: Build ledger for the staged fixture stores (VERDICT r14 item 3: the
-#: cross-run staged-store family needs a driver-VISIBLE contract).  Every
-#: ``staged_dir`` call appends ``(store_name, built, build_wall_sec)`` —
-#: ``built=False`` means the store already existed and this process did
-#: NO build work (adoption is free).  bench.py copies the ledger into its
-#: JSON (``staging_builds``), so the FIRST bench on a fresh box reports
-#: exactly how much wall went into fixture staging, and a later bench
-#: proves it rebuilt nothing.  In-process only, deliberately: the ledger
-#: documents what THIS invocation precomputed, not the store's history.
-STAGING_LEDGER: list[tuple[str, bool, float]] = []
-
-
-def impl_token(*modules) -> str:
-    """Code-derived ``impl=`` fingerprint token for staged-store cache
-    keys: the md5 of the implementing modules' SOURCE BYTES, so any edit
-    to the code that produces a store's content invalidates the store
-    automatically (VERDICT r14: hand-bumped ``|impl=r13|`` tokens mean a
-    forgotten bump silently adopts a stale store built by older code —
-    derive the token from the code instead).  Doc-only edits also rotate
-    the token; that errs toward rebuilding, never toward staleness.
-    ``modules`` are imported module objects with a ``__file__``."""
-    import hashlib
-
-    h = hashlib.md5()
-    for m in modules:
-        with open(m.__file__, "rb") as fh:
-            h.update(fh.read())
-        h.update(b"\x00")
-    return h.hexdigest()[:10]
-
-
-def staged_dir(
-    root: str,
-    prefix: str,
-    fprint: str,
-    ready_file: str,
-    build: Callable[[str], None],
-) -> str:
-    """Return the ``{root}/{prefix}-{fprint}`` store, building it via
-    ``build(build_dir)`` if its ``ready_file`` marker is missing.
-
-    ``build`` must write the complete store INTO the given directory,
-    ending with ``ready_file`` present (a Spark parquet write's
-    ``_SUCCESS``, or an explicitly written marker LAST)."""
-    data = os.path.join(root, f"{prefix}-{fprint}")
-    if os.path.isfile(os.path.join(data, ready_file)):
-        STAGING_LEDGER.append((f"{os.path.basename(os.path.dirname(root)) or os.path.basename(root)}/{prefix}", False, 0.0))
-        return data
-    os.makedirs(root, exist_ok=True)
-    build_dir = f"{data}.build-{os.getpid()}"
-    shutil.rmtree(build_dir, ignore_errors=True)
-    t0 = time.perf_counter()
-    build(build_dir)
-    STAGING_LEDGER.append(
-        (
-            f"{os.path.basename(os.path.dirname(root)) or os.path.basename(root)}/{prefix}",
-            True,
-            round(time.perf_counter() - t0, 3),
-        )
-    )
-    try:
-        os.rename(build_dir, data)
-    except OSError:
-        # The rename usually fails because another same-fingerprint
-        # process won the race (its content is bit-identical — adopt it),
-        # but it can also fail for a non-race reason (permissions, the
-        # root pruned concurrently).  Only adopt if the winner's ready
-        # marker is actually there; otherwise surface the original error
-        # here rather than as a PATH_NOT_FOUND at first parquet read.
-        if not os.path.isfile(os.path.join(data, ready_file)):
-            raise
-        shutil.rmtree(build_dir, ignore_errors=True)
-    for d in os.listdir(root):
-        if not d.startswith(prefix + "-"):
-            continue
-        if ".build-" in d:
-            # a ``.build-<pid>`` work dir: live builders are sacred, but a
-            # crashed builder's leftovers (dead pid) would otherwise
-            # accumulate full staging trees under /tmp forever — apply the
-            # same liveness probe pid_run_dir uses
-            try:
-                os.kill(int(d.rsplit(".build-", 1)[1]), 0)
-            except (ValueError, ProcessLookupError):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-            except PermissionError:
-                pass  # alive under another uid — leave it
-        elif d != f"{prefix}-{fprint}":
-            # a COMPLETED stale-fingerprint store (fixture regenerated)
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    return data
 
 
 def pid_run_dir(base: str) -> str:

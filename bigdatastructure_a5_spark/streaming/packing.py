@@ -616,21 +616,40 @@ def _assemble_batch_tail(
         # boundary yields [] and flatten keeps it the empty tail row —
         # in the batch's own element type, because the arrays come
         # from the assembly itself (integer token-id streams included).
+        # A chunk-aligned base leaves at most ONE partial per shard; two
+        # mean the carry/tails stores are corrupt (a non-aligned base
+        # splits the first chunk too), and flatten would silently merge
+        # them into one tail — fail loudly instead, naming the shard.
+        partial = F.col("n_tokens") < chunk_tokens
         new_tails = (
             asm.groupBy("shard")
             .agg(
                 F.flatten(
-                    F.collect_list(
-                        F.when(
-                            F.col("n_tokens") < chunk_tokens, F.col("toks")
-                        )
-                    )
-                ).alias("toks")
+                    F.collect_list(F.when(partial, F.col("toks")))
+                ).alias("toks"),
+                F.count(F.when(partial, 1)).alias("__partials"),
             )
             .select(
                 "shard",
                 F.lit(batch_id).cast("bigint").alias("batch_id"),
-                "toks",
+                F.when(
+                    F.col("__partials") > 1,
+                    F.raise_error(
+                        F.concat(
+                            F.lit("assemble_batch: shard "),
+                            F.col("shard").cast("string"),
+                            F.lit(" has "),
+                            F.col("__partials").cast("string"),
+                            F.lit(
+                                " partial chunks (at most one expected) "
+                                "— carry base not chunk-aligned, state "
+                                "corrupted"
+                            ),
+                        )
+                    ),
+                )
+                .otherwise(F.col("toks"))
+                .alias("toks"),
             )
         )
         # O(shards) rows: one output file, not one per shuffle partition

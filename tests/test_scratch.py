@@ -1,111 +1,21 @@
-"""Unit tests for the shared /tmp scratch-dir machinery
-(queries/scratch.py) — the harness caches under the gate and bench rows.
-
-Pure-Python (no Spark): the module's contracts are filesystem races and
-liveness pruning, all testable with plain dirs and fake pids.  The
-ADVICE r13 fixes pinned here: a non-race ``os.rename`` failure must
-re-raise instead of silently adopting a missing store, and crashed
-builders' ``.build-<pid>`` work dirs must be liveness-pruned like
-``run-<pid>`` dirs.
+"""Scratch dirs of the registry rows that write temporary stores
+(queries/scratch.py): ``pid_run_dir``'s clearing and liveness pruning,
+and the contract that those rows leave nothing outside their
+``run-<pid>`` dir for a later process to read.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
+from pathlib import Path
 
-import pytest
-
-from bigdatastructure_a5_spark.queries.scratch import pid_run_dir, staged_dir
-
-
-def _build_ok(build_dir: str) -> None:
-    os.makedirs(build_dir, exist_ok=True)
-    with open(os.path.join(build_dir, "data.bin"), "w") as fh:
-        fh.write("payload")
-    with open(os.path.join(build_dir, "_OK"), "w") as fh:
-        fh.write("ready")
+from bigdatastructure_a5_spark.queries.scratch import pid_run_dir
 
 
 def _dead_pid() -> int:
     """A pid that is certainly not alive (max pid space is way below)."""
     return 2 ** 22 + 12345
-
-
-def test_staged_dir_builds_once_and_reuses(tmp_path):
-    root = str(tmp_path)
-    calls = []
-
-    def build(d):
-        calls.append(d)
-        _build_ok(d)
-
-    p1 = staged_dir(root, "store", "abc", "_OK", build)
-    p2 = staged_dir(root, "store", "abc", "_OK", build)
-    assert p1 == p2 == os.path.join(root, "store-abc")
-    assert len(calls) == 1  # second call adopted the ready store
-    assert os.path.isfile(os.path.join(p1, "data.bin"))
-
-
-def test_staged_dir_prunes_stale_fingerprints_only(tmp_path):
-    root = str(tmp_path)
-    old = staged_dir(root, "store", "old1", "_OK", _build_ok)
-    assert os.path.isdir(old)
-    # unrelated prefix must never be touched
-    other = os.path.join(root, "unrelated-dir")
-    os.makedirs(other)
-    new = staged_dir(root, "store", "new2", "_OK", _build_ok)
-    assert os.path.isdir(new)
-    assert not os.path.isdir(old)  # stale fingerprint pruned
-    assert os.path.isdir(other)
-
-
-def test_staged_dir_race_loser_adopts_winner(tmp_path):
-    """A build whose rename fails because the winner's store EXISTS (the
-    same-fingerprint race) adopts it and discards its own work dir."""
-    root = str(tmp_path)
-
-    def build_and_race(d):
-        _build_ok(d)
-        # simulate the winner completing between our marker probe and
-        # rename: the final store appears with its ready marker
-        _build_ok(os.path.join(root, "store-abc"))
-
-    p = staged_dir(root, "store", "abc", "_OK", build_and_race)
-    assert os.path.isfile(os.path.join(p, "_OK"))
-    assert not any(".build-" in d for d in os.listdir(root))
-
-
-def test_staged_dir_reraises_non_race_rename_failure(tmp_path):
-    """ADVICE r13: a rename that fails WITHOUT a ready winner in place
-    (permissions, pruned root) must surface the OSError, not silently
-    return a store whose first parquet read would PATH_NOT_FOUND."""
-    root = str(tmp_path)
-
-    def build_then_block(d):
-        _build_ok(d)
-        # make the rename target exist as a NON-ready dir: os.rename of a
-        # dir onto a non-empty dir raises OSError, and there is no ready
-        # marker to adopt -> must re-raise
-        bad = os.path.join(root, "store-abc")
-        os.makedirs(bad)
-        with open(os.path.join(bad, "junk"), "w") as fh:
-            fh.write("not a store")
-
-    with pytest.raises(OSError):
-        staged_dir(root, "store", "abc", "_OK", build_then_block)
-
-
-def test_staged_dir_prunes_dead_builders_work_dir(tmp_path):
-    """ADVICE r13: a crashed builder's ``.build-<pid>`` tree (dead pid)
-    is pruned; a LIVE builder's work dir is never touched."""
-    root = str(tmp_path)
-    dead = os.path.join(root, f"store-xyz.build-{_dead_pid()}")
-    os.makedirs(dead)
-    live = os.path.join(root, f"store-xyz.build-{os.getpid()}")
-    os.makedirs(live)
-    staged_dir(root, "store", "abc", "_OK", _build_ok)
-    assert not os.path.isdir(dead)
-    assert os.path.isdir(live)
 
 
 def test_pid_run_dir_clears_own_and_prunes_dead(tmp_path):
@@ -121,46 +31,35 @@ def test_pid_run_dir_clears_own_and_prunes_dead(tmp_path):
     assert not os.path.isdir(dead)  # dead sibling pruned
 
 
-def test_staging_ledger_records_build_then_adoption(tmp_path):
-    """r15 (VERDICT r14 item 3): every staged_dir call appends to the
-    STAGING_LEDGER — built=True with a positive wall on a real build,
-    built=False/0.0 on adoption — which bench.py folds into its
-    artifact's staging_builds field."""
-    from bigdatastructure_a5_spark.queries import scratch
+def test_store_writing_rows_leave_only_run_dirs(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The CC, retraction and packing rows compute every input (minhash
+    pairs, batch-1 dedup state, ingest splits) inside the call, so no
+    store outlives the process that wrote it: after running them, every
+    file and leaf dir under the temp root sits inside a ``run-<pid>``
+    dir."""
+    from bigdatastructure_a5_spark.queries.mixture_queries import (
+        pack_assembly_incremental,
+    )
+    from bigdatastructure_a5_spark.queries.pipeline import (
+        dedup_clusters,
+        dedup_retraction,
+    )
 
-    root = str(tmp_path / "bds_test_ledger" / "scope")
-    before = len(scratch.STAGING_LEDGER)
-    staged_dir(root, "store", "abc", "_OK", _build_ok)
-    staged_dir(root, "store", "abc", "_OK", _build_ok)
-    new = scratch.STAGING_LEDGER[before:]
-    assert len(new) == 2
-    name, built, wall = new[0]
-    assert name == "bds_test_ledger/store" and built and wall >= 0.0
-    name2, built2, wall2 = new[1]
-    assert name2 == name and not built2 and wall2 == 0.0
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for builder in (dedup_clusters, dedup_retraction, pack_assembly_incremental):
+        assert builder(spark, sf_dir).count() > 0
 
-
-def test_impl_token_tracks_module_source(tmp_path):
-    """r15: impl_token is the md5 of the implementing modules' source
-    bytes — stable across calls, different the moment the code changes
-    (the hand-bumped |impl=rN| hazard VERDICT r14 flagged)."""
-    import importlib.util
-    import sys
-
-    from bigdatastructure_a5_spark.queries.scratch import impl_token
-
-    p = tmp_path / "impl_token_probe_mod.py"
-    p.write_text("X = 1\n")
-    spec = importlib.util.spec_from_file_location("impl_token_probe", p)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["impl_token_probe"] = mod
-    spec.loader.exec_module(mod)
-    try:
-        t1 = impl_token(mod)
-        assert t1 == impl_token(mod)  # deterministic
-        p.write_text("X = 2\n")
-        t2 = impl_token(mod)
-        assert t2 != t1  # any source edit rotates the token
-        assert len(t1) == 10
-    finally:
-        del sys.modules["impl_token_probe"]
+    run = f"run-{os.getpid()}"
+    runs, outside = 0, []
+    for dp, dns, fns in os.walk(tmp_path):
+        parts = Path(dp).relative_to(tmp_path).parts
+        if run in parts:
+            runs += parts[-1] == run
+            continue
+        outside += [os.path.join(dp, f) for f in fns]
+        if not dns and not fns:
+            outside.append(dp)
+    assert runs == 2  # the retraction and packing rows' scratch dirs
+    assert not outside, f"stores left outside run dirs: {outside}"

@@ -378,7 +378,7 @@ def test_dedup_retraction_gate_row_is_non_vacuous(spark):
     some odd docs (their only even near-copies were retracted) AND still
     DROP some odd docs through the surviving index entries."""
     from bigdatastructure_a5_spark.queries.pipeline import (
-        _minhash_pairs_shared,
+        dedup_minhash_lsh,
         dedup_retraction,
     )
     from bigdatastructure_a5_spark.streaming.dedup import (
@@ -406,7 +406,7 @@ def test_dedup_retraction_gate_row_is_non_vacuous(spark):
     # every saved doc is odd (batch-1 decisions are untouched) and has a
     # RETRACTED even near-copy (the only mechanism that can save it)
     assert all(d % 2 == 1 for d in saved)
-    pairs = _minhash_pairs_shared(spark, SF)
+    pairs = dedup_minhash_lsh(spark, SF)
     sym = {(r.id_a, r.id_b) for r in pairs.collect()}
     sym |= {(b, a) for a, b in sym}
     retracted = {a for a, b in sym if a % 4 == 0 and b % 2 == 1}

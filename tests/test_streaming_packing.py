@@ -995,3 +995,30 @@ def test_assembly_carry_strategy_is_size_adaptive(spark):
     assert P._carry_from_assembly(tiny, None) is False
     assert P._carry_from_assembly(tiny, True) is True
     assert P._carry_from_assembly(tiny, False) is False
+
+
+def test_non_aligned_carry_base_raises_naming_the_shard(spark, tmp_path):
+    """A carry store whose base is not chunk-aligned splits the shard's
+    first chunk as well as its last, so one batch assembles TWO partial
+    chunks for that shard.  The tail aggregation must fail naming the
+    shard instead of silently flattening both partials into one tail."""
+    import pytest
+
+    from bigdatastructure_a5_spark.streaming.packing import assemble_batch
+
+    state, out = str(tmp_path / "st_c"), str(tmp_path / "out_c")
+    b0 = spark.createDataFrame(
+        [(0, 0, [f"a{j}" for j in range(20)])], TOK_SCHEMA
+    )
+    assemble_batch(spark, b0, state, out, L, batch_id=0)
+    # corrupt: batch 0's carry now claims 23 tokens (max wins per
+    # (shard, batch_id)), so batch 1 packs from base 23 - 4 = 19
+    carry = os.path.join(state, "carry")
+    spark.read.parquet(carry).withColumn(
+        "added", F.col("added") + 3
+    ).write.mode("append").parquet(carry)
+    b1 = spark.createDataFrame(
+        [(1, 0, [f"b{j}" for j in range(20)])], TOK_SCHEMA
+    )
+    with pytest.raises(Exception, match="shard 0 has 2 partial chunks"):
+        assemble_batch(spark, b1, state, out, L, batch_id=1)
