@@ -98,6 +98,14 @@ def _needs_steal_retry(
     )
 
 
+def _winners_contaminated(
+    queries_steal: dict[str, float | None], threshold: float
+) -> int:
+    """How many queries' winning rep stayed steal-contaminated (> threshold)
+    after the retries; unmeasurable steal (None) never counts."""
+    return sum(1 for s in queries_steal.values() if s is not None and s > threshold)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -215,6 +223,7 @@ def main() -> None:
         # steal share of the WINNING rep's own window, per query — which
         # rows (if any) stayed contaminated even after retries
         "queries_steal": queries_steal,
+        "winners_contaminated": _winners_contaminated(queries_steal, steal_threshold),
         # the contamination threshold the retries used, so readers
         # compare against the value in force, not a hardcoded 5.0
         "steal_threshold_pct": steal_threshold,

@@ -82,8 +82,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("challenge-cli")
     spark.sparkContext.setLogLevel("ERROR")
     base = generate_tables(spark, schema, stats, scale=args.scale, literals=literals)
-    # no view registration here: run_workload's materialize_variant owns the
-    # collection-name views (and drops any stale ones before each variant)
+    # no view registration here: run_workload writes each distinct build
+    # once, then materialize_variant registers the collection-name views
+    # over each variant's stored copy (dropping stale ones first)
 
     print(
         f"cluster: {cluster.nb_servers} modeled servers | "

@@ -142,22 +142,44 @@ def embed_many(
     return joined.withColumn(spec.path, F.coalesce(F.col(spec.path), empty))
 
 
+def kept_collections(
+    base: dict[str, DataFrame], spec: DenormalizationSpec
+) -> list[str]:
+    """The collections the layout keeps (all of ``base`` when it names none)."""
+    return [c.name for c in spec.collections] or list(base)
+
+
+def collection_key(spec: DenormalizationSpec, name: str) -> tuple:
+    """What ``build_collection`` output depends on: the collection and the
+    embeds that target it.  Two layouts with equal keys store identical
+    tables (e.g. the reference's D4 ``part`` is D3's), so a harness builds
+    each key once."""
+    return (name, tuple(e for e in spec.embeds if e.target == name))
+
+
+def build_collection(
+    base: dict[str, DataFrame], spec: DenormalizationSpec, name: str
+) -> DataFrame:
+    """One collection of the layout: ``base[name]`` with every embed that
+    targets it applied."""
+    df = base[name]
+    for e in spec.embeds:
+        if e.target == name:
+            fn = embed_one if e.cardinality == "one" else embed_many
+            df = fn(df, base[e.source], e)
+    return df
+
+
 def build_variant(
     base: dict[str, DataFrame], spec: DenormalizationSpec
 ) -> dict[str, DataFrame]:
     """Materialize the layout's logical tables (reference S7
     ``build_database_models``, `challenge/loader.py:149-182`): apply every
     embed, keep only the spec's collections."""
-    out: dict[str, DataFrame] = {}
-    kept = [c.name for c in spec.collections] or list(base)
-    for name in kept:
-        df = base[name]
-        for e in spec.embeds:
-            if e.target == name:
-                fn = embed_one if e.cardinality == "one" else embed_many
-                df = fn(df, base[e.source], e)
-        out[name] = df
-    return out
+    return {
+        name: build_collection(base, spec, name)
+        for name in kept_collections(base, spec)
+    }
 
 
 def write_variant(

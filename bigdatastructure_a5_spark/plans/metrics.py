@@ -28,6 +28,10 @@ CARBON_UNIT_PER_GB = 0.5
 PRICE_UNIT_PER_GB = 0.1
 NETWORK_MULTIPLIER = 5.0
 
+#: how long run_with_metrics waits for the async listener bus to register,
+#: then to complete, the measured execution in the SQL status store
+STORE_WAIT_S = 10.0
+
 _SIZE_UNITS = {
     "B": 1.0,
     "KiB": 1024.0,
@@ -120,26 +124,34 @@ def run_with_metrics(
     # execution (id > pre-action max) is registered, else last() can hand
     # back the previous query's metrics under load
     eid = None
-    deadline = time.time() + 10.0
+    deadline = time.time() + STORE_WAIT_S
     while time.time() < deadline:
         lst = store.executionsList()
         if lst.size() > 0 and lst.last().executionId() > last_eid_before:
             eid = lst.last().executionId()
             break
         time.sleep(0.05)
-    if eid is None:  # fall back to whatever is newest
-        eid = store.executionsList().last().executionId()
+    if eid is None:  # the newest execution is another query's: never bill it
+        raise RuntimeError(
+            f"{name}: execution not registered in the SQL status store "
+            f"within {STORE_WAIT_S:g}s"
+        )
     # metric values are aggregated asynchronously too — wait for completion
     # on a FRESH deadline (a slow registration above must not eat the
     # completion wait, or metrics get read partially aggregated)
-    deadline = time.time() + 10.0
-    plan_desc = ""
+    deadline = time.time() + STORE_WAIT_S
+    plan_desc = None
     while time.time() < deadline:
         ex = store.execution(eid)
         if ex.isDefined() and ex.get().completionTime().isDefined():
             plan_desc = ex.get().physicalPlanDescription()
             break
         time.sleep(0.05)
+    if plan_desc is None:  # metrics may be only partly aggregated
+        raise RuntimeError(
+            f"{name}: execution {eid} not completed in the SQL status store "
+            f"within {STORE_WAIT_S:g}s"
+        )
     graph = store.planGraph(eid)
     values = store.executionMetrics(eid)
 

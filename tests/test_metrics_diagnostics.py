@@ -106,6 +106,95 @@ def test_metric_parser_handles_multitask_label_lines():
     assert _parse_metric("total (min, med, max)") == 0.0
 
 
+class _Option:
+    def __init__(self, value=None):
+        self.value = value
+
+    def isDefined(self):
+        return self.value is not None
+
+    def get(self):
+        return self.value
+
+
+class _Execution:
+    def __init__(self, eid, done):
+        self.eid, self.done = eid, done
+
+    def executionId(self):
+        return self.eid
+
+    def completionTime(self):
+        return _Option(1 if self.done else None)
+
+    def physicalPlanDescription(self):
+        return f"plan of {self.eid}"
+
+
+class _ExecutionList:
+    def __init__(self, execs):
+        self.execs = execs
+
+    def size(self):
+        return len(self.execs)
+
+    def last(self):
+        return self.execs[-1]
+
+
+class _StubStore:
+    """The slice of Spark's SQL status store run_with_metrics reads.  The
+    query's save() appends ``pending`` (if any): None models a listener
+    bus that never registers the execution, an incomplete one a bus that
+    never marks it complete."""
+
+    def __init__(self, pending):
+        self.execs = [_Execution(7, done=True)]  # an earlier query's
+        self.pending = pending
+
+    def executionsList(self):
+        return _ExecutionList(list(self.execs))
+
+    def execution(self, eid):
+        return _Option(next((e for e in self.execs if e.eid == eid), None))
+
+    def save(self):
+        if self.pending is not None:
+            self.execs.append(self.pending)
+
+
+def _stub_session(store):
+    from types import SimpleNamespace
+
+    writer = SimpleNamespace(save=store.save)
+    writer.mode = writer.format = lambda *_: writer
+    spark = SimpleNamespace(
+        _jsparkSession=SimpleNamespace(
+            sharedState=lambda: SimpleNamespace(statusStore=lambda: store)
+        )
+    )
+    return spark, SimpleNamespace(write=writer)
+
+
+@pytest.mark.parametrize(
+    "pending, reason",
+    [(None, "not registered"), (_Execution(8, done=False), "not completed")],
+)
+def test_run_with_metrics_fails_loudly_when_status_store_lags(
+    monkeypatch, pending, reason
+):
+    """No Spark: a stub status store.  When the measured execution never
+    shows up, the newest one is another query's; when it never completes,
+    its metrics may be partly aggregated.  Either way billing them would
+    charge this query the wrong bytes, so the call raises naming it."""
+    from bigdatastructure_a5_spark.plans import metrics
+
+    monkeypatch.setattr(metrics, "STORE_WAIT_S", 0.2)
+    spark, df = _stub_session(_StubStore(pending))
+    with pytest.raises(RuntimeError, match=f"D4:q1_brand_filter: .*{reason}"):
+        metrics.run_with_metrics(spark, df, name="D4:q1_brand_filter")
+
+
 def test_sharding_demo_reproduces_reference_ordering(spark, sf_dir):
     """BASELINE Q6/Q7 (REPORT.md:150-155) on real layouts: the bucket-aligned
     aggregation shuffles nothing; unaligned pays; cost ordering follows."""

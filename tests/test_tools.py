@@ -1033,3 +1033,21 @@ def test_bench_steal_retry_policy():
     assert _needs_steal_retry(25.5, 0, 120.0, 5.0, 2, 120.0) is False
     # off-Linux (steal unmeasurable) -> never retry
     assert _needs_steal_retry(None, 0, 0.0, 5.0, 2, 120.0) is False
+
+
+def test_bench_winners_contaminated_count():
+    """bench.py's top-level `winners_contaminated`: the number of queries
+    whose winning rep's steal stayed above the threshold in force — a
+    reader's one-glance answer to "which rows can I act on".  At the
+    threshold is clean (the retry policy's comparison), and unmeasurable
+    steal (None, off Linux) never counts."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    from bench import _winners_contaminated
+
+    steal = {"a": 25.5, "b": 5.0, "c": 1.2, "d": None, "e": 5.1}
+    assert _winners_contaminated(steal, 5.0) == 2
+    assert _winners_contaminated(steal, 30.0) == 0
+    assert _winners_contaminated({}, 5.0) == 0

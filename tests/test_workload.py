@@ -215,3 +215,66 @@ def test_report_sinks(report, tmp_path):
     assert (tmp_path / "out" / "report.json").exists()
     plans = list((tmp_path / "out" / "plans").glob("*.plan.json"))
     assert len(plans) == len(report.rows)
+
+
+def test_workload_writes_each_distinct_build_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """D4 keeps D3's ``part`` and D1's ``lineitem`` unchanged, so the four
+    layouts hold four distinct builds: each is written once and copied
+    into every other dir that keeps it, and registering a variant runs no
+    Spark job (each view reads with its written schema, no footer
+    inference)."""
+    from pathlib import Path
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from bigdatastructure_a5_spark.plans import workload
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *args, **kwargs):
+        writes.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    registered = {}
+    materialize = workload.materialize_variant
+
+    def checked_materialize(spark, base, spec, storage_dir, *args):
+        jobs_before = dag.numTotalJobs()
+        out = materialize(spark, base, spec, storage_dir, *args)
+        assert dag.numTotalJobs() == jobs_before, f"{spec.id} ran a job"
+        registered[spec.id] = {c: df.schema for c, df in out.items()}
+        return out
+
+    monkeypatch.setattr(workload, "materialize_variant", checked_materialize)
+
+    base = load_tables(spark, sf_dir, ("part", "lineitem"))
+    storage = tmp_path / "variants"
+    report = run_workload(spark, base, DENORMS, WORKLOAD, str(storage))
+
+    assert len(writes) == 4, writes
+    for spec in DENORMS:
+        kept = {c.name for c in spec.collections}
+        assert {p.name for p in (storage / spec.id).iterdir()} == kept
+        for coll, schema in registered[spec.id].items():
+            path = str(storage / spec.id / coll)
+            assert schema == spark.read.parquet(path).schema, (spec.id, coll)
+
+    def data_files(d: Path) -> dict[str, bytes]:
+        return {f.name: f.read_bytes() for f in d.glob("*.parquet")}
+
+    for copy, orig in (("D4/part", "D3/part"), ("D4/lineitem", "D1/lineitem")):
+        files = data_files(storage / copy)
+        assert files and files == data_files(storage / orig), copy
+
+    scanned = {
+        r.variant: r.metrics.scanned_bytes
+        for r in report.rows
+        if r.query == "q1_brand_filter"
+    }
+    assert scanned["D3"] == scanned["D4"] > 0
