@@ -345,9 +345,10 @@ def pack_assembly_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete chunks are hash-matched against the batch assembly SQL
     restricted to complete chunks — stream == batch is the operator's
     own contract, here driver-gated end-to-end: incremental packing
-    geometry, the carry and tail state stores, cross-batch chunk
-    completion, and the per-batch-directory exactly-once output mode
-    all sit on the gated path.
+    geometry, the one per-shard state store (absolute base plus
+    partial-chunk tail), cross-batch chunk completion, and the
+    per-batch-directory exactly-once output mode all sit on the gated
+    path.
 
     Harness scaffolding vs operator: the ntile split + per-split
     temp-file write + forced mtimes exist only to make a finite fixture
@@ -358,7 +359,7 @@ def pack_assembly_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     since r13 (VERDICT r12 item 4's second lever): the oracle is
     batch-count independent (it checks the union of COMPLETE chunks)
     and two batches already put every cross-batch mechanism on the
-    gated path — carry read-back, tail re-pack, strictly-earlier retry
+    gated path — state read-back, tail re-pack, strictly-earlier retry
     state, per-batch exactly-once dirs; the 3-batch and bucketed splits
     stay pytest-pinned (test_streaming_packing.py).
 

@@ -531,8 +531,8 @@ def compact_dedup_state(
     volume doesn't (the same §20 mechanism measured for the packer).
     Compaction folds them back to a handful of right-sized files.
 
-    Unlike the packer's carry there is nothing to SUM: index rows are
-    pure content (their batch provenance is irrelevant to the band-key
+    Unlike the packer's store there is no latest row to pick: index
+    rows are pure content (their batch provenance is irrelevant to the band-key
     join), so compaction is ``DISTINCT`` + rewrite — the DISTINCT also
     collapses the duplicate rows a retried batch's re-append left
     behind, shrinking the store below the sum of its appends.  Bucket
@@ -546,7 +546,7 @@ def compact_dedup_state(
     staging-dir swap (write ``<store>.compacting`` fully, delete,
     rename) makes a crash at any point recoverable — readers raise on
     the missing-store-with-staging shape, re-running this completes the
-    swap.  Unlike the carry (O(shards), collected), these stores are
+    swap.  Unlike the packer's store (O(shards), collected), these are
     CORPUS-sized: the compacted frame is materialized by the staging
     WRITE itself — the original's files are deleted only after that
     write (and its ``_SUCCESS``) completes, and the frame is never
@@ -554,9 +554,10 @@ def compact_dedup_state(
 
     MUST run while the stream is STOPPED, like compact_state; safe at
     any point between batches (no batch_id cut — the stores carry none
-    and need none: unlike the carry, re-appended rows are IDENTICAL, so
-    folding a pending batch's rows cannot corrupt a retry — the retry's
-    re-append just re-duplicates them until the next compaction).
+    and need none: unlike the packer's base, no row is read back as a
+    retry's starting offset, so folding a pending batch's rows cannot
+    corrupt a retry — the retry's re-append just re-duplicates them
+    until the next compaction).
 
     Repartition notes live in ``maintain_dedup_state`` (this is a thin
     wrapper): the rewrite keys files by the store's JOIN column with a

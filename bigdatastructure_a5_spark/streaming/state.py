@@ -266,7 +266,7 @@ def last_committed_batch_id(
     This is the safe upper bound for state compaction: a batch WITHOUT
     a commit marker can still be redelivered, so its state rows must
     stay individually filterable by the strictly-earlier-batch_id rule
-    (ADVICE r11 medium — folding a pending batch's carry into the
+    (ADVICE r11 medium — folding a pending batch's state row into the
     sentinel row would re-base its retry by its own tokens)."""
     commits = join_path(checkpoint_dir, "commits")
     fs, hpath = _fs_for(spark, commits)

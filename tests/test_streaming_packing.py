@@ -1,6 +1,6 @@
 """Incremental packing (streaming/packing.py): stream == batch
-equivalence for any batch split, carry persistence across chunk
-boundaries, retry idempotence of the carry store, and the real
+equivalence for any batch split, base persistence across chunk
+boundaries, retry idempotence of the shards state store, and the real
 foreachBatch wiring."""
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from bigdatastructure_a5_spark.operators.packing import concat_and_chunk
 from bigdatastructure_a5_spark.streaming.packing import (
     pack_batch,
-    read_carry,
+    read_state,
     streaming_pack_writer,
 )
 
@@ -48,6 +48,25 @@ def _splits(docs, k):
             cond = cond & (F.col("doc_id") < hi)
         yield docs.filter(cond)
         lo = hi
+
+
+def _split_stream(spark, docs, src, schema):
+    """File-source stream over ``docs`` in 3 id-ordered one-file
+    microbatches: the file source admits oldest-mtime-first, so each
+    split gets a forced, increasing mtime."""
+    src.mkdir()
+    base_t = time.time() - 100
+    for i, b in enumerate(_splits(docs, 3)):
+        p = str(src / f"split_{i}.parquet")
+        b.coalesce(1).write.mode("overwrite").parquet(p)
+        for dp, _, fns in os.walk(p):
+            for fn in fns:
+                os.utime(os.path.join(dp, fn), (base_t + i, base_t + i))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src) + "/*")
+    )
 
 
 def test_sequential_batches_equal_batch_pack(spark, tmp_path):
@@ -93,17 +112,18 @@ def test_carry_accumulates_per_shard(spark, tmp_path):
     pack_batch(spark, b1, state, out, L, batch_id=0)
     pack_batch(spark, b2, state, out, L, batch_id=1)
     carry = {
-        r.shard: r.base for r in read_carry(spark, state).collect()
+        r.shard: r.base for r in read_state(spark, state).collect()
     }
     assert carry == {0: 16, 1: 9}
 
 
 def test_retried_batch_does_not_double_count_carry(spark, tmp_path):
-    """foreachBatch retries re-run the same batch_id: the carry store
-    dedups on (shard, batch_id), so a replayed state append leaves the
-    carry unchanged — AND the re-emitted geometry is position-identical
-    (the retry packs at the same base even though the first attempt
-    already appended this batch's carry row; ADVICE r10 high).  The
+    """foreachBatch retries re-run the same batch_id: the state row is
+    an absolute base read from strictly-earlier batches, so a replayed
+    state append leaves the base unchanged — AND the re-emitted
+    geometry is position-identical (the retry packs at the same base
+    even though the first attempt already appended this batch's state
+    row; ADVICE r10 high).  The
     worst case is crash between foreachBatch return and checkpoint
     commit: geometry written, carry written, batch redelivered whole."""
     state, out = str(tmp_path / "state3"), str(tmp_path / "out3")
@@ -112,7 +132,7 @@ def test_retried_batch_does_not_double_count_carry(spark, tmp_path):
     first = sorted(tuple(r) for r in spark.read.parquet(out).collect())
     pack_batch(spark, b1, state, out, L, batch_id=0)  # retry
     carry = {
-        r.shard: r.base for r in read_carry(spark, state).collect()
+        r.shard: r.base for r in read_state(spark, state).collect()
     }
     assert carry == {0: 5, 1: 7}
     # geometry: every retried row is an exact duplicate of a first-attempt
@@ -145,7 +165,7 @@ def test_crash_between_geometry_and_carry_is_retry_safe(spark, tmp_path):
 
     # first attempt of batch 1 crashes after the geometry append, before
     # the carry append: replicate exactly the geometry half of pack_batch
-    carry = read_carry(spark, state, before_batch_id=1)
+    carry = read_state(spark, state, before_batch_id=1)
     withbase = b2.join(
         F.broadcast(carry.withColumnRenamed("shard", "shard")),
         on=["shard"],
@@ -168,7 +188,7 @@ def test_crash_between_geometry_and_carry_is_retry_safe(spark, tmp_path):
     both = _docs(spark, [5, 7, L + 3, 2], shards=[0, 1, 0, 1])
     assert sorted(set(map(tuple, rows))) == _batch_geo(spark, both)
     # carry is single-counted
-    carry2 = {r.shard: r.base for r in read_carry(spark, state).collect()}
+    carry2 = {r.shard: r.base for r in read_state(spark, state).collect()}
     assert carry2 == {0: 5 + L + 3, 1: 9}
 
 
@@ -181,10 +201,10 @@ def test_existing_but_unreadable_state_dir_raises(spark, tmp_path):
     from pyspark.errors import AnalysisException
 
     state = tmp_path / "state6"
-    assert read_carry(spark, str(state)) is None  # missing -> first batch
-    (state / "carry").mkdir(parents=True)  # exists, no parquet inside
+    assert read_state(spark, str(state)) is None  # missing -> first batch
+    (state / "shards").mkdir(parents=True)  # exists, no parquet inside
     with pytest.raises(AnalysisException):
-        read_carry(spark, str(state))
+        read_state(spark, str(state))
 
 
 def test_new_shard_mid_stream_starts_at_zero(spark, tmp_path):
@@ -218,23 +238,7 @@ def test_real_streaming_run_matches_batch_pack(spark, tmp_path):
     mtimes (the file source admits oldest-mtime-first)."""
     counts = [5, 3, 40, 1, 16, 7, 2, 31]
     docs = _docs(spark, counts)
-    src = tmp_path / "src"
-    src.mkdir()
-    base_t = time.time() - 100
-    for i, b in enumerate(_splits(docs, 3)):
-        p = str(src / f"split_{i}.parquet")
-        b.coalesce(1).write.mode("overwrite").parquet(p)
-        for f in sorted(
-            os.path.join(dp, fn)
-            for dp, _, fns in os.walk(p)
-            for fn in fns
-        ):
-            os.utime(f, (base_t + i, base_t + i))
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
+    stream = _split_stream(spark, docs, tmp_path / "src", SCHEMA)
     out = str(tmp_path / "out_s")
     q = (
         streaming_pack_writer(
@@ -359,7 +363,7 @@ def test_incremental_assembly_equals_batch_for_any_split(spark, tmp_path):
     partial last chunk per shard."""
     from bigdatastructure_a5_spark.streaming.packing import (
         assemble_batch,
-        read_tails,
+        read_state,
     )
 
     counts = [5, 3, 40, 1, 16, 7, 2, 31, 9, 4]
@@ -375,7 +379,7 @@ def test_incremental_assembly_equals_batch_for_any_split(spark, tmp_path):
         assert _read_out(spark, out) == want_complete
         got_tails = {
             r.shard: list(r.toks)
-            for r in read_tails(spark, state).collect()
+            for r in read_state(spark, state).collect()
             if r.toks
         }
         assert got_tails == want_tails
@@ -421,7 +425,7 @@ def test_incremental_assembly_retry_is_position_identical(spark, tmp_path):
 
     from bigdatastructure_a5_spark.streaming.packing import (
         assemble_batch,
-        read_tails,
+        read_state,
     )
 
     state, out = str(tmp_path / "st_r"), str(tmp_path / "out_r")
@@ -436,7 +440,7 @@ def test_incremental_assembly_retry_is_position_identical(spark, tmp_path):
     ]
     assert set(Counter(rows).values()) == {2}  # exact duplicates only
     assert {(s, c) for s, c, _ in rows} == {(0, 0)}
-    tails = {r.shard: list(r.toks) for r in read_tails(spark, state).collect()}
+    tails = {r.shard: list(r.toks) for r in read_state(spark, state).collect()}
     assert tails == {0: [f"a{j}" for j in range(16, 20)]}
     # follow-up batch still packs at the single-counted position
     b1 = spark.createDataFrame(
@@ -459,23 +463,7 @@ def test_incremental_assembly_real_streaming_run(spark, tmp_path):
     counts = [5, 3, 40, 1, 16, 7, 2, 31]
     docs = _tok_docs(spark, counts)
     want_complete, _ = _batch_assembled(spark, docs)
-    src = tmp_path / "asrc"
-    src.mkdir()
-    base_t = time.time() - 100
-    for i, b in enumerate(_splits(docs, 3)):
-        p = str(src / f"split_{i}.parquet")
-        b.coalesce(1).write.mode("overwrite").parquet(p)
-        for f in sorted(
-            os.path.join(dp, fn)
-            for dp, _, fns in os.walk(p)
-            for fn in fns
-        ):
-            os.utime(f, (base_t + i, base_t + i))
-    stream = (
-        spark.readStream.schema(TOK_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
+    stream = _split_stream(spark, docs, tmp_path / "asrc", TOK_SCHEMA)
     out = str(tmp_path / "aout")
     q = (
         streaming_assembly_writer(
@@ -503,7 +491,7 @@ def test_compaction_preserves_stream_semantics(spark, tmp_path):
     from bigdatastructure_a5_spark.streaming.packing import (
         assemble_batch,
         compact_state,
-        read_tails,
+        read_state,
     )
 
     counts = [5, 3, 40, 1, 16, 7, 2, 31, 9, 4, 12, 29]
@@ -521,7 +509,7 @@ def test_compaction_preserves_stream_semantics(spark, tmp_path):
         assemble_batch(spark, b, st_b, out_b, L, batch_id=i)
     compact_state(spark, st_b, before_batch_id=2)
     # sentinel rows exist, real pre-cut rows are gone
-    carry_rows = spark.read.parquet(str(tmp_path / "sb" / "carry"))
+    carry_rows = spark.read.parquet(str(tmp_path / "sb" / "shards"))
     assert {r.batch_id for r in carry_rows.collect()} == {-1}
     # retry of the first post-compaction batch: same base either way
     assemble_batch(spark, batches[2], st_b, out_b, L, batch_id=2)
@@ -532,17 +520,17 @@ def test_compaction_preserves_stream_semantics(spark, tmp_path):
     got_b = _read_out(spark, out_b)  # retry dups collapse in the dict
     assert got_b == got_a and len(got_a) > 0
     tails_a = {
-        r.shard: list(r.toks) for r in read_tails(spark, st_a).collect()
+        r.shard: list(r.toks) for r in read_state(spark, st_a).collect()
     }
     tails_b = {
-        r.shard: list(r.toks) for r in read_tails(spark, st_b).collect()
+        r.shard: list(r.toks) for r in read_state(spark, st_b).collect()
     }
     assert tails_b == tails_a
     carry_a = {
-        r.shard: r.base for r in read_carry(spark, st_a).collect()
+        r.shard: r.base for r in read_state(spark, st_a).collect()
     }
     carry_b = {
-        r.shard: r.base for r in read_carry(spark, st_b).collect()
+        r.shard: r.base for r in read_state(spark, st_b).collect()
     }
     assert carry_b == carry_a
 
@@ -568,12 +556,12 @@ def test_compaction_shrinks_state_files(spark, tmp_path):
             if f.endswith(".parquet")
         )
 
-    carry_dir = os.path.join(state, "carry")
+    carry_dir = os.path.join(state, "shards")
     before = n_files(carry_dir)
     compact_state(spark, state, before_batch_id=6)
     after = n_files(carry_dir)
     assert after < before
-    carry = {r.shard: r.base for r in read_carry(spark, state).collect()}
+    carry = {r.shard: r.base for r in read_state(spark, state).collect()}
     assert carry == {0: 6 * 7, 1: 6 * 9}
 
 
@@ -654,15 +642,15 @@ def test_interrupted_compaction_raises_instead_of_first_batch(
     for i in range(3):
         b = spark.createDataFrame([(i, 0, 7)], SCHEMA)
         pack_batch(spark, b, state, out, L, batch_id=i)
-    carry_dir = os.path.join(state, "carry")
+    carry_dir = os.path.join(state, "shards")
     # simulate the crash window: store gone, staging (with _SUCCESS,
     # since every Spark parquet write leaves one) in its place
     os.rename(carry_dir, carry_dir + ".compacting")
     with pytest.raises(RuntimeError, match="compact_state"):
-        read_carry(spark, state)
+        read_state(spark, state)
     # repair path: compact_state recovers the staging dir first
     compact_state(spark, state, before_batch_id=3)
-    carry = {r.shard: r.base for r in read_carry(spark, state).collect()}
+    carry = {r.shard: r.base for r in read_state(spark, state).collect()}
     assert carry == {0: 21}
     rows = spark.read.parquet(carry_dir).collect()
     assert {r.batch_id for r in rows} == {-1}
@@ -675,7 +663,7 @@ def test_assembler_supports_integer_token_id_arrays(spark, tmp_path):
     on a chunk boundary."""
     from bigdatastructure_a5_spark.streaming.packing import (
         assemble_batch,
-        read_tails,
+        read_state,
     )
 
     schema = "doc_id bigint, shard bigint, toks array<bigint>"
@@ -683,7 +671,7 @@ def test_assembler_supports_integer_token_id_arrays(spark, tmp_path):
     # batch 0 ends EXACTLY on the chunk boundary -> empty tail row
     b0 = spark.createDataFrame([(0, 0, list(range(L)))], schema)
     assemble_batch(spark, b0, state, out, L, batch_id=0)
-    tails = {r.shard: list(r.toks) for r in read_tails(spark, state).collect()}
+    tails = {r.shard: list(r.toks) for r in read_state(spark, state).collect()}
     assert tails == {0: []}
     # batch 1 continues at the boundary; absolute chunk ids carry on
     b1 = spark.createDataFrame([(1, 0, list(range(100, 100 + L + 3)))], schema)
@@ -696,7 +684,7 @@ def test_assembler_supports_integer_token_id_arrays(spark, tmp_path):
         (0, 0): list(range(L)),
         (0, 1): list(range(100, 100 + L)),
     }
-    tails = {r.shard: list(r.toks) for r in read_tails(spark, state).collect()}
+    tails = {r.shard: list(r.toks) for r in read_state(spark, state).collect()}
     assert tails == {0: list(range(100 + L, 100 + L + 3))}
 
 
@@ -756,7 +744,7 @@ def test_pack_compaction_vs_writer_mutual_exclusion(spark, tmp_path):
         L,
         batch_id=1,
     )
-    carry = {r.shard: r.base for r in read_carry(spark, state).collect()}
+    carry = {r.shard: r.base for r in read_state(spark, state).collect()}
     assert carry == {0: 8, 1: 7}
 
 
@@ -795,9 +783,9 @@ def test_compact_state_refuses_uncommitted_batches(spark, tmp_path):
     compact_state(
         spark, state, before_batch_id=2, checkpoint_dir=str(ckpt)
     )
-    rows = spark.read.parquet(os.path.join(state, "carry")).collect()
+    rows = spark.read.parquet(os.path.join(state, "shards")).collect()
     assert {r.batch_id for r in rows} == {-1, 2}
-    carry = {r.shard: r.base for r in read_carry(spark, state).collect()}
+    carry = {r.shard: r.base for r in read_state(spark, state).collect()}
     assert carry == {0: 21}
     # an empty/missing commits log means NOTHING may fold
     ckpt2 = tmp_path / "ckpt_cb2"
@@ -891,7 +879,7 @@ def test_compact_bound_reads_real_streaming_checkpoint(spark, tmp_path):
     # before_batch_id=None derives the committed prefix (3) itself —
     # the one-liner maintenance-window form
     compact_state(spark, state, checkpoint_dir=ckpt)
-    rows = spark.read.parquet(os.path.join(state, "carry")).collect()
+    rows = spark.read.parquet(os.path.join(state, "shards")).collect()
     assert {r.batch_id for r in rows} == {-1}
 
     # backfill continues at the exact offsets the full corpus implies
@@ -931,74 +919,69 @@ def test_assemble_batch_rejects_null_ids(spark, tmp_path):
         )
 
 
-def test_assembly_carry_rows_match_raw_batch_totals(spark, tmp_path):
-    """Large batches DERIVE the carry delta from the persisted assembly
-    (sum of chunk n_tokens minus the re-packed tail length) instead of a
-    second aggregation over the raw batch (r14: for a real ingest the
-    re-aggregation re-reads and re-tokenizes every document just to
-    size() its token array).  The derivation must stay bit-identical to
-    the raw-batch totals: same (shard, batch_id) row set — a shard whose
-    only activity is its re-packed tail contributes no new tokens and
-    writes NO carry row — the same per-batch added values, and IDENTICAL
-    output chunks, for the same batch sequence run through both paths."""
+def test_assembly_state_base_tracks_raw_batch_totals(spark, tmp_path):
+    """After every batch of a 3-batch sequence, each shard's state base
+    equals its cumulative raw token total — including batch 1, where
+    shard 0 only re-packs its tail — and the emitted chunks equal the
+    batch assembler's complete chunks over the corpus so far.  Each
+    pack_batch/assemble_batch call appends exactly one parquet file to
+    state_dir/shards, and state_dir holds no other store."""
     from bigdatastructure_a5_spark.streaming.packing import assemble_batch
 
     # batch 0: shard 0 gets 10 tokens (partial tail), shard 1 gets 20
-    # (one complete chunk + a 4-token tail, L=16)
-    # batch 1: shard 1 ONLY — shard 0's tail is re-packed but adds 0
-    # batch 2: shard 0 resumes (9 + 3 tokens)
-    batches = [
-        [(0, 0, 10), (1, 1, 20)],
-        [(2, 1, 7)],
-        [(3, 0, 9), (4, 0, 3)],
-    ]
-    expect = {}
+    # (one complete chunk + a 4-token tail, L=16); batch 1: shard 1 ONLY
+    # (shard 0's tail re-packs, adds 0); batch 2: shard 0 resumes
+    batches = [[(0, 0, 10), (1, 1, 20)], [(2, 1, 7)], [(3, 0, 9), (4, 0, 3)]]
+    ast, pst, aout = (str(tmp_path / d) for d in ("ast", "pst", "aout"))
+    seen, totals = [], {}
     for i, rows in enumerate(batches):
+        seen += rows
         for _, s, n in rows:
-            expect[(s, i)] = expect.get((s, i), 0) + n
-    carries, outs = [], []
-    for mode, label in ((True, "derived"), (None, "auto_raw")):
-        state = str(tmp_path / f"st_{label}")
-        out = str(tmp_path / f"out_{label}")
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(
-                [
-                    (d, s, [f"w{d}_{j}" for j in range(n)])
-                    for d, s, n in rows
-                ],
-                TOK_SCHEMA,
-            )
-            assemble_batch(
-                spark, b, state, out, L,
-                batch_id=i, carry_from_assembly=mode,
-            )
-        carries.append({
-            (r.shard, r.batch_id): r.added
-            for r in spark.read.parquet(
-                os.path.join(state, "carry")
-            ).collect()
-        })
-        outs.append(_read_out(spark, out))
-    # no (shard=0, batch_id=1) row: tail-only shards add nothing —
-    # on BOTH paths, which also agree with the raw per-batch totals
-    assert carries[0] == carries[1] == expect
-    assert outs[0] == outs[1]
+            totals[s] = totals.get(s, 0) + n
+        docs = _tok_docs(spark, [n for *_, n in seen], [s for _, s, _ in seen])
+        new = docs.filter(F.col("doc_id") >= rows[0][0])
+        assemble_batch(spark, new, ast, aout, L, batch_id=i)
+        pack_batch(
+            spark, spark.createDataFrame(rows, SCHEMA),
+            pst, str(tmp_path / "pout"), L, batch_id=i,
+        )
+        for state in (ast, pst):
+            base = {r.shard: r.base for r in read_state(spark, state).collect()}
+            assert base == totals and os.listdir(state) == ["shards"]
+            files = os.listdir(os.path.join(state, "shards"))
+            assert sum(f.endswith(".parquet") for f in files) == i + 1
+        assert _read_out(spark, aout) == _batch_assembled(spark, docs)[0]
 
 
-def test_assembly_carry_strategy_is_size_adaptive(spark):
-    """The derive-vs-reaggregate cutover follows the batch's own size
-    estimate, not the box: tiny batches re-aggregate (cheapest), and the
-    unknown-stats sentinel must never be read as 'large'."""
-    from bigdatastructure_a5_spark.streaming import packing as P
+def test_two_store_state_dir_raises_instead_of_first_batch(spark, tmp_path):
+    """A state dir in the older two-store format (carry + tails, no
+    shards store) must raise, not read as a first batch: packing from
+    base 0 over it would overlap chunk ids already emitted."""
+    import pytest
 
-    tiny = spark.createDataFrame([(0, 0, ["a", "b"])], TOK_SCHEMA)
-    assert P._carry_from_assembly(tiny, None) is False
-    assert P._carry_from_assembly(tiny, True) is True
-    assert P._carry_from_assembly(tiny, False) is False
+    from bigdatastructure_a5_spark.streaming.packing import (
+        TwoStoreFormatError,
+        assemble_batch,
+    )
+
+    state, out = tmp_path / "st_two", str(tmp_path / "out_two")
+    spark.createDataFrame(
+        [(0, 0, 20)], "shard bigint, batch_id bigint, added bigint"
+    ).write.parquet(str(state / "carry"))
+    spark.createDataFrame(
+        [(0, 0, ["a16", "a17", "a18", "a19"])],
+        "shard bigint, batch_id bigint, toks array<string>",
+    ).write.parquet(str(state / "tails"))
+    b = _tok_docs(spark, [3])
+    for body, batch in ((assemble_batch, b), (pack_batch, _docs(spark, [3]))):
+        with pytest.raises(TwoStoreFormatError, match="two-store"):
+            body(spark, batch, str(state), out, L, batch_id=1)
+    assert not os.path.exists(out)
+    assert sorted(os.listdir(state)) == ["carry", "tails"]
 
 
 def test_non_aligned_carry_base_raises_naming_the_shard(spark, tmp_path):
-    """A carry store whose base is not chunk-aligned splits the shard's
+    """A state store whose base is not chunk-aligned splits the shard's
     first chunk as well as its last, so one batch assembles TWO partial
     chunks for that shard.  The tail aggregation must fail naming the
     shard instead of silently flattening both partials into one tail."""
@@ -1011,12 +994,13 @@ def test_non_aligned_carry_base_raises_naming_the_shard(spark, tmp_path):
         [(0, 0, [f"a{j}" for j in range(20)])], TOK_SCHEMA
     )
     assemble_batch(spark, b0, state, out, L, batch_id=0)
-    # corrupt: batch 0's carry now claims 23 tokens (max wins per
-    # (shard, batch_id)), so batch 1 packs from base 23 - 4 = 19
-    carry = os.path.join(state, "carry")
-    spark.read.parquet(carry).withColumn(
-        "added", F.col("added") + 3
-    ).write.mode("append").parquet(carry)
+    # corrupt: batch 0's base now claims 23 tokens, so batch 1 packs
+    # from base 23 - 4 = 19
+    shards = os.path.join(state, "shards")
+    rows = spark.read.parquet(shards).withColumn("base", F.col("base") + 3)
+    spark.createDataFrame(rows.collect(), rows.schema).write.mode(
+        "overwrite"
+    ).parquet(shards)
     b1 = spark.createDataFrame(
         [(1, 0, [f"b{j}" for j in range(20)])], TOK_SCHEMA
     )

@@ -133,7 +133,7 @@ def test_trainer_capstone_streams_at_ingest(spark, tmp_path):
     from bigdatastructure_a5_spark.streaming.dedup import process_batch
     from bigdatastructure_a5_spark.streaming.packing import (
         assemble_batch,
-        read_tails,
+        read_state,
     )
 
     docs = load_table(spark, SF, "documents").select(
@@ -210,7 +210,7 @@ def test_trainer_capstone_streams_at_ingest(spark, tmp_path):
     assert got == want_complete
     got_tails = {
         r.shard: list(r.toks)
-        for r in read_tails(spark, astate).collect()
+        for r in read_state(spark, astate).collect()
         if r.toks
     }
     assert got_tails == want_tails

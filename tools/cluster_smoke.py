@@ -19,7 +19,7 @@ cross-process shuffle are all real):
    that must round-trip through the cluster's shared filesystem): a
    chained-clique graph with known components must label exactly.
 3. STREAMING PACKING: a real AvailableNow ``streaming_assembly_writer``
-   run over a file source with parquet carry/tail state and
+   run over a file source with the parquet ``shards`` state store and
    ``exactly_once`` per-batch output — emitted complete chunks must
    match the batch assembler restricted to complete chunks.
 4. DEDUP MAINTENANCE SWAPS (r14): ``retract_documents`` +

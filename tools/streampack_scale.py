@@ -1,15 +1,15 @@
 """Incremental packing/assembly: per-batch cost vs stream HISTORY.
 
-The parquet state stores behind streaming/packing.py are tiny per batch
-(one carry row per shard; one tail row per shard), but they are
-APPEND-ONLY: batch N's read_carry scans N-1 earlier row-sets, so the
+The parquet state store behind streaming/packing.py is tiny per batch
+(one row per touched shard: its base, plus the assembler's tail), but it
+is APPEND-ONLY: batch N's read_state scans N-1 earlier row-sets, so the
 per-batch cost has a slowly-growing term linear in BATCH COUNT (not in
 corpus size).  This tool measures that term directly: K constant-size
 microbatches through ``pack_batch`` and ``assemble_batch``, per-batch
 wall recorded, early-window vs late-window medians compared — the
 honest price of "plain parquet state, no state-store provider", and
-the number that says when a deployment should compact the carry store
-(fold rows with batch_id < N into one sentinel row per shard).
+the number that says when a deployment should compact the state store
+(keep each shard's latest row with batch_id < N as one sentinel row).
 
 Owns the "## 20." section of EXPERIMENTS.md (same splice protocol as
 bench_variance / components_scale).
@@ -113,11 +113,11 @@ def main() -> None:
         [
             SECTION,
             "",
-            "`tools/streampack_scale.py`: the parquet state stores behind",
-            "streaming/packing.py are append-only — batch N's",
-            "read_carry/read_tails scan N-1 earlier row-sets — so the",
+            "`tools/streampack_scale.py`: the parquet state store behind",
+            "streaming/packing.py is append-only — batch N's",
+            "read_state scans N-1 earlier row-sets — so the",
             "per-batch cost carries a term linear in BATCH COUNT (never",
-            "in corpus size: the carry is one bigint and the tail",
+            "in corpus size: the base is one bigint and the tail",
             f"< L tokens per shard regardless of history).  {n_batches}",
             f"constant-size batches ({docs_per_batch:,} docs x {SHARDS}",
             f"shards, L={L}); early = median wall of batches 1-10, late =",
@@ -132,9 +132,9 @@ def main() -> None:
             "depth — driven by parquet FILE COUNT (one footer per",
             "append), not data volume.  At production cadence",
             "(thousands of batches) the deployment answer is periodic",
-            "carry/tail COMPACTION — implemented as",
-            "``streaming/packing.compact_state``: rows with batch_id < N",
-            "rewrite to one sentinel row per shard (batch_id -1 sorts",
+            "state COMPACTION — implemented as",
+            "``streaming/packing.compact_state``: each shard's latest row",
+            "with batch_id < N is kept as one sentinel row (batch_id -1 sorts",
             "strictly earlier than every real batch, so the",
             "strictly-earlier-batch_id retry rule is untouched; run",
             "between stream runs — the swap is not atomic against a",
