@@ -6,17 +6,22 @@ schema/stats files (`/root/reference/main.py:126-134`,
 DataFrames registered as temp views; statistics come from the data itself
 (Parquet footers + optional ANALYZE), not from a stats.json.
 
-Scale note: each table is a plain ``spark.read.parquet`` — on a cluster this
-is a distributed columnar scan with predicate pushdown and column pruning for
+Scale note: each table is a ``spark.read.parquet`` — on a cluster this is a
+distributed columnar scan with predicate pushdown and column pruning for
 free, replacing the reference's whole-document scan cost model
-(`challenge/simulator.py:69-70`).
+(`challenge/simulator.py:69-70`).  Every engine read of a parquet path goes
+through :func:`read_parquet`, which declares the schema Spark would infer
+from the local footer (pyarrow, no Spark job) and keeps Spark's own
+inference for remote URIs and for paths with no data file.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 #: canonical table names produced by the driver (TESTDATA.md)
 TABLES = (
@@ -40,8 +45,160 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = _read_parquet_nanos_safe(spark, table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job.
+
+    Spark infers a parquet schema with a Spark job that reads one footer.
+    A local path's footer is read here with pyarrow instead
+    (:func:`_probe_footer`) and the schema is declared, so building the
+    frame runs no job; partition columns are still discovered.  Remote
+    URIs, a missing path and an existing dir with no data file keep the
+    plain inferring read, so PATH_NOT_FOUND and UNABLE_TO_INFER_SCHEMA
+    surface exactly as before.
+
+    INT64 TIMESTAMP(NANOS) columns (pandas' default; Spark has no
+    nanosecond type and raises PARQUET_TYPE_ILLEGAL) are read as bigint
+    through the legacy conf, then converted with integer division —
+    ``ts DIV 1000`` — NOT double division, which silently corrupts
+    epoch-nanos (~1.7e18 exceeds a double's 53-bit mantissa, drifting the
+    result by hundreds of ns).  Truncating division matches how
+    DuckDB/Arrow cast ns->us."""
+    from pyspark.sql import functions as F
+
+    schema, nanos_cols = _probe_footer(path)
+    if nanos_cols:
+        # left set for the session: execution of the (lazy) scan below
+        # re-reads the conf, and it only affects nanos-typed files — which
+        # are always converted right here
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
+    for c in nanos_cols:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return df
+
+
+def _probe_footer(path: str) -> tuple[StructType | None, list[str]]:
+    """(schema Spark would infer, top-level INT64 TIMESTAMP(NANOS) columns)
+    from the first data file's footer; the schema is None when Spark must
+    infer it itself.
+
+    A Spark-written file carries its schema under the footer key
+    ``org.apache.spark.sql.parquet.row.metadata``, which is what Spark's
+    own inference reads.  Any other file is mapped from its arrow schema,
+    tz-naive timestamps as ``timestamp_ntz`` (as Spark reads them), INT96
+    as ``timestamp`` and nanos as ``bigint``.
+    Nanos are detected by the parquet logical type: pyarrow also reports
+    INT96 as ``timestamp[ns]``, but Spark reads INT96 natively.  A type
+    outside :func:`_maps_like_spark` or a nested INT96 or nanos leaf gives
+    no schema.  A non-local URI (s3://, hdfs://), a missing path, a dir
+    with no data file and an unreadable footer give no schema and no nanos
+    columns: the driver's pyarrow may lack the credentials Spark has."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if "://" in path or not os.path.exists(path):
+        return None, []
+    data_file = _first_data_file(path)
+    if data_file is None:
+        return None, []
+    try:
+        meta = pq.read_metadata(data_file)
+    except (OSError, pa.ArrowException):
+        return None, []
+    spark_schema = (meta.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    if spark_schema is not None:  # Spark never writes nanos
+        return StructType.fromJson(json.loads(spark_schema)), []
+    nanos, int96, nested = [], [], False
+    for i in range(meta.num_columns):
+        col = meta.schema.column(i)
+        if col.physical_type == "INT96":
+            kind = int96
+        elif (
+            col.physical_type == "INT64"
+            and col.logical_type.type == "TIMESTAMP"
+            and "timeUnit=nanoseconds" in str(col.logical_type)
+        ):
+            kind = nanos
+        else:
+            continue
+        if col.path == col.name:
+            kind.append(col.name)
+        else:
+            nested = True
+    if nested:
+        return None, nanos
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        if f.name in nanos:
+            t = LongType()
+        elif f.name in int96:
+            t = TimestampType()
+        elif _maps_like_spark(f.type):
+            t = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        else:
+            return None, nanos
+        fields.append(StructField(f.name, t, True))
+    return StructType(fields), nanos
+
+
+def _maps_like_spark(t) -> bool:
+    """Arrow types that ``from_arrow_type`` maps to the type Spark's parquet
+    reader gives the same column.  Left out on purpose: unsigned ints
+    (Spark widens them), durations and the null type (Spark reads their
+    physical INT64/INT32), time-of-day and float16."""
+    import pyarrow.types as pt
+
+    if pt.is_dictionary(t):
+        return _maps_like_spark(t.value_type)
+    if pt.is_list(t) or pt.is_large_list(t) or pt.is_fixed_size_list(t):
+        return _maps_like_spark(t.value_type)
+    if pt.is_map(t):
+        return _maps_like_spark(t.key_type) and _maps_like_spark(t.item_type)
+    if pt.is_struct(t):
+        return all(_maps_like_spark(f.type) for f in t)
+    return (
+        pt.is_boolean(t)
+        or pt.is_signed_integer(t)
+        or pt.is_float32(t)
+        or pt.is_float64(t)
+        or pt.is_string(t)
+        or pt.is_large_string(t)
+        or pt.is_binary(t)
+        or pt.is_large_binary(t)
+        or pt.is_fixed_size_binary(t)
+        or pt.is_date(t)
+        or pt.is_timestamp(t)
+        or pt.is_decimal128(t)
+    )
+
+
+def _first_data_file(path: str) -> str | None:
+    """The first data file under ``path`` in sorted path order, the way
+    Spark lists a parquet dir: ``_*`` and ``.*`` entries (``_SUCCESS``,
+    ``.crc``) are skipped and ``key=value`` partition dirs descended.  Any
+    other subdir returns None, leaving the layout to Spark."""
+    if os.path.isfile(path):
+        return path
+    for name in sorted(os.listdir(path)):
+        if name.startswith(("_", ".")):
+            continue
+        p = os.path.join(path, name)
+        if not os.path.isdir(p):
+            return p
+        if "=" not in name:
+            return None
+        found = _first_data_file(p)
+        if found is not None:
+            return found
+    return None
 
 
 def local_table_path(sf_dir: str, name: str) -> str | None:
@@ -86,53 +243,6 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     return hashlib.md5("||".join(parts).encode()).hexdigest()[:12]
 
 
-def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
-    """Read parquet, tolerating TIMESTAMP(NANOS) columns Spark 4 rejects.
-
-    Spark has no nanosecond timestamp type (TimestampType is microseconds);
-    files with INT64 TIMESTAMP(NANOS) (e.g. the events fixture, pandas default)
-    raise PARQUET_TYPE_ILLEGAL.  Fallback: read nanos as LongType via the
-    legacy conf, then convert with integer division — ``ts DIV 1000`` — NOT
-    double division, which silently corrupts epoch-nanos (~1.7e18 exceeds
-    a double's 53-bit mantissa, drifting the result by hundreds of ns).
-    Truncating division matches how DuckDB/Arrow cast ns->us.
-    """
-    from pyspark.sql import functions as F
-
-    nanos_cols = _nanos_columns(path)
-    if not nanos_cols:
-        return spark.read.parquet(path)
-    # left set for the session: execution of the (lazy) scan below re-reads
-    # the conf, and it only affects nanos-typed files — which we always
-    # convert right here.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nanos_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    return df
-
-
-def _nanos_columns(path: str) -> list[str]:
-    """Columns typed timestamp[ns] in the parquet footer (cheap local read;
-    checked upfront so the Spark scan never hits PARQUET_TYPE_ILLEGAL).
-    Non-local URIs (s3://, hdfs://) return [] — the driver's pyarrow may
-    lack the credentials/filesystem Spark has, and a production corpus is
-    written micros-typed; the plain Spark read stays the behavior there."""
-    import pyarrow.parquet as pq
-
-    if not os.path.exists(path):
-        return []
-    p = path
-    if os.path.isdir(path):
-        inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        if not inner:
-            return []
-        p = os.path.join(path, inner[0])
-    return [
-        f.name for f in pq.read_schema(p) if str(f.type).startswith("timestamp[ns")
-    ]
-
-
 def load_tables(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
@@ -152,7 +262,7 @@ def load_tables(
             from pyspark.errors import AnalysisException
 
             try:
-                out[name] = _read_parquet_nanos_safe(spark, path)
+                out[name] = read_parquet(spark, path)
             except AnalysisException as exc:
                 # Only "table absent" is skippable.  A corrupt footer,
                 # unsupported type, or access failure also surfaces as an
@@ -167,10 +277,10 @@ def load_tables(
                     continue
                 raise
         elif os.path.exists(path):
-            # the SAME nanos-safe reader load_table uses — a raw read would
-            # crash on TIMESTAMP(NANOS) fixtures (or, with the legacy conf
-            # already set session-wide, silently register ts as raw nanos)
-            out[name] = _read_parquet_nanos_safe(spark, path)
+            # the SAME reader load_table uses — a raw read would crash on
+            # TIMESTAMP(NANOS) fixtures (or, with the legacy conf already
+            # set session-wide, silently register ts as raw nanos)
+            out[name] = read_parquet(spark, path)
     return out
 
 

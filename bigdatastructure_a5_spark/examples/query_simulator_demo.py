@@ -37,6 +37,7 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from bigdatastructure_a5_spark.catalog import read_parquet
 from bigdatastructure_a5_spark.operators.denormalize import (
     CollectionSpec,
     DenormalizationSpec,
@@ -346,7 +347,7 @@ def simulate_queries(
             for name, df in variant.items():
                 path = f"{storage}/{name}"
                 df.write.mode("overwrite").parquet(path)
-                spark.read.parquet(path).createOrReplaceTempView(name)
+                read_parquet(spark, path).createOrReplaceTempView(name)
             for qname, kind, desc, per_layout in QUERIES:
                 sql = per_layout.get(db_signature, per_layout["default"])
                 sql = sql.replace("{IDP}", str(probe.IDP)).replace(

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatastructure_a5_spark.catalog import load_table
+from bigdatastructure_a5_spark.catalog import load_table, read_parquet
 from bigdatastructure_a5_spark.operators.mixture import assign_split, mix_domains
 from bigdatastructure_a5_spark.operators.packing import (
     assemble_chunks,
@@ -473,7 +473,7 @@ def pack_assembly_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(os.path.join(run, sub), ignore_errors=True)
     # exactly_once wrote per-batch dirs (partition-discovered `batch`
     # column, dropped here); chunk text joins exactly like the batch row
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "shard",
         "chunk_id",
         F.array_join("toks", " ").alias("text"),

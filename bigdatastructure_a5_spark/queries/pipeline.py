@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatastructure_a5_spark.catalog import load_table
+from bigdatastructure_a5_spark.catalog import load_table, read_parquet
 from bigdatastructure_a5_spark.functions.hashing import (
     md5_fingerprint,
     normalized_text,
@@ -448,7 +448,7 @@ def dedup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the store-rewrite I/O; fused == sequential is pytest-pinned
     maintain_dedup_state(spark, state, retract_ids=retract_ids, compact=True)
     process_batch(spark, b2, state, out, **kw)
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "doc_id", (F.col("doc_id") % 2).cast("bigint").alias("ingest_batch")
     )
 

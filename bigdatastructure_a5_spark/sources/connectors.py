@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
+from bigdatastructure_a5_spark.catalog import read_parquet
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -143,7 +145,7 @@ def csv_to_parquet(
     write_parquet(
         good_rows(read_csv(spark, src, schema, **csv_opts)), dst, partition_by
     )
-    return spark.read.parquet(dst)
+    return read_parquet(spark, dst)
 
 
 def jsonl_to_parquet(
@@ -162,7 +164,7 @@ def jsonl_to_parquet(
         dst,
         partition_by,
     )
-    return spark.read.parquet(dst)
+    return read_parquet(spark, dst)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -197,4 +199,4 @@ def orc_to_parquet(
     DataFrame (columnar to columnar, so no corrupt-row quarantine — ORC
     files are schema-checked at read)."""
     write_parquet(read_orc(spark, src), dst, partition_by)
-    return spark.read.parquet(dst)
+    return read_parquet(spark, dst)

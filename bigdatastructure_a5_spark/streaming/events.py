@@ -28,7 +28,7 @@ def _events_raw_schema(ts_is_nanos: bool) -> StructType:
     """events.parquet physical schema.  ``ts`` is declared to match the file's
     actual parquet type: INT64 TIMESTAMP(NANOS) must be read as long (Spark has
     no nanos type), TIMESTAMP(MICROS) reads natively as TimestampType.  The
-    batch path does the same detection (catalog._read_parquet_nanos_safe)."""
+    batch path does the same detection (catalog.read_parquet)."""
     ts_type = LongType() if ts_is_nanos else TimestampType()
     return StructType(
         [
@@ -53,12 +53,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture's ``ts`` physical type has changed across driver versions
     (TIMESTAMP(NANOS) vs TIMESTAMP(MICROS)); hardcoding either corrupts the
     other (micros DIV 1000 lands every event in January 1970).  So the footer
-    is inspected upfront — exactly like the batch reader
-    (catalog._read_parquet_nanos_safe) — and the schema + conversion branch on
-    the real type."""
-    from ..catalog import _nanos_columns, table_path
+    is inspected upfront by the batch reader's own probe
+    (catalog._probe_footer, which counts INT96 as a timestamp, not nanos)
+    and the schema + conversion branch on the real type."""
+    from ..catalog import _probe_footer, table_path
 
-    ts_is_nanos = "ts" in _nanos_columns(table_path(sf_dir, "events"))
+    _, nanos_cols = _probe_footer(table_path(sf_dir, "events"))
+    ts_is_nanos = "ts" in nanos_cols
     # the file source wants a DIRECTORY; select just the events file by glob
     reader = (
         spark.readStream.schema(_events_raw_schema(ts_is_nanos))

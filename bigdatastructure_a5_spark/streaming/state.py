@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from bigdatastructure_a5_spark.catalog import read_parquet
+
 
 def _is_path_not_found(e: Exception) -> bool:
     # PySpark 4 exposes the error class via getCondition() (getErrorClass
@@ -33,16 +35,22 @@ def _is_path_not_found(e: Exception) -> bool:
 
 
 def read_state_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """``spark.read.parquet(path)``, returning None ONLY when the path
-    does not exist (the legitimate first-batch case).  Any other
+    """``catalog.read_parquet(spark, path)``, returning None ONLY when the
+    path does not exist (the legitimate first-batch case).  Any other
     ``AnalysisException`` — empty dir ("Unable to infer schema"), schema
     drift, permission faults mapped to analysis errors — re-raises: a
     state dir that exists but cannot be read is corruption to surface,
-    not a signal to silently restart state from zero."""
+    not a signal to silently restart state from zero.
+
+    A local store's schema is declared from its footer, so the read runs
+    no Spark job.  The missing path and the existing dir with no data
+    file both take read_parquet's plain inferring read: a declared schema
+    over an empty dir would read 0 rows and silently restart state, so
+    the empty-dir raise above is carried by that fallback."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except AnalysisException as e:
         if _is_path_not_found(e):
             return None

@@ -566,3 +566,24 @@ def test_fused_maintenance_equals_sequential(spark, tmp_path):
         assert (
             b.groupBy(cols).count().agg(F.max("count")).first()[0] == 1
         )
+
+
+def test_state_store_reads_run_no_spark_job(spark, tmp_path):
+    """After two batches, the bucket-partitioned bands store and the
+    shingles store are read with the schema from their footers: building
+    each frame runs no job, and the schema (``bucket`` partition column
+    included) equals Spark's inferred one."""
+    from bigdatastructure_a5_spark.streaming.dedup import _store_paths
+    from bigdatastructure_a5_spark.streaming.state import read_state_or_none
+
+    docs = _docs(spark)
+    out, st = str(tmp_path / "out_nj"), str(tmp_path / "st_nj")
+    for b in _splits(docs, 2):
+        process_batch(spark, b, st, out, state_buckets=8)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for path in _store_paths(st):
+        before = dag.numTotalJobs()
+        store = read_state_or_none(spark, path)
+        assert dag.numTotalJobs() == before, path
+        assert store.schema == spark.read.parquet(path).schema
+    assert "bucket" in read_state_or_none(spark, _store_paths(st)[0]).columns

@@ -207,6 +207,25 @@ def test_existing_but_unreadable_state_dir_raises(spark, tmp_path):
         read_state(spark, str(state))
 
 
+def test_state_store_reads_run_no_spark_job(spark, tmp_path):
+    """After two batches the shards store is read with the schema from its
+    footer: building ``read_state`` and the raw store frame runs no job,
+    and the raw schema equals Spark's inferred one."""
+    from bigdatastructure_a5_spark.streaming.state import read_state_or_none
+
+    state, out = str(tmp_path / "state_nj"), str(tmp_path / "out_nj")
+    for i, counts in enumerate(([5, 20, 3], [7, 1, 30])):
+        pack_batch(spark, _docs(spark, counts), state, out, L, batch_id=i)
+    shards = os.path.join(state, "shards")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    latest = read_state(spark, state)
+    store = read_state_or_none(spark, shards)
+    assert dag.numTotalJobs() == before
+    assert store.schema == spark.read.parquet(shards).schema
+    assert latest.count() == 2  # one row per shard
+
+
 def test_new_shard_mid_stream_starts_at_zero(spark, tmp_path):
     """A shard first seen in batch 2 has no carry row — its stream
     starts at position 0 (chunk_id 0), while existing shards continue."""
