@@ -398,7 +398,6 @@ def simhash64(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    token_hash: str = "md5",
 ) -> DataFrame:
     """(id, simhash: bigint) — Charikar sign-random-projection over token
     hashes: bit b of the fingerprint is the sign of sum over tokens of
@@ -406,15 +405,11 @@ def simhash64(
     token occurrences have bit b set.  Near-duplicates differ in few bits
     (small Hamming distance).
 
-    ``token_hash``:
-
-    - ``"md5"`` (default): 60-bit md5-prefix hash (functions.hashing.
-      md5_hash60) — identical arithmetic in DuckDB, so the fingerprints
-      (and the near-pair query built on them) are oracle-checkable
-      bit-for-bit.  Bits 60-63 are always 0; every downstream consumer
-      (Hamming, chunking) works unchanged.
-    - ``"xxhash64"``: full 64 bits via the fastest JVM hash — the pure
-      throughput choice when cross-engine checkability isn't needed.
+    Tokens hash with the 60-bit md5 prefix (functions.hashing.md5_hash60),
+    whose arithmetic DuckDB reproduces, so the fingerprints (and the
+    near-pair query built on them) are oracle-checkable bit-for-bit.
+    Bits 60-63 are always 0; every downstream consumer (Hamming, chunking)
+    treats the print as a 64-bit word.
 
     Rows with a NULL token array (null text) AND rows whose text is
     empty/whitespace-only (normalizes to the one-token array ['']) are
@@ -444,21 +439,10 @@ def simhash64(
     partitioned 100 TB corpus.
     """
     from bigdatastructure_a5_spark.functions.hashing import md5_hash60, tokens
-
-    if token_hash == "md5":
-        nbits, hash_one = 60, md5_hash60
-    elif token_hash == "xxhash64":
-        nbits, hash_one = 64, F.xxhash64
-    else:
-        raise ValueError(f"token_hash must be 'md5' or 'xxhash64', got {token_hash!r}")
-
-    # bit-b weight 2^b; b=63 is the sign bit, i.e. Long.MIN_VALUE — the
-    # same value shiftleft(1L, 63) produced, so 64-bit prints are unchanged
     from bigdatastructure_a5_spark.functions.vectors import long_array_lit
 
-    weights = long_array_lit(
-        [(1 << b) if b < 63 else -(1 << 63) for b in range(nbits)]
-    )
+    nbits = 60
+    weights = long_array_lit([1 << b for b in range(nbits)])
     hs = F.col("__hs")
     n = F.size(hs)
     counts = F.aggregate(
@@ -489,14 +473,14 @@ def simhash64(
             (F.size("__toks") > 0)
             & ~((F.size("__toks") == 1) & (F.element_at("__toks", 1) == ""))
         )
-        .select("id", F.transform("__toks", lambda t: hash_one(t)).alias("__hs"))
+        .select("id", F.transform("__toks", md5_hash60).alias("__hs"))
         .select("id", fingerprint.alias("simhash"))
     )
 
 
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two fingerprints (popcount of XOR).  Works
-    for any width <= 64; with the default 60-bit md5 fingerprints the top
+    for any width <= 64; with simhash64's 60-bit md5 fingerprints the top
     4 bits are always 0 and never contribute."""
     x = a.bitwiseXOR(b)
     return F.bit_count(x)
@@ -520,8 +504,7 @@ def simhash_chunk_candidates(
     chunks=5 gives five 12-bit chunks covering the 60 meaningful bits
     exactly (pigeonhole then holds for Hamming <= 4) but MORE candidates,
     not fewer — measured 2.5-4x (EXPERIMENTS.md §4): chunk count is the
-    recall-bound knob; the volume knob is chunk WIDTH, i.e. wider prints
-    (the xxhash64 fingerprint mode's four full 16-bit chunks)."""
+    recall-bound knob; the volume knob is chunk WIDTH."""
     width = 64 // chunks
     mask = (1 << width) - 1
     chunked = fingerprints.select(

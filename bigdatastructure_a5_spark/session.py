@@ -314,15 +314,6 @@ _RESULT_CACHE_LIMIT = 4
 #: filled, which recomputes silently (correct but slow) rather than erring.
 _RESULT_CACHES_LOCK = threading.Lock()
 
-#: Optional observer called with each materialized result DataFrame right
-#: after its cache-filling count() — i.e. at the exact moment the
-#: materialization pipeline's EXECUTED plan (the cached plan in final AQE
-#: form) is attached to the frame.  tools/plan_audit.py installs one so
-#: PLAN_AUDIT.md can report the pipeline that actually does the work for
-#: dedup/curation queries, not just their terminal cache-read job.  None
-#: in production: zero overhead on the hot path.
-MATERIALIZATION_OBSERVER = None
-
 
 def materialize_release(result, tracked):
     """Materialize ``result`` into its own (small) cache, then unpersist the
@@ -348,8 +339,6 @@ def materialize_release(result, tracked):
         return result
     result = persist_df(result)
     result.count()
-    if MATERIALIZATION_OBSERVER is not None:
-        MATERIALIZATION_OBSERVER(result)
     for df in tracked:
         df.unpersist(blocking=False)
     tracked.clear()

@@ -42,10 +42,6 @@ def _events_raw_schema(ts_is_nanos: bool) -> StructType:
     )
 
 
-#: legacy alias (64-bit nanos variant) kept for external callers
-EVENTS_RAW_SCHEMA = _events_raw_schema(ts_is_nanos=True)
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events fixture (one file = one microbatch
     under AvailableNow).
@@ -99,16 +95,6 @@ def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-#: Optional audit hook: called with ``(name, progress_dicts)`` after a
-#: run_stream_to_memory query terminates, where ``progress_dicts`` is the
-#: query's ``recentProgress`` (per-microbatch StreamingQueryProgress,
-#: including ``stateOperators`` state rows / memory / watermark drops).
-#: tools/plan_audit.py sets it to emit real streaming-state audit rows
-#: (VERDICT r6 item 3); None in production.  Same pattern as
-#: session.MATERIALIZATION_OBSERVER.
-STREAMING_OBSERVER = None
-
-
 def run_stream_to_memory(
     spark: SparkSession,
     streaming_df: DataFrame,
@@ -155,8 +141,6 @@ def run_stream_to_memory(
         else:
             q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-        if STREAMING_OBSERVER is not None:
-            STREAMING_OBSERVER(name, list(q.recentProgress))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)

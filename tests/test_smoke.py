@@ -6,11 +6,80 @@ import importlib.util
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 spec = importlib.util.spec_from_file_location("__spark_entry__", REPO / "__spark_entry__.py")
 entry_mod = importlib.util.module_from_spec(spec)
 sys.modules["__spark_entry__"] = entry_mod
 spec.loader.exec_module(entry_mod)
+
+# The benchmark's plan-node patterns, imported (perfbench/ is its own tree,
+# importable only with its dir on the path).
+sys.path.insert(0, str(REPO / "perfbench"))
+try:
+    from layers import PLAN_NODES
+finally:
+    sys.path.remove(str(REPO / "perfbench"))
+
+#: Each registry row's plan signature at sf0.001: PLAN_NODES counts, in
+#: PLAN_NODES order (exchanges, broadcast joins, sort-merge joins,
+#: in-memory scans, Python nodes), summed over the final (AQE) plan graph
+#: of every SQL execution the row starts — eager materialize_release
+#: pipelines and streaming micro-batches as well as the terminal count().
+#: An intended plan change re-pins from the table the failure prints.
+PLAN_SIGNATURES = {
+    "agg_distinct_having": (3, 0, 0, 0, 0),
+    "agg_on_orderkey": (2, 0, 0, 0, 0),
+    "agg_prefiltered": (2, 0, 0, 0, 0),
+    "agg_pricing_summary": (2, 0, 0, 0, 0),
+    "agg_rollup": (2, 0, 0, 0, 0),
+    "agg_then_join": (2, 1, 0, 0, 0),
+    "curriculum_bins": (1, 0, 0, 0, 0),
+    "decontam_benchmark": (5, 2, 0, 5, 0),
+    "dedup_clusters": (19, 22, 0, 34, 0),
+    "dedup_clusters_star": (22, 18, 0, 22, 0),
+    "dedup_exact": (2, 0, 0, 0, 0),
+    "dedup_minhash_lsh": (6, 6, 0, 14, 0),
+    "dedup_ngram_jaccard": (6, 6, 0, 10, 0),
+    "dedup_retraction": (25, 26, 0, 46, 0),
+    "dedup_semantic": (8, 4, 0, 4, 2),
+    "dedup_simhash": (6, 2, 0, 6, 0),
+    "denorm_join_elimination": (2, 1, 0, 0, 0),
+    "denorm_many_embed": (1, 0, 0, 0, 0),
+    "document_report": (1, 0, 0, 0, 0),
+    "events_json_extract": (1, 0, 0, 0, 0),
+    "events_sessionize": (2, 0, 0, 0, 0),
+    "events_sliding_window": (2, 0, 0, 0, 0),
+    "events_streaming_interval_join": (5, 0, 0, 0, 0),
+    "events_streaming_rollup": (3, 0, 0, 0, 0),
+    "filter_eq_conjunctive": (1, 0, 0, 0, 0),
+    "filter_over_intermediate": (2, 0, 0, 0, 0),
+    "join_asof_attribution": (3, 0, 0, 0, 0),
+    "join_equi_inner": (1, 1, 0, 0, 0),
+    "join_filtered_brand": (2, 1, 0, 0, 0),
+    "join_range_error_context": (2, 1, 0, 0, 0),
+    "join_salted_skew": (1, 1, 0, 0, 0),
+    "join_semi_anti": (1, 2, 0, 0, 0),
+    "join_three_way": (2, 2, 0, 0, 0),
+    "layout_zorder_box": (4, 0, 0, 0, 0),
+    "multimodal_decode": (1, 0, 0, 0, 1),
+    "pack_assembly_incremental": (10, 2, 0, 4, 0),
+    "pack_chunks": (2, 0, 0, 0, 0),
+    "pipeline_curation": (9, 11, 0, 19, 0),
+    "pipeline_mixture": (1, 0, 0, 0, 0),
+    "projection_computed": (1, 0, 0, 0, 0),
+    "set_operations": (2, 2, 0, 0, 0),
+    "sim_ann_ivf": (0, 0, 0, 0, 0),
+    "sim_ann_lsh": (0, 0, 0, 0, 0),
+    "sim_bruteforce_topk": (0, 0, 0, 0, 0),
+    "sim_pq_adc": (0, 0, 0, 0, 0),
+    "sim_sq8_topk": (2, 0, 0, 0, 0),
+    "sketch_countmin_topk": (2, 1, 0, 0, 0),
+    "sort_limit_topk": (0, 0, 0, 0, 0),
+    "text_langid": (1, 0, 0, 0, 0),
+    "text_quality": (1, 0, 0, 0, 0),
+}
 
 
 def test_entry_returns_rows(spark):
@@ -29,10 +98,66 @@ def test_every_query_has_callable_and_most_have_oracles(spark):
     assert len(oracles) >= 0.7 * len(qs)
 
 
+def _newest_execution(spark) -> int:
+    """Id of the newest SQL execution, once the listener bus has delivered
+    every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.last().executionId() if execs.size() else -1
+
+
+def _plan_signature(spark, after: int) -> tuple[int, ...]:
+    """PLAN_NODES counts over every SQL execution with id > ``after``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    counts = [0] * len(PLAN_NODES)
+    for i in range(execs.size() - 1, -1, -1):
+        eid = execs.apply(i).executionId()
+        if eid <= after:
+            break
+        nodes = store.planGraph(eid).allNodes().iterator()
+        while nodes.hasNext():
+            name = nodes.next().name().strip()
+            for k, pat in enumerate(PLAN_NODES.values()):
+                counts[k] += bool(pat.search(name))
+    return tuple(counts)
+
+
 def test_all_queries_run_nonempty_at_sf0001(spark, sf_dir):
+    """Every registry row returns rows and keeps its pinned plan signature.
+
+    Cross-test state that would change a signature is reset per row:
+    result caches left by earlier rows or tests (they turn pipelines into
+    InMemoryTableScan reads) and sim_sq8_topk's bounds memo (a warm memo
+    skips the bounds-fit job)."""
+    from bigdatastructure_a5_spark.queries import quant_queries
+
+    observed = {}
     for name, fn in entry_mod.queries().items():
+        spark.catalog.clearCache()
+        quant_queries._SQ8_BOUNDS_CACHE.clear()
+        before = _newest_execution(spark)
         df = fn(spark, sf_dir)
         assert df.count() > 0, f"{name} returned no rows at sf0.001"
+        observed[name] = _plan_signature(spark, before)
+    if observed != PLAN_SIGNATURES:
+        missing = PLAN_SIGNATURES.keys() - observed.keys()
+        changed = [f"  {name}: pinned but not run" for name in sorted(missing)]
+        for name, sig in observed.items():
+            pinned = PLAN_SIGNATURES.get(name)
+            if pinned is None:
+                changed.append(f"  {name}: not pinned")
+            elif pinned != sig:
+                diffs = [f"{f} {a} -> {b}" for f, a, b in zip(PLAN_NODES, pinned, sig) if a != b]
+                changed.append(f"  {name}: " + ", ".join(diffs))
+        table = "\n".join(f'    "{name}": {sig},' for name, sig in sorted(observed.items()))
+        pytest.fail(
+            "plan signatures changed:\n" + "\n".join(changed)
+            + "\n\nobserved table (paste over PLAN_SIGNATURES if the change is intended):\n"
+            + "PLAN_SIGNATURES = {\n" + table + "\n}",
+            pytrace=False,
+        )
 
 
 def test_cluster_profile_matches_coverage_deploy_table():
@@ -82,8 +207,6 @@ def test_cluster_profile_matches_coverage_deploy_table():
     assert re.search(r"RocksDBStateStoreProvider$",
                      ov["spark.sql.streaming.stateStore.providerClass"])
     # and an unknown profile is a loud error, not a silent local session
-    import pytest
-
     from bigdatastructure_a5_spark.session import get_spark
 
     with pytest.raises(ValueError, match="profile"):

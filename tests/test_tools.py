@@ -1,9 +1,11 @@
 """Spark-free units for the measurement tools' pure logic.
 
-The tools themselves are validated by the artifacts they regenerate
-(EXPERIMENTS.md, PLAN_AUDIT.md); these tests pin the pure decision
-logic — the scaling sweep's verdict/flagging rules — which otherwise
-only runs inside a ~15-minute full sweep.
+The tools themselves are validated by the EXPERIMENTS.md sections they
+regenerate; these tests pin the pure decision logic — the scaling
+sweep's verdict/flagging rules, the shared rep timer, the streaming
+progress fold — which otherwise only runs inside a long full sweep.
+Plan evidence is not a tool artifact: each registry row's plan signature
+is pinned in tests/test_smoke.py.
 """
 
 import sys
@@ -394,17 +396,24 @@ def test_streaming_scale_summarize_progress():
 
 
 def test_pq_sizing_timed_reps_excludes_warmup(monkeypatch):
-    """§14's serving column is median-of-3 after an excluded warm-up rep
-    (the §12 lesson: warm-up order leaking into per-config numbers made
-    the r7 table contradict itself)."""
+    """The tools' one rep timer (§14's serving column, §15-§17's walls) is
+    median-of-3 after an excluded warm-up rep (the §12 lesson: warm-up
+    order leaking into per-config numbers made the r7 table contradict
+    itself)."""
+    import decontam_scale
+    import layout_experiment
+    import mixpack_scale
     import pq_sizing
+    import timing
 
+    for tool in (decontam_scale, layout_experiment, mixpack_scale, pq_sizing):
+        assert tool.timed_reps is timing.timed_reps
     # the warm-up rep reads the clock once (its elapsed time is never
     # taken); each timed rep reads it twice
     ticks = iter([0.0, 10.0, 11.0, 20.0, 22.0, 30.0, 33.0])
-    monkeypatch.setattr(pq_sizing.time, "perf_counter", lambda: next(ticks))
+    monkeypatch.setattr(timing.time, "perf_counter", lambda: next(ticks))
     calls = []
-    got = pq_sizing.timed_reps(lambda: calls.append(1))
+    got = timing.timed_reps(lambda: calls.append(1))
     assert len(calls) == 4  # 1 warm-up + N_REPS=3 timed
     assert got == 2.0  # median of (1.0, 2.0, 3.0); the warm-up excluded
 

@@ -33,9 +33,7 @@ Usage: python tools/decontam_scale.py [copies ...]   (default: 1 10 100)
 
 from __future__ import annotations
 
-import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -43,21 +41,11 @@ sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
+from timing import N_REPS, timed_reps  # noqa: E402
 
 SECTION = "## 16. Decontamination at scale: fixed benchmark, growing corpus"
 BASE = "/root/testdata/sf0.01"
-N_REPS = 3
 NGRAM_WIDTHS = (3, 8)
-
-
-def timed_reps(fn) -> float:
-    secs = []
-    for rep in range(1 + N_REPS):
-        t0 = time.perf_counter()
-        fn()
-        if rep > 0:
-            secs.append(time.perf_counter() - t0)
-    return statistics.median(secs)
 
 
 def measure(spark, copy_points) -> list[str]:

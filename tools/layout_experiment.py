@@ -30,9 +30,7 @@ Usage: python tools/layout_experiment.py [copies]   (default: 100)
 from __future__ import annotations
 
 import shutil
-import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -40,12 +38,12 @@ sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
+from timing import N_REPS, timed_reps  # noqa: E402
 
 SECTION = "## 15. Layout: single-sort vs Z-order for 2-D pruning, measured"
 BASE = "/root/testdata/sf0.01"
 STORE_ROOT = Path("/tmp/bds_layout")
 N_FILES = 64
-N_REPS = 3
 
 
 def row_group_boxes(path: str, cols: tuple[str, str]):
@@ -75,16 +73,6 @@ def intersecting(boxes, a_range, b_range):
             hit += 1
             rows_hit += n_rows
     return hit, rows_hit, len(boxes), sum(b[0] for b in boxes)
-
-
-def timed_reps(fn) -> float:
-    secs = []
-    for rep in range(1 + N_REPS):
-        t0 = time.perf_counter()
-        fn()
-        if rep > 0:
-            secs.append(time.perf_counter() - t0)
-    return statistics.median(secs)
 
 
 def measure(spark, copies: int) -> list[str]:

@@ -24,9 +24,7 @@ Usage: python tools/mixpack_scale.py [copies ...]   (default: 1 10 100)
 
 from __future__ import annotations
 
-import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -34,20 +32,10 @@ sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
+from timing import N_REPS, timed_reps  # noqa: E402
 
 SECTION = "## 17. Mixture and packing at scale"
 BASE = "/root/testdata/sf0.01"
-N_REPS = 3
-
-
-def timed_reps(fn) -> float:
-    secs = []
-    for rep in range(1 + N_REPS):
-        t0 = time.perf_counter()
-        fn()
-        if rep > 0:
-            secs.append(time.perf_counter() - t0)
-    return statistics.median(secs)
 
 
 def measure(spark, copy_points) -> tuple[list[str], list[str]]:

@@ -22,7 +22,6 @@ from __future__ import annotations
 import shutil
 import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -30,27 +29,16 @@ sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
+from timing import N_REPS, timed_reps  # noqa: E402
 
 SECTION = "## 14. PQ compression + ADC serving, measured"
 STORE_ROOT = Path("/tmp/bds_pq_sizing")
 N_QUERIES = 5
-N_REPS = 3  # timed serving reps per config; one warm-up rep excluded
 PQ_CONFIGS = ((8, 256), (16, 256))  # (m sub-vectors, codes per sub-space)
 
 
 def dir_bytes(path: str) -> int:
     return sum(f.stat().st_size for f in Path(path).rglob("*") if f.is_file())
-
-
-def timed_reps(fn) -> float:
-    """Median of N_REPS reps after one excluded warm-up rep."""
-    secs = []
-    for rep in range(1 + N_REPS):
-        t0 = time.perf_counter()
-        fn()
-        if rep > 0:
-            secs.append(time.perf_counter() - t0)
-    return statistics.median(secs)
 
 
 def measure(spark, copy_points) -> list[str]:

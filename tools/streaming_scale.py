@@ -25,9 +25,13 @@ Usage: python tools/streaming_scale.py [copies ...]   (default: 1 30 100)
 
 from __future__ import annotations
 
+import json
 import sys
 import time
+from contextlib import contextmanager
 from pathlib import Path
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -43,7 +47,7 @@ def summarize_progress(
 ) -> dict:
     """Fold captured per-microbatch StreamingQueryProgress dicts into the
     summary the table renders.  Pure (testable without Spark): the input is
-    exactly what STREAMING_OBSERVER receives — (sink name, recentProgress
+    what ``captured_progress`` yields — (sink name, recentProgress-shaped
     list) pairs, each progress a dict with numInputRows / durationMs /
     stateOperators (numRowsTotal, memoryUsedBytes)."""
     batches = []
@@ -83,23 +87,51 @@ def summarize_progress(
     }
 
 
+class _ProgressListener(StreamingQueryListener):
+    """Every micro-batch's StreamingQueryProgress, as the dict
+    ``StreamingQuery.recentProgress`` holds, grouped by query name."""
+
+    def __init__(self):
+        self.by_name: dict[str, list[dict]] = {}
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        self.by_name.setdefault(p.name, []).append(json.loads(p.json))
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+@contextmanager
+def captured_progress(spark):
+    """Yield a list that, once the block exits, holds one (query name,
+    per-batch progress dicts) pair per streaming query ``spark`` ran inside
+    the block — the input ``summarize_progress`` folds."""
+    listener = _ProgressListener()
+    caps: list[tuple[str, list[dict]]] = []
+    spark.streams.addListener(listener)
+    try:
+        yield caps
+    finally:
+        # progress events reach the listener through the async listener bus
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        spark.streams.removeListener(listener)
+        caps.extend(listener.by_name.items())
+
+
 def run_one(spark, query: str, sf_dir: str) -> dict:
     """Run one streaming gate query over ``sf_dir``; -> summary dict with
     per-microbatch stateOperators metrics from the query's own progress."""
-    import bigdatastructure_a5_spark.streaming.events as _stream_events
     from bigdatastructure_a5_spark.registry import REGISTRY, _load_all
 
     _load_all()
-    caps: list[tuple[str, list[dict]]] = []
-    _stream_events.STREAMING_OBSERVER = lambda sink, progress: caps.append(
-        (sink, progress)
-    )
     t0 = time.perf_counter()
-    try:
+    with captured_progress(spark) as caps:
         df = REGISTRY[query].builder(spark, sf_dir)
         out_rows = df.count()
-    finally:
-        _stream_events.STREAMING_OBSERVER = None
     wall = time.perf_counter() - t0
     return summarize_progress(query, caps, wall, out_rows)
 
@@ -165,7 +197,6 @@ def run_join_microbatched(
     the RocksDB provider with ``extra_conf`` scoped around the run (the
     §13b changelog-checkpointing lever).  -> summary dict
     (summarize_progress shape)."""
-    import bigdatastructure_a5_spark.streaming.events as _stream_events
     from bigdatastructure_a5_spark.streaming.events import (
         run_stream_to_memory,
     )
@@ -195,10 +226,6 @@ def run_join_microbatched(
         errors, clicks, on="user_id", low_seconds=-14400, high_seconds=0
     ).select("event_id", "user_id", "ts", "r_ts", "r_click_id")
 
-    caps: list[tuple[str, list[dict]]] = []
-    _stream_events.STREAMING_OBSERVER = lambda sink, progress: caps.append(
-        (sink, progress)
-    )
     key = "spark.sql.streaming.stateStore.providerClass"
     scoped = dict(extra_conf or {})
     if provider:
@@ -211,16 +238,16 @@ def run_join_microbatched(
     )
     t0 = time.perf_counter()
     try:
-        out = run_stream_to_memory(
-            spark,
-            joined,
-            name=f"amortize_{run_tag}",
-            output_mode="append",
-            state_partitions=2,
-        )
+        with captured_progress(spark) as caps:
+            out = run_stream_to_memory(
+                spark,
+                joined,
+                name=f"amortize_{run_tag}",
+                output_mode="append",
+                state_partitions=2,
+            )
         out_rows = out.count()
     finally:
-        _stream_events.STREAMING_OBSERVER = None
         for k, prior in priors.items():
             if prior is None:
                 spark.conf.unset(k)
@@ -336,8 +363,7 @@ def main() -> None:
             "and keeps ts — window count constant, per-window fan-in and",
             "join-state cardinality ~linear in N).  Metrics are the",
             "engine's own per-microbatch",
-            "`StreamingQueryProgress.stateOperators` (the same rows",
-            "PLAN_AUDIT pins at gate scale): state rows = live entries in",
+            "`StreamingQueryProgress.stateOperators`: state rows = live entries in",
             "the state store after the batch, state MB =",
             "`memoryUsedBytes` of the default in-memory",
             "(HDFSBackedStateStore) provider, rows/s = input rows over",
