@@ -84,7 +84,7 @@ def main(argv: list[str] | None = None) -> int:
     base = generate_tables(spark, schema, stats, scale=args.scale, literals=literals)
     # no view registration here: run_workload writes each distinct build
     # once, then materialize_variant registers the collection-name views
-    # over each variant's stored copy (dropping stale ones first)
+    # over the stored builds (dropping stale ones first)
 
     print(
         f"cluster: {cluster.nb_servers} modeled servers | "

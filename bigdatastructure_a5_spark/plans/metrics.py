@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import re
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,9 +29,11 @@ CARBON_UNIT_PER_GB = 0.5
 PRICE_UNIT_PER_GB = 0.1
 NETWORK_MULTIPLIER = 5.0
 
-#: how long run_with_metrics waits for the async listener bus to register,
-#: then to complete, the measured execution in the SQL status store
+#: how long run_with_metrics waits for the async listener bus to register
+#: the measured jobs, then to complete their execution, in the status stores
 STORE_WAIT_S = 10.0
+#: Spark's job tag naming the SQL execution a job runs for
+_ROOT_EXECUTION = re.compile(r"-execution-root-id-(\d+)\b")
 
 _SIZE_UNITS = {
     "B": 1.0,
@@ -106,52 +109,85 @@ class QueryMetrics:
         }
 
 
+def _tagged_executions(jsc, tag: str) -> set[int | None]:
+    """The SQL executions of the registered jobs that carry ``tag`` (None
+    for a job outside any): Spark tags every job of an SQL execution
+    ``<session tag>-execution-root-id-<N>``."""
+    store = jsc.statusStore()
+    out = set()
+    for jid in jsc.statusTracker().getJobIdsForTag(tag):
+        m = _ROOT_EXECUTION.search(store.job(jid).jobTags().mkString(" "))
+        out.add(int(m.group(1)) if m else None)
+    return out
+
+
+def _one_execution(eids: set[int | None], name: str) -> int:
+    if len(eids) != 1 or None in eids:
+        raise RuntimeError(
+            f"{name}: its jobs belong to SQL executions "
+            f"{sorted(map(str, eids))}, not one"
+        )
+    return next(iter(eids))
+
+
 def run_with_metrics(
     spark: SparkSession, df: DataFrame, name: str = "query"
 ) -> QueryMetrics:
     """Execute ``df`` (noop sink: full execution, no driver collect) and pull
     its metrics from the SQL status store — AQE-safe, unlike walking
-    ``executedPlan`` (an AdaptiveSparkPlanExec exposes no children)."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsList()
-    last_eid_before = before.last().executionId() if before.size() > 0 else -1
+    ``executedPlan`` (an AdaptiveSparkPlanExec exposes no children).
 
-    t0 = time.perf_counter()
-    df.write.mode("overwrite").format("noop").save()
-    wall = time.perf_counter() - t0
+    The measured execution is found by a job tag unique to this call
+    (``addJobTag`` is thread-local), never by recency: other threads may
+    run jobs, including other measurements, while this one executes, and
+    each call still bills only its own execution.  The job group and
+    description are left as the caller set them.  Raises, naming the
+    query, when the plan runs no Spark job, when its jobs span more than
+    one SQL execution, or when the status store does not register them,
+    or complete their execution, within ``STORE_WAIT_S``: billing any
+    other execution would charge this query the wrong bytes."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    tag = f"run_with_metrics-{uuid.uuid4().hex}"
+    jobs_before = jsc.dagScheduler().numTotalJobs()
+    sc.addJobTag(tag)
+    try:
+        t0 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        wall = time.perf_counter() - t0
+    finally:
+        sc.removeJobTag(tag)
+    if jsc.dagScheduler().numTotalJobs() == jobs_before:
+        raise RuntimeError(f"{name}: the plan ran no Spark job, so nothing to bill")
 
-    # the status store is fed by an ASYNC listener bus: poll until our
-    # execution (id > pre-action max) is registered, else last() can hand
-    # back the previous query's metrics under load
-    eid = None
+    # the status stores are fed by an ASYNC listener bus: poll until a
+    # tagged job is registered, then until its execution completes (on a
+    # FRESH deadline: a slow registration must not eat the completion
+    # wait, or metrics get read partially aggregated)
     deadline = time.time() + STORE_WAIT_S
-    while time.time() < deadline:
-        lst = store.executionsList()
-        if lst.size() > 0 and lst.last().executionId() > last_eid_before:
-            eid = lst.last().executionId()
-            break
+    while not (eids := _tagged_executions(jsc, tag)):
+        if time.time() > deadline:
+            raise RuntimeError(
+                f"{name}: tagged jobs not registered in the status store "
+                f"within {STORE_WAIT_S:g}s"
+            )
         time.sleep(0.05)
-    if eid is None:  # the newest execution is another query's: never bill it
-        raise RuntimeError(
-            f"{name}: execution not registered in the SQL status store "
-            f"within {STORE_WAIT_S:g}s"
-        )
-    # metric values are aggregated asynchronously too — wait for completion
-    # on a FRESH deadline (a slow registration above must not eat the
-    # completion wait, or metrics get read partially aggregated)
+    eid = _one_execution(eids, name)
+    store = spark._jsparkSession.sharedState().statusStore()
     deadline = time.time() + STORE_WAIT_S
-    plan_desc = None
-    while time.time() < deadline:
+    while True:
         ex = store.execution(eid)
         if ex.isDefined() and ex.get().completionTime().isDefined():
             plan_desc = ex.get().physicalPlanDescription()
             break
+        if time.time() > deadline:  # metrics may be only partly aggregated
+            raise RuntimeError(
+                f"{name}: execution {eid} not completed in the SQL status "
+                f"store within {STORE_WAIT_S:g}s"
+            )
         time.sleep(0.05)
-    if plan_desc is None:  # metrics may be only partly aggregated
-        raise RuntimeError(
-            f"{name}: execution {eid} not completed in the SQL status store "
-            f"within {STORE_WAIT_S:g}s"
-        )
+    # every job of the completed execution is registered by now
+    _one_execution(_tagged_executions(jsc, tag) | {eid}, name)
     graph = store.planGraph(eid)
     values = store.executionMetrics(eid)
 

@@ -3,8 +3,15 @@ chapter5 movie-workload experiment's behavioral parity with BASELINE.md."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from bigdatastructure_a5_spark.catalog import load_table
 from bigdatastructure_a5_spark.examples.chapter5_demo import (
@@ -121,59 +128,67 @@ class _Execution:
     def __init__(self, eid, done):
         self.eid, self.done = eid, done
 
-    def executionId(self):
-        return self.eid
-
     def completionTime(self):
         return _Option(1 if self.done else None)
 
-    def physicalPlanDescription(self):
-        return f"plan of {self.eid}"
 
+class _StubSpark:
+    """The slice of a session run_with_metrics reads, without Spark.  The
+    query's save() runs one job per entry of ``executions`` (the SQL
+    execution Spark tags it with) and registers each under the job tags
+    set at that time; ``runs_job=False`` models a job-free plan.  No
+    entry models a listener bus that never registers the jobs, an
+    incomplete one a bus that never marks the execution complete."""
 
-class _ExecutionList:
-    def __init__(self, execs):
-        self.execs = execs
+    def __init__(self, executions, runs_job=True):
+        self.executions = executions
+        self.runs_job = runs_job
+        self.jobs = 0
+        self.tags: set[str] = set()
+        self.tagged: dict[str, list[int]] = {}
+        self.sparkContext = self
+        self._jsc = SimpleNamespace(sc=lambda: self)
+        self._jsparkSession = SimpleNamespace(
+            sharedState=lambda: SimpleNamespace(statusStore=lambda: self)
+        )
 
-    def size(self):
-        return len(self.execs)
+    def addJobTag(self, tag):
+        self.tags.add(tag)
 
-    def last(self):
-        return self.execs[-1]
+    def removeJobTag(self, tag):
+        self.tags.discard(tag)
 
+    def dagScheduler(self):
+        return self
 
-class _StubStore:
-    """The slice of Spark's SQL status store run_with_metrics reads.  The
-    query's save() appends ``pending`` (if any): None models a listener
-    bus that never registers the execution, an incomplete one a bus that
-    never marks it complete."""
+    statusTracker = statusStore = dagScheduler
 
-    def __init__(self, pending):
-        self.execs = [_Execution(7, done=True)]  # an earlier query's
-        self.pending = pending
+    def numTotalJobs(self):
+        return self.jobs
 
-    def executionsList(self):
-        return _ExecutionList(list(self.execs))
+    def getJobIdsForTag(self, tag):
+        return self.tagged.get(tag, [])
+
+    def job(self, jid):
+        eid = self.executions[jid].eid
+        tags = SimpleNamespace(
+            mkString=lambda sep: f"spark-session-x{sep}spark-session-x-execution-root-id-{eid}"
+        )
+        return SimpleNamespace(jobTags=lambda: tags)
 
     def execution(self, eid):
-        return _Option(next((e for e in self.execs if e.eid == eid), None))
+        return _Option(next((e for e in self.executions if e.eid == eid), None))
 
-    def save(self):
-        if self.pending is not None:
-            self.execs.append(self.pending)
+    def frame(self):
+        """A DataFrame stand-in whose noop save runs the stub query."""
+        writer = SimpleNamespace(save=self._save)
+        writer.mode = writer.format = lambda *_: writer
+        return SimpleNamespace(write=writer)
 
-
-def _stub_session(store):
-    from types import SimpleNamespace
-
-    writer = SimpleNamespace(save=store.save)
-    writer.mode = writer.format = lambda *_: writer
-    spark = SimpleNamespace(
-        _jsparkSession=SimpleNamespace(
-            sharedState=lambda: SimpleNamespace(statusStore=lambda: store)
-        )
-    )
-    return spark, SimpleNamespace(write=writer)
+    def _save(self):
+        self.jobs += self.runs_job
+        for tag in self.tags:
+            self.tagged[tag] = list(range(len(self.executions)))
 
 
 @pytest.mark.parametrize(
@@ -183,16 +198,75 @@ def _stub_session(store):
 def test_run_with_metrics_fails_loudly_when_status_store_lags(
     monkeypatch, pending, reason
 ):
-    """No Spark: a stub status store.  When the measured execution never
-    shows up, the newest one is another query's; when it never completes,
-    its metrics may be partly aggregated.  Either way billing them would
-    charge this query the wrong bytes, so the call raises naming it."""
+    """No Spark: a stub session.  When the measured query's tagged jobs
+    never show up, or its execution never completes, its metrics are
+    missing or partly aggregated; billing any other execution would charge
+    this query the wrong bytes, so the call raises naming it."""
     from bigdatastructure_a5_spark.plans import metrics
 
     monkeypatch.setattr(metrics, "STORE_WAIT_S", 0.2)
-    spark, df = _stub_session(_StubStore(pending))
+    spark = _StubSpark([] if pending is None else [pending])
     with pytest.raises(RuntimeError, match=f"D4:q1_brand_filter: .*{reason}"):
-        metrics.run_with_metrics(spark, df, name="D4:q1_brand_filter")
+        metrics.run_with_metrics(spark, spark.frame(), name="D4:q1_brand_filter")
+
+
+def test_run_with_metrics_rejects_jobs_of_two_executions():
+    """Tagged jobs that belong to two SQL executions cannot be billed to
+    one query."""
+    spark = _StubSpark([_Execution(8, done=True), _Execution(9, done=True)])
+    with pytest.raises(RuntimeError, match=r"D1:q2: .*\['8', '9'\], not one"):
+        run_with_metrics(spark, spark.frame(), name="D1:q2")
+
+
+def test_run_with_metrics_names_a_job_free_plan():
+    """A plan that runs no Spark job has no execution to bill: the call
+    raises at once, naming the query, instead of waiting out the status
+    store.  (Spark 4.1's noop write runs a job even for an empty local
+    relation, so only a stub reaches this case.)"""
+    spark = _StubSpark([], runs_job=False)
+    with pytest.raises(RuntimeError, match="D1:q1: the plan ran no Spark job"):
+        run_with_metrics(spark, spark.frame(), name="D1:q1")
+
+
+def test_overlapping_measurements_each_bill_their_own_execution(spark, sf_dir):
+    """Six measurements of two plans, released together by a barrier on
+    more threads than cores (with a short switch interval), run
+    concurrently; each returns exactly its plan's serial measurement."""
+    li = load_table(spark, sf_dir, "lineitem")
+    frames = {
+        "agg": li.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n")),
+        "filter": li.filter(F.col("l_quantity") > 45),
+    }
+
+    def figures(qm):
+        return qm.output_rows, qm.scanned_bytes, qm.shuffle_bytes
+
+    serial = {k: figures(run_with_metrics(spark, df, k)) for k, df in frames.items()}
+    assert serial["agg"] != serial["filter"]
+    names = [*frames] * 3
+    barrier = threading.Barrier(len(names))
+
+    def measure(name):
+        barrier.wait(timeout=60)
+        t0 = time.time()
+        qm = run_with_metrics(spark, frames[name], name)
+        return name, figures(qm), (t0, time.time())
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(len(names)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(measure), name)
+                for name in names
+            ]
+            got = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    for name, measured, _ in got:
+        assert measured == serial[name], name
+    spans = [span for _, _, span in got]
+    assert max(s0 for s0, _ in spans) < min(s1 for _, s1 in spans)  # all overlapped
 
 
 def test_sharding_demo_reproduces_reference_ordering(spark, sf_dir):

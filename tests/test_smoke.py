@@ -129,14 +129,10 @@ def test_all_queries_run_nonempty_at_sf0001(spark, sf_dir):
 
     Cross-test state that would change a signature is reset per row:
     result caches left by earlier rows or tests (they turn pipelines into
-    InMemoryTableScan reads) and sim_sq8_topk's bounds memo (a warm memo
-    skips the bounds-fit job)."""
-    from bigdatastructure_a5_spark.queries import quant_queries
-
+    InMemoryTableScan reads)."""
     observed = {}
     for name, fn in entry_mod.queries().items():
         spark.catalog.clearCache()
-        quant_queries._SQ8_BOUNDS_CACHE.clear()
         before = _newest_execution(spark)
         df = fn(spark, sf_dir)
         assert df.count() > 0, f"{name} returned no rows at sf0.001"

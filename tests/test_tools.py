@@ -399,7 +399,9 @@ def test_pq_sizing_timed_reps_excludes_warmup(monkeypatch):
     """The tools' one rep timer (§14's serving column, §15-§17's walls) is
     median-of-3 after an excluded warm-up rep (the §12 lesson: warm-up
     order leaking into per-config numbers made the r7 table contradict
-    itself)."""
+    itself), and reports the steal share of the timed reps beside it,
+    through bench.py's own /proc/stat reader."""
+    import bench
     import decontam_scale
     import layout_experiment
     import mixpack_scale
@@ -408,14 +410,29 @@ def test_pq_sizing_timed_reps_excludes_warmup(monkeypatch):
 
     for tool in (decontam_scale, layout_experiment, mixpack_scale, pq_sizing):
         assert tool.timed_reps is timing.timed_reps
-    # the warm-up rep reads the clock once (its elapsed time is never
-    # taken); each timed rep reads it twice
-    ticks = iter([0.0, 10.0, 11.0, 20.0, 22.0, 30.0, 33.0])
+    assert timing._cpu_stat is bench._cpu_stat
+    assert timing._steal_pct is bench._steal_pct
+    # the warm-up rep never reads the clock; each timed rep reads it twice
+    ticks = iter([10.0, 11.0, 20.0, 22.0, 30.0, 33.0])
     monkeypatch.setattr(timing.time, "perf_counter", lambda: next(ticks))
     calls = []
+    # user nice system idle iowait irq softirq steal: between the two
+    # snapshots 90 busy jiffies of which 9 stolen, plus idle
+    stats = iter([[0] * 8, [60, 0, 21, 500, 7, 0, 0, 9]])
+
+    def cpu_stat():
+        calls.append("stat")
+        return next(stats)
+
+    monkeypatch.setattr(timing, "_cpu_stat", cpu_stat)
     got = timing.timed_reps(lambda: calls.append(1))
-    assert len(calls) == 4  # 1 warm-up + N_REPS=3 timed
-    assert got == 2.0  # median of (1.0, 2.0, 3.0); the warm-up excluded
+    # the first snapshot is taken after the warm-up, the second after the
+    # last timed rep
+    assert calls == [1, "stat", 1, 1, 1, "stat"]
+    assert got.sec == 2.0  # median of (1.0, 2.0, 3.0); the warm-up excluded
+    assert got.steal_pct == 10.0
+    assert str(got) == "2.00 (steal 10%)"
+    assert str(timing.Timed(1.234, None)) == "1.23 (steal n/a)"
 
 
 def test_ivf_sizing_jitter_breaks_exact_duplicates(spark):

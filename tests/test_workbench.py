@@ -110,17 +110,24 @@ def test_bucketed_join_has_no_exchange(spark, base, tmp_path_factory):
     li, o = spark.table("b_lineitem"), spark.table("b_orders")
     j = li.join(o, li.l_orderkey == o.o_orderkey).select("l_orderkey", "o_totalprice")
     # at test scale everything fits the broadcast threshold; force the
-    # shuffle-join path to expose what bucketing buys on fact-x-fact joins
-    for k in (
+    # shuffle-join path to expose what bucketing buys on fact-x-fact joins,
+    # then restore the session's own thresholds (unset would drop them to
+    # Spark's defaults for every later test in the shared session)
+    keys = (
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    ):
+    )
+    prior = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
         spark.conf.set(k, "-1")
     try:
         plan = _plan(j)
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     assert "SortMergeJoin" in plan
     assert "Exchange" not in plan, f"co-partitioned join must not shuffle:\n{plan}"
 

@@ -224,7 +224,9 @@ def test_workload_writes_each_distinct_build_once(
     layouts hold four distinct builds: each is written once and copied
     into every other dir that keeps it, and registering a variant runs no
     Spark job (each view reads with its written schema, no footer
-    inference)."""
+    inference).  Writes and measurements run on other threads meanwhile,
+    so a job is attributed to the registration by a job tag set on the
+    registering thread, not by a global job count."""
     from pathlib import Path
 
     from pyspark.sql.readwriter import DataFrameWriter
@@ -240,14 +242,16 @@ def test_workload_writes_each_distinct_build_once(
 
     monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
 
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    sc = spark.sparkContext
     registered = {}
     materialize = workload.materialize_variant
 
-    def checked_materialize(spark, base, spec, storage_dir, *args):
-        jobs_before = dag.numTotalJobs()
-        out = materialize(spark, base, spec, storage_dir, *args)
-        assert dag.numTotalJobs() == jobs_before, f"{spec.id} ran a job"
+    def checked_materialize(spark, base, spec, *args):
+        sc.addJobTag(f"materialize-{spec.id}")
+        try:
+            out = materialize(spark, base, spec, *args)
+        finally:
+            sc.removeJobTag(f"materialize-{spec.id}")
         registered[spec.id] = {c: df.schema for c, df in out.items()}
         return out
 
@@ -258,6 +262,12 @@ def test_workload_writes_each_distinct_build_once(
     report = run_workload(spark, base, DENORMS, WORKLOAD, str(storage))
 
     assert len(writes) == 4, writes
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    for spec in DENORMS:
+        tag = f"materialize-{spec.id}"
+        ran = list(jsc.statusTracker().getJobIdsForTag(tag))
+        assert not ran, f"{spec.id} ran a job"
     for spec in DENORMS:
         kept = {c.name for c in spec.collections}
         assert {p.name for p in (storage / spec.id).iterdir()} == kept
@@ -278,3 +288,60 @@ def test_workload_writes_each_distinct_build_once(
         if r.query == "q1_brand_filter"
     }
     assert scanned["D3"] == scanned["D4"] > 0
+
+
+def test_pipelined_workload_equals_serial_loop(spark, sf_dir, tmp_path, monkeypatch):
+    """The pipelined pass measures each semantically distinct plan once:
+    D4's two queries are D3's plans over D3's files, so 8 rows take 6
+    measurements and D4's rows are D3's.  Every row's figures and the
+    leaderboard equal a serial loop that registers each variant's own dir
+    and measures every (variant, query) pair in turn."""
+    from bigdatastructure_a5_spark.operators.denormalize import kept_collections
+    from bigdatastructure_a5_spark.plans import workload
+    from bigdatastructure_a5_spark.plans.metrics import run_with_metrics
+    from bigdatastructure_a5_spark.plans.workload import WorkloadReport, WorkloadRow
+
+    measured = []
+
+    def counting(spark, df, name):
+        measured.append(name)
+        return run_with_metrics(spark, df, name)
+
+    monkeypatch.setattr(workload, "run_with_metrics", counting)
+    base = load_tables(spark, sf_dir, ("part", "lineitem"))
+    storage = tmp_path / "variants"
+    report = run_workload(spark, base, DENORMS, WORKLOAD, str(storage))
+    assert len(report.rows) == 8 and len(measured) == 6, measured
+    assert not [m for m in measured if m.startswith("D4:")]
+
+    def figures(rows, variant):
+        return [
+            (r.query, r.metrics.output_rows, r.metrics.scanned_bytes,
+             r.metrics.shuffle_bytes)
+            for r in rows
+            if r.variant == variant
+        ]
+
+    assert figures(report.rows, "D4") == figures(report.rows, "D3")
+
+    serial = WorkloadReport()
+    columns = {coll: set(df.columns) for coll, df in base.items()}
+    try:
+        for spec in DENORMS:
+            for coll in base:
+                spark.catalog.dropTempView(coll)
+            for coll in kept_collections(base, spec):
+                path = str(storage / spec.id / coll)
+                spark.read.parquet(path).createOrReplaceTempView(coll)
+            for qs in WORKLOAD:
+                sql = rewrite_for_variant(qs.sql, spec, columns)
+                qm = run_with_metrics(spark, spark.sql(sql), f"{spec.id}:{qs.id}")
+                serial.rows.append(WorkloadRow(spec.id, qs.id, qs.frequency, sql, qm))
+    finally:
+        for coll, df in base.items():
+            df.createOrReplaceTempView(coll)
+    for spec in DENORMS:
+        assert figures(report.rows, spec.id) == figures(serial.rows, spec.id), spec.id
+    sqls = [r.rewritten_sql for r in report.rows]
+    assert sqls == [r.rewritten_sql for r in serial.rows]
+    assert report.leaderboard() == serial.leaderboard()

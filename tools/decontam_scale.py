@@ -96,7 +96,7 @@ def measure(spark, copy_points) -> list[str]:
                 df.unpersist()
             rows.append(
                 f"| x{copies} | {n} | {n_corpus:,} | {bench_index_rows:,} | "
-                f"{n_cand:,} | {n_match:,} | {sec:.2f} |"
+                f"{n_cand:,} | {n_match:,} | {sec} |"
             )
             print(rows[-1])
         bench_shingled.unpersist()
@@ -127,7 +127,8 @@ def main() -> None:
             "every (corpus, bench) pair sharing >= 1 n-gram, i.e. the",
             "chance-collision volume the thresholds then filter; secs is",
             f"the end-to-end matcher wall (median of {N_REPS} reps,",
-            "warm-up excluded, broadcast index).",
+            "warm-up excluded, broadcast index; the steal share of the",
+            "timed reps beside it).",
             "",
             "| corpus | n | corpus docs | bench index rows | candidates | "
             "matches (>= 0.5) | secs |",

@@ -135,7 +135,7 @@ def measure(spark, copies: int) -> list[str]:
         rows.append(
             f"| {label} | {groups} | {hit} | {hit / groups:.0%} | "
             f"{rows_hit:,} | {rows_hit / total_rows:.1%} | {out_rows:,} | "
-            f"{sec:.2f} |"
+            f"{sec} |"
         )
         print(rows[-1])
         shutil.rmtree(store, ignore_errors=True)
@@ -249,7 +249,7 @@ def measure_composed(spark, copies: int) -> list[str]:
         rows.append(
             f"| {label} | {groups} | {hit} | {hit / groups:.0%} | "
             f"{rows_hit:,} | {rows_hit / total_rows:.1%} | {out_rows:,} | "
-            f"{sec:.2f} |"
+            f"{sec} |"
         )
         print(rows[-1])
         shutil.rmtree(store, ignore_errors=True)
@@ -335,7 +335,7 @@ def measure_string(spark, copies: int) -> list[str]:
         rows.append(
             f"| {label} | {groups} | {hit} | {hit / groups:.0%} | "
             f"{rows_hit:,} | {rows_hit / total_rows:.1%} | {out_rows:,} | "
-            f"{sec:.2f} |"
+            f"{sec} |"
         )
         print(rows[-1])
         shutil.rmtree(store, ignore_errors=True)
@@ -371,7 +371,8 @@ def main() -> None:
             "STATIC footer arithmetic: row groups whose min/max boxes",
             "intersect the predicate box — what any footer-reading engine",
             "must read; secs is Spark's filter+aggregate wall over the",
-            f"stored layout (median of {N_REPS} reps, warm-up excluded),",
+            f"stored layout (median of {N_REPS} reps, warm-up excluded,",
+            "the steal share of the timed reps beside it),",
             "with parquet filter pushdown doing the same skipping at scan",
             "time.",
             "",

@@ -69,7 +69,7 @@ def measure(spark, copy_points) -> tuple[list[str], list[str]]:
         )
         mix_rows.append(
             f"| x{copies} | {n_docs:,} | {n_out:,} | "
-            f"{n_out / n_docs:.3f} | {sec:.2f} |"
+            f"{n_out / n_docs:.3f} | {sec} |"
         )
         print(mix_rows[-1])
 
@@ -93,7 +93,7 @@ def measure(spark, copy_points) -> tuple[list[str], list[str]]:
             )
             pack_rows.append(
                 f"| x{copies} | {label} | {n_docs:,} | {n_chunks:,} | "
-                f"{n_slices:,} | {sec:.2f} |"
+                f"{n_slices:,} | {sec} |"
             )
             print(pack_rows[-1])
     return mix_rows, pack_rows
@@ -168,7 +168,7 @@ def measure_assembly(spark, copy_points) -> list[str]:
         )
         rows.append(
             f"| x{copies} | {n_chunks:,} | {total_toks:,} | {bad} | "
-            f"{n_exchanges} | {join_kind} | {sec:.2f} |"
+            f"{n_exchanges} | {join_kind} | {sec} |"
         )
         print(rows[-1])
         if copies == max(copy_points):
@@ -205,7 +205,7 @@ def measure_assembly(spark, copy_points) -> list[str]:
                 rows.append(
                     f"| x{copies} (forced post-flip) | {n_chunks:,} | "
                     f"{total_toks:,} | {bad} | {nex2} | {kind2} | "
-                    f"{sec2:.2f} |"
+                    f"{sec2} |"
                 )
                 print(rows[-1])
             finally:
@@ -234,8 +234,8 @@ def window_stress(spark) -> list[str]:
                 lambda: packed.write.mode("overwrite").format("noop").save()
             )
         rows.append(
-            f"| {n:,} | {secs['64 shards']:.2f} | {secs['1 shard']:.2f} | "
-            f"{secs['1 shard'] / secs['64 shards']:.1f}x |"
+            f"| {n:,} | {secs['64 shards']} | {secs['1 shard']} | "
+            f"{secs['1 shard'].sec / secs['64 shards'].sec:.1f}x |"
         )
         print(rows[-1])
     return rows
@@ -260,7 +260,8 @@ def main() -> None:
             "",
             "`tools/mixpack_scale.py`: the two trainer-facing operators",
             "on x1/x10/x100 of the sf0.01 documents (walls are noop-sink",
-            f"medians of {N_REPS} reps, warm-up excluded).  The mixer runs",
+            f"medians of {N_REPS} reps, warm-up excluded, each with the",
+            "steal share of its timed reps).  The mixer runs",
             "the gate spec (2.5/1.0/0.25/0.0 + 0.5 default); its plan is",
             "asserted Exchange-free before timing.  The packer packs",
             "512-token chunks twice: sharded by doc_id % 8 (the gate",

@@ -89,7 +89,7 @@ def measure(spark, copy_points) -> list[str]:
         rows.append(
             f"| {copies}x | {n:,} | raw float64 + brute force | - | "
             f"{raw_mb:.1f} | {raw_mb * 1e6 / n:.0f} | 100% | 100% | "
-            f"{bf_sec:.2f} |"
+            f"{bf_sec} |"
         )
         print(rows[-1])
 
@@ -119,7 +119,7 @@ def measure(spark, copy_points) -> list[str]:
         rows.append(
             f"| {copies}x | {n:,} | SQ8 (int8 per dim) | 64x int8 | "
             f"{sq_mb:.1f} | {sq_mb * 1e6 / n:.0f} | {hits / total:.0%} | "
-            f"- | {sq_sec:.2f} |"
+            f"- | {sq_sec} |"
         )
         print(rows[-1])
         shutil.rmtree(sq_store, ignore_errors=True)
@@ -173,7 +173,7 @@ def measure(spark, copy_points) -> list[str]:
             rows.append(
                 f"| {copies}x | {n:,} | ADC m={m}, {n_codes} codes | "
                 f"{m}x{n_codes} | {code_mb:.1f} | {code_mb * 1e6 / n:.0f} | "
-                f"{hits / total:.0%} | {r_hits / total:.0%} | {adc_sec:.2f} |"
+                f"{hits / total:.0%} | {r_hits / total:.0%} | {adc_sec} |"
             )
             print(rows[-1])
             shutil.rmtree(code_store, ignore_errors=True)
@@ -236,7 +236,7 @@ def measure(spark, copy_points) -> list[str]:
                     f"{n_probe} probes, m={m} | {m}x{n_codes} | "
                     f"{ivfpq_mb:.1f} | {ivfpq_mb * 1e6 / n:.0f} | "
                     f"{hits / total:.0%} | {r_hits / total:.0%} | "
-                    f"{ivfpq_sec:.2f} |"
+                    f"{ivfpq_sec} |"
                 )
                 print(rows[-1])
 
@@ -284,7 +284,7 @@ def measure(spark, copy_points) -> list[str]:
                     f"({2 * n_probe}) | {m}x{n_codes} | "
                     f"{ivfpq_mb:.1f} | {ivfpq_mb * 1e6 / n:.0f} | "
                     f"{hits / total:.0%} | {r_hits / total:.0%} | "
-                    f"{ivfpq2_sec:.2f} |"
+                    f"{ivfpq2_sec} |"
                 )
                 print(rows[-1])
                 shutil.rmtree(ivfpq_store, ignore_errors=True)
@@ -404,7 +404,8 @@ def main() -> None:
             "exact cosine (the FAISS refine tier — its cost is",
             "candidates-sized, not corpus-sized); secs/query is the",
             "serving path over the STORED representation, median of",
-            f"{N_REPS} reps after an excluded warm-up.  The IVF-PQ row",
+            f"{N_REPS} reps after an excluded warm-up (the steal share",
+            "of the timed reps beside it).  The IVF-PQ row",
             "composes the write-time cell partition (sqrt(n) codebook,",
             "auto probes) with the code column: the probe reads",
             "probes/cells of the corpus at ~bytes/vec of the PQ row.",
