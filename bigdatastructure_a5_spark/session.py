@@ -139,6 +139,14 @@ def get_spark(
         )
         # dimension tables (region/nation/supplier/part at our SFs) broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated-code cache sized to the engine's working set (a static
+        # conf: it takes effect on the session that starts the JVM).  One
+        # pass of the 50 registry rows at sf0.001 compiles 718 distinct
+        # classes with a 1024-entry cache; a second pass compiles 20.  At
+        # Spark's default of 100 the second pass recompiles 820, because
+        # each row's classes are evicted before it runs again (4 vCPU,
+        # local[4]).  See tests/test_smoke.py::test_codegen_cache_outlives_other_rows.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -319,8 +327,8 @@ def materialize_release(result, tracked):
     """Materialize ``result`` into its own (small) cache, then unpersist the
     ``tracked`` intermediates.
 
-    Multi-pass operators (minhash LSH, inverted-index jaccard, simhash)
-    persist large intermediates so self-joins don't recompute the expensive
+    Multi-pass operators (minhash LSH, capped inverted-index jaccard,
+    simhash) persist large intermediates so self-joins don't recompute the expensive
     subtree per side.  Left persisted, those blocks ACCUMULATE across a
     long session — the driver runs 50+ queries on one SparkContext, and
     r2's bench showed a 5.8x spike on dedup_ngram_jaccard consistent with
@@ -367,20 +375,21 @@ def materialize_release(result, tracked):
 
 def adopt_tracker(tracker: list | None):
     """The cache contract's entry point, shared by every multi-pass
-    operator (minhash LSH, inverted-index jaccard, simhash, LSH near-dup):
-    returns ``(tracker, finish)`` where the operator appends its persisted
-    intermediates to ``tracker`` and returns ``finish(result)``.
+    operator (minhash LSH, capped inverted-index jaccard, simhash, LSH
+    near-dup): returns ``(tracker, finish)`` where the operator appends its
+    persisted intermediates to ``tracker`` and returns ``finish(result)``.
 
     With a caller-supplied tracker, ``finish`` is the identity — the
     CALLER releases the caches via materialize_release after its terminal
     action.  Without one, ``finish`` materializes the operator's own
     result and releases its caches before returning, so no persisted frame
     outlives the call either way.  (An operator path that persisted
-    nothing leaves the tracker empty and ``finish`` is a no-op.)"""
+    nothing leaves the tracker empty, and ``finish`` returns its result
+    as is, without a materialize_release call.)"""
     if tracker is not None:
         return tracker, lambda result: result
     own: list = []
-    return own, lambda result: materialize_release(result, own)
+    return own, lambda result: materialize_release(result, own) if own else result
 
 
 #: Widening grain: one task per this many estimated input bytes.  Small on

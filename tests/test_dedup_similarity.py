@@ -284,6 +284,72 @@ def test_jaccard_df_cap_drops_hot_shingles_keeps_dups(spark):
     assert (1, 2) in uncapped
 
 
+def test_jaccard_posting_join_matches_sizes_join(spark):
+    """The uncapped inverted index carries each document's set size
+    through the posting join (``max`` of a per-id constant in the pair
+    aggregate).  It must give exactly what joining the sizes back on both
+    ids gives.  The corpus has a document whose trigrams repeat (set size
+    3, not 7), documents under 3 tokens (no shingles, in no pair) and a
+    pair at exactly 0.8 (4 shared of 5 distinct trigrams)."""
+    rows = [
+        (1, "w1 w2 w3 w4 w5 w6 w7"),  # 5 trigrams
+        (2, "w1 w2 w3 w4 w5 w6"),  # 4 of them: 4 / (5 + 4 - 4) = 0.8
+        (3, "a b c a b c a b c"),  # 7 positions, 3 distinct trigrams
+        (4, "a b c a b"),  # the same 3: Jaccard 1.0 with doc 3
+        (5, "b c a b c x"),  # doc 3's 3 plus one: 3 / 4 = 0.75
+        (6, "w1 w2"),  # too short to shingle
+        (7, "w1"),
+        (8, ""),
+    ]
+    sh = shingle_sets(spark.createDataFrame(rows, ["doc_id", "text"]))
+
+    def sizes_join(threshold):
+        ex = sh.select("id", F.explode("shingles").alias("g"))
+        a, b = ex.alias("a"), ex.alias("b")
+        inter = (
+            a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
+            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .agg(F.count(F.lit(1)).alias("i"))
+        )
+        sizes = sh.select("id", F.size("shingles").alias("n"))
+        sa = sizes.select(F.col("id").alias("id_a"), F.col("n").alias("na"))
+        sb = sizes.select(F.col("id").alias("id_b"), F.col("n").alias("nb"))
+        j = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i")).cast("double")
+        return {
+            (r.id_a, r.id_b): r.jaccard
+            for r in inter.join(sa, "id_a").join(sb, "id_b")
+            .select("id_a", "id_b", j.alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold)
+            .collect()
+        }
+
+    for threshold in (0.0, 0.8):
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in jaccard_pairs(sh, threshold=threshold).collect()
+        }
+        assert got == sizes_join(threshold), threshold
+    at_08 = {(r.id_a, r.id_b): r.jaccard for r in jaccard_pairs(sh, 0.8).collect()}
+    assert at_08 == {(1, 2): 0.8, (3, 4): 1.0}
+
+
+def test_ngram_jaccard_row_runs_as_one_lazy_plan(spark, sf_dir):
+    """``dedup_ngram_jaccard``'s builder runs no Spark job (nothing is
+    persisted or counted eagerly), and the terminal write runs the whole
+    pipeline in at most 5 jobs.  With a shingle cache, two size joins and
+    an eager count it ran 12 in the builder and 13 in all."""
+    from bigdatastructure_a5_spark.registry import REGISTRY, _load_all
+
+    _load_all()
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    start = sched.numTotalJobs()
+    df = REGISTRY["dedup_ngram_jaccard"].builder(spark, sf_dir)
+    built = sched.numTotalJobs()
+    df.write.format("noop").mode("overwrite").save()
+    assert built - start == 0
+    assert sched.numTotalJobs() - start <= 5
+
+
 def test_ann_recall_vs_brute_force(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     qv = list(
