@@ -316,8 +316,8 @@ def jaccard_pairs(
         # an aggregate INPUT (max of a per-id constant), never a grouping
         # key: grouping by it lets Catalyst infer
         # isnotnull(size(<shingle expression>)) and push it into the scan,
-        # re-tokenizing each document per shingle position (measured at
-        # sf0.1: 2.09 s against 0.50 s).
+        # re-tokenizing each document once per shingle position
+        # (tests/test_plan_shape.py pins the plan).
         if not prepersisted:
             # spread the shingling over the executor pool: a one-split
             # source would otherwise tokenize in a single task
@@ -326,10 +326,10 @@ def jaccard_pairs(
             "id", F.size("shingles").alias("n"), F.explode("shingles").alias("g")
         )
     else:
-        # The shingle sets feed the hot-shingle count and the anti-join;
-        # Spark never shares a subtree across a join, so persist the single
-        # shingling pass — spread across the executor pool first.  (Skipped
-        # when the caller already persisted the frame — see the docstring.)
+        # The shingle sets feed the hot-shingle count and the anti-join,
+        # which share no exchange, so persist the single shingling pass —
+        # spread across the executor pool first.  (Skipped when the caller
+        # already persisted the frame — see the docstring.)
         if not prepersisted:
             nonempty = persist_df(ensure_min_partitions(nonempty))
             tracker.append(nonempty)

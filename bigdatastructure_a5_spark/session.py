@@ -328,8 +328,8 @@ def materialize_release(result, tracked):
     ``tracked`` intermediates.
 
     Multi-pass operators (minhash LSH, capped inverted-index jaccard,
-    simhash) persist large intermediates so self-joins don't recompute the expensive
-    subtree per side.  Left persisted, those blocks ACCUMULATE across a
+    simhash) persist large intermediates so self-joins don't recompute the
+    expensive subtree per side.  Left persisted, those blocks ACCUMULATE across a
     long session — the driver runs 50+ queries on one SparkContext, and
     r2's bench showed a 5.8x spike on dedup_ngram_jaccard consistent with
     cached shingle sets evicting each other under memory pressure.  The

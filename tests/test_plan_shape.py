@@ -353,8 +353,7 @@ def test_ngram_jaccard_filters_carry_no_shingle_expression(spark, sf_dir):
     through the posting join as an aggregate input.  Grouping by it
     instead lets Catalyst infer ``isnotnull(size(<shingle expression>))``
     and push it into the scan, which re-tokenizes each document once per
-    shingle position (measured at sf0.1: 2.09 s against 0.50 s).  Pin it
-    on the final plan: no Filter condition may contain the shingling
+    shingle position.  Pin it on the final plan: no Filter condition may contain the shingling
     (``transform(``, ``array_distinct(``, ``xxhash64(``).  The token-count
     filter ``size(split(...)) >= 3`` is the intended linear check."""
     df = REGISTRY["dedup_ngram_jaccard"].builder(spark, sf_dir)
