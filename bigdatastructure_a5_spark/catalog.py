@@ -293,20 +293,3 @@ def register_views(
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
-
-
-def analyze_tables(spark: SparkSession, names: tuple[str, ...] = TABLES) -> None:
-    """Compute CBO statistics for saved tables (reference stats.json analogue,
-    `challenge/loader.py:53-76`).  Only applies to catalog tables, not temp
-    views; used by the denormalization workbench after ``saveAsTable``.
-
-    Temp views are filtered explicitly — listTables returns them too, and
-    ANALYZE on an UNCACHED temp view is an AnalysisException in Spark, so
-    calling this after register_views would otherwise crash on the first
-    fixture view.  One listTables call, not one per name."""
-    wanted = set(names)
-    for t in spark.catalog.listTables():
-        if t.name in wanted and not t.isTemporary:
-            spark.sql(
-                f"ANALYZE TABLE {t.name} COMPUTE STATISTICS FOR ALL COLUMNS"
-            )

@@ -10,10 +10,11 @@ Here the same spec generates **real tables**:
   (each target row gains one embedded document);
 - ``many``-embed -> ``source.groupBy(key).agg(collect_list(struct(...)))``
   left-joined to the target (each target row gains an array of documents);
-- ``sharding_key`` -> bucketed layout (``bucketBy``): Spark's co-partitioned
-  access path, giving the shuffle-free joins/aggregations the reference
-  prices at shuffle=0 (`challenge/simulator.py:222-224`,
-  `query_simulator/aggregate.py:218-236`);
+- ``sharding_key`` -> a bucketed layout (``bucketBy``) is Spark's
+  co-partitioned access path, giving the shuffle-free joins/aggregations
+  the reference prices at shuffle=0 (`challenge/simulator.py:222-224`,
+  `query_simulator/aggregate.py:218-236`); the workbench records the key,
+  and ``examples/sharding_demo.py`` writes such a layout;
 - ``indexes``     -> no secondary indexes in Spark; approximated by Parquet
   predicate pushdown + row-group skipping (documented deviation, SURVEY §4).
 
@@ -32,7 +33,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -180,30 +181,6 @@ def build_variant(
         name: build_collection(base, spec, name)
         for name in kept_collections(base, spec)
     }
-
-
-def write_variant(
-    spark: SparkSession,
-    variant: dict[str, DataFrame],
-    spec: DenormalizationSpec,
-    buckets: int = 16,
-    table_prefix: str = "",
-) -> dict[str, str]:
-    """Write each collection as a catalog table, bucketed by its sharding key
-    (the reference's shard placement made real; bucket count stands in for
-    ``nb_servers``).  Returns {collection: table_name}."""
-    names: dict[str, str] = {}
-    for coll in spec.collections:
-        df = variant[coll.name]
-        tbl = f"{table_prefix}{spec.id}_{coll.name}".lower()
-        writer = df.write.mode("overwrite").format("parquet")
-        if coll.sharding_key:
-            writer = writer.bucketBy(buckets, coll.sharding_key).sortBy(
-                coll.sharding_key
-            )
-        writer.saveAsTable(tbl)
-        names[coll.name] = tbl
-    return names
 
 
 def routed_filter(

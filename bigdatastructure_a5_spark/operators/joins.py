@@ -7,10 +7,11 @@ Reference semantics reproduced as real Spark joins:
   Catalyst's job (SortMergeJoin vs BroadcastHashJoin); the reference's
   1/max(NDV) selectivity formula IS Catalyst CBO JoinEstimation.
 - O10 co-partitioned shuffle-free join (`challenge/planner.py:252-268`):
-  bucketed tables -> SortMergeJoin with no Exchange; the workbench writes
-  them, tests assert the plan shape.
+  bucketed tables -> SortMergeJoin with no Exchange; tests write them and
+  assert the plan shape.
 - O11 filter-then-join (`challenge/planner.py:224-250`): Catalyst pushes
-  predicates below joins automatically; helpers here just compose.
+  predicates below joins automatically, so a filter before ``dim_join``
+  is the whole operator (``join_filtered_brand``).
 - O12 join-after-aggregate (`chapter5/planner.py:58-77`): the aggregated side
   is small -> explicitly broadcast the dimension side.
 - O13 multi-way filtered join (`query_simulator/queries.py:89-123`): chained
@@ -52,24 +53,6 @@ def dim_join(
     path): at 100 TB the fact side must never shuffle for a small dimension."""
     keys = [on] if isinstance(on, str) else list(on)
     return fact.join(F.broadcast(dim), on=keys, how=how)
-
-
-def filter_then_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_filter=None,
-    right_filter=None,
-    how: str = "inner",
-) -> DataFrame:
-    """O11: per-side filters before the join.  Catalyst would push these down
-    from after the join anyway; writing them first mirrors the reference plan
-    (`challenge/planner.py:224-250`) and keeps intent obvious."""
-    if left_filter is not None:
-        left = left.filter(left_filter)
-    if right_filter is not None:
-        right = right.filter(right_filter)
-    return equi_join(left, right, on, how)
 
 
 def asof_join(

@@ -114,23 +114,8 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest and EXPERIMENTS §14."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     qv = _query_vector(spark, sf_dir, 0)
-    fp = table_fingerprint(sf_dir, "embeddings")
     bounds = fit_sq8_bounds(emb)
-    # session view = analyzed-once encode projection (the 2x64 bounds
-    # literals), the same amortization as sim_ann_lsh's bucketed view —
-    # write-time code columns in production; no data is cached
-    key = hashlib.md5(
-        f"sq8|dim={len(qv)}|{bounds[0].tobytes().hex()}"
-        f"|{bounds[1].tobytes().hex()}|{fp}".encode()
-    ).hexdigest()[:12]
-    view = _session_view(
-        spark,
-        "sq8_coded",
-        sf_dir,
-        key,
-        lambda: with_sq8_codes(emb, bounds),
-    )
-    return sq8_dot_topk(spark.table(view), bounds, qv, k=10)
+    return sq8_dot_topk(with_sq8_codes(emb, bounds), bounds, qv, k=10)
 
 
 # ---------------------------------------------------------------------------

@@ -231,13 +231,32 @@ def require_generate_filter_exclusion(spark: SparkSession) -> None:
         )
 
 
+def _persist_level():
+    """The ``pyspark.StorageLevel`` named by ``SPARK_GRAFT_PERSIST_LEVEL``,
+    or None when unset."""
+    name = os.environ.get("SPARK_GRAFT_PERSIST_LEVEL")
+    if not name:
+        return None
+    from pyspark import StorageLevel
+
+    try:
+        return getattr(StorageLevel, name)
+    except AttributeError:
+        raise ValueError(
+            f"SPARK_GRAFT_PERSIST_LEVEL={name!r} is not a "
+            "pyspark.StorageLevel attribute (try DISK_ONLY, "
+            "MEMORY_AND_DISK, MEMORY_AND_DISK_DESER)"
+        ) from None
+
+
 def persist_df(df):
     """Persist at the session-selected storage level.
 
     ``SPARK_GRAFT_PERSIST_LEVEL`` (a ``pyspark.StorageLevel`` attribute
     name, e.g. ``DISK_ONLY`` or ``MEMORY_AND_DISK``) overrides the
-    engine-wide level for every tracked intermediate and result cache;
-    unset keeps Spark's DataFrame default (MEMORY_AND_DISK_DESER).
+    engine-wide level for every tracked intermediate and for the result
+    checkpoints ``materialize_release`` takes; unset keeps Spark's default
+    for both (MEMORY_AND_DISK_DESER).
 
     Why a knob (EXPERIMENTS §11): the deserialized default builds each
     cached partition ON HEAP (``MemoryStore.putIteratorAsValues``), so in
@@ -247,20 +266,8 @@ def persist_df(df):
     local disk, which is the documented 100 TB setting for the multi-pass
     operators' big intermediates (their cache exists to avoid recompute
     across self-join sides, not for memory-speed reads)."""
-    name = os.environ.get("SPARK_GRAFT_PERSIST_LEVEL")
-    if not name:
-        return df.persist()
-    from pyspark import StorageLevel
-
-    try:
-        level = getattr(StorageLevel, name)
-    except AttributeError:
-        raise ValueError(
-            f"SPARK_GRAFT_PERSIST_LEVEL={name!r} is not a "
-            "pyspark.StorageLevel attribute (try DISK_ONLY, "
-            "MEMORY_AND_DISK, MEMORY_AND_DISK_DESER)"
-        ) from None
-    return df.persist(level)
+    level = _persist_level()
+    return df.persist() if level is None else df.persist(level)
 
 
 _PYFILES_SENT: set[str] = set()
@@ -308,24 +315,8 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         _PYFILES_SENT.add(key)
 
 
-#: Most-recent materialize_release result caches, oldest first.  Result
-#: caches are small (final answers, not intermediates) but a long session
-#: running the full 50-query registry would still accumulate 50 of them;
-#: keeping the last few preserves the contract (the caller's next action
-#: hits the cache) while bounding session-lifetime cache growth.
-_RESULT_CACHES: list = []
-_RESULT_CACHE_LIMIT = 4
-#: Guards the _RESULT_CACHES window: concurrent query submission (Spark
-#: sessions are thread-safe and tools/check_correctness.py runs the gate
-#: with a worker pool) would otherwise interleave the replace/append/evict
-#: sequence below — worst case unpersisting a cache another thread just
-#: filled, which recomputes silently (correct but slow) rather than erring.
-_RESULT_CACHES_LOCK = threading.Lock()
-
-
 def materialize_release(result, tracked):
-    """Materialize ``result`` into its own (small) cache, then unpersist the
-    ``tracked`` intermediates.
+    """Checkpoint ``result``, then unpersist the ``tracked`` intermediates.
 
     Multi-pass operators (minhash LSH, capped inverted-index jaccard,
     simhash) persist large intermediates so self-joins don't recompute the
@@ -333,43 +324,27 @@ def materialize_release(result, tracked):
     long session — the driver runs 50+ queries on one SparkContext, and
     r2's bench showed a 5.8x spike on dedup_ngram_jaccard consistent with
     cached shingle sets evicting each other under memory pressure.  The
-    contract here: the operator's final result is persisted and computed
-    eagerly (one count(), which does exactly the work the caller's collect
-    would have done), the big intermediates are dropped immediately, and
-    the caller's later action hits the small result cache.
+    contract here: the operator's final result is computed eagerly into a
+    local checkpoint (one job, which does exactly the work the caller's
+    collect would have done), the big intermediates are dropped
+    immediately, and the caller's later action reads the checkpoint.
+
+    The checkpoint truncates the lineage and never enters Spark's
+    CacheManager, so no later call can match it by plan and read a stale
+    answer, and its blocks are freed when the returned frame is garbage
+    collected (``operators/components.py`` relies on the same for its
+    rounds).  Its blocks are executor-local: losing an executor after
+    return fails the caller's action instead of recomputing.
 
     ``tracked`` is the list the operator appended its persisted frames to;
-    a no-op when empty.  Result caches themselves are kept in a bounded
-    most-recent window (``_RESULT_CACHE_LIMIT``) so a session running many
-    queries doesn't accumulate one leftover cache per query.
+    a no-op when empty.
     """
     if not tracked:
         return result
-    result = persist_df(result)
-    result.count()
+    result = result.localCheckpoint(eager=True, storageLevel=_persist_level())
     for df in tracked:
         df.unpersist(blocking=False)
     tracked.clear()
-    # Spark's CacheManager keys cache entries by PLAN, not by DataFrame
-    # object: re-running the same query yields a same-semantics result
-    # whose persist() aliases the existing entry, and unpersisting ANY
-    # alias drops the shared entry.  Left in the window, an old alias
-    # evicted by the LIMIT pop below would therefore unpersist the cache
-    # the CURRENT result just filled, and the caller's terminal action
-    # would recompute the whole multi-pass pipeline with no intermediate
-    # persists (measured 1.4s -> ~18s on dedup_simhash at sf0.1 from the
-    # 5th same-query submission in one session).  Drop same-plan aliases
-    # WITHOUT unpersisting — they share the entry that must stay live.
-    with _RESULT_CACHES_LOCK:
-        _RESULT_CACHES[:] = [
-            df for df in _RESULT_CACHES if not df.sameSemantics(result)
-        ]
-        _RESULT_CACHES.append(result)
-        evicted = []
-        while len(_RESULT_CACHES) > _RESULT_CACHE_LIMIT:
-            evicted.append(_RESULT_CACHES.pop(0))
-    for df in evicted:
-        df.unpersist(blocking=False)
     return result
 
 
@@ -380,8 +355,8 @@ def adopt_tracker(tracker: list | None):
     persisted intermediates to ``tracker`` and returns ``finish(result)``.
 
     With a caller-supplied tracker, ``finish`` is the identity — the
-    CALLER releases the caches via materialize_release after its terminal
-    action.  Without one, ``finish`` materializes the operator's own
+    CALLER releases the caches via materialize_release once its own result
+    is built.  Without one, ``finish`` checkpoints the operator's own
     result and releases its caches before returning, so no persisted frame
     outlives the call either way.  (An operator path that persisted
     nothing leaves the tracker empty, and ``finish`` returns its result

@@ -531,8 +531,8 @@ def test_ann_write_time_lsh_buckets_match_query_and_prune(spark, sf_dir, tmp_pat
 def test_standalone_call_releases_intermediate_caches(spark, sf_dir, docs):
     """The cache contract (session.adopt_tracker): an operator called
     WITHOUT a tracker must release every intermediate it persisted before
-    returning — only its own (bounded, materialize_release-windowed)
-    result cache may remain.  Guards against the advisor-flagged leak
+    returning — only its own materialize_release result checkpoint may
+    remain.  Guards against the advisor-flagged leak
     class where a tracker-optional operator left a session-lifetime cache
     when the tracker was omitted."""
     from bigdatastructure_a5_spark.operators.similarity import cosine_pairs_lsh
@@ -542,8 +542,6 @@ def test_standalone_call_releases_intermediate_caches(spark, sf_dir, docs):
 
     # delta-based on purpose: clearCache() here would silently destroy the
     # module-scoped docs/shingled fixture caches for every later test
-    import bigdatastructure_a5_spark.session as S
-
     # the module fixture's cache() registers its RDD lazily at first
     # execution — force it now or the first operator call below registers
     # it AFTER the baseline snapshot and the delta over-counts by one
@@ -559,47 +557,62 @@ def test_standalone_call_releases_intermediate_caches(spark, sf_dir, docs):
     ]
     for r in results:
         r.count()
-    # each call may leave AT MOST its own result cache (bounded window of
-    # 4); every persisted intermediate (shingles, banded, chunked, melted)
-    # must be gone
-    assert persisted() - base <= S._RESULT_CACHE_LIMIT, (
+    # each call may leave AT MOST its own result checkpoint; every
+    # persisted intermediate (shingles, banded, chunked, melted) must be
+    # gone
+    assert persisted() - base <= len(results), (
         f"intermediate caches leaked: {persisted() - base} persisted frames "
-        f"above baseline (limit {S._RESULT_CACHE_LIMIT})"
+        f"above baseline (limit {len(results)})"
     )
 
 
-def test_repeated_same_plan_materialization_keeps_cache(spark):
-    """Re-submitting the SAME query must not self-evict its result cache.
-
-    Spark's CacheManager keys entries by plan: every same-semantics result
-    persist()ed into the bounded _RESULT_CACHES window aliases one shared
-    entry, and unpersisting any alias (the window's LIMIT pop) drops that
-    entry — so from the (LIMIT+1)th submission the just-filled cache died
-    and the caller's terminal action recomputed the whole pipeline
-    uncached (measured 1.4s -> ~18s on dedup_simhash at sf0.1).
-    materialize_release must dedupe same-plan aliases without unpersisting."""
+def test_materialized_result_has_no_cache_manager_entry(spark):
+    """materialize_release returns a local checkpoint, not a persist():
+    Spark's CacheManager matches entries by plan, so a cached result would
+    be read back by any later call that builds the same plan.  Neither the
+    returned frame nor a rebuild of the same plan may find an entry, and
+    the tracked intermediates are released."""
     import bigdatastructure_a5_spark.session as S
 
-    saved = list(S._RESULT_CACHES)
-    S._RESULT_CACHES.clear()
-    try:
-        last = None
-        for i in range(S._RESULT_CACHE_LIMIT + 3):
-            tracked = [spark.range(50).persist()]
-            result = spark.range(100).selectExpr("id", "id * 2 AS v")
-            last = S.materialize_release(result, tracked)
-        # the shared entry for this plan survives past the window limit
-        cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-        assert cache_mgr.lookupCachedData(last._jdf).isDefined(), (
-            "result cache was self-evicted by a same-plan alias pop"
-        )
-        # and aliases were deduped instead of filling the window
-        same = [df for df in S._RESULT_CACHES if df.sameSemantics(last)]
-        assert len(same) == 1
-    finally:
-        for df in S._RESULT_CACHES:
-            df.unpersist(blocking=False)
-        S._RESULT_CACHES[:] = saved
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+
+    def build():
+        return spark.range(100).selectExpr("id", "id * 2 AS v")
+
+    held = spark.range(50).persist()
+    held.count()
+    tracked = [held]
+    result = S.materialize_release(build(), tracked)
+    assert tracked == []
+    assert not cache_mgr.lookupCachedData(held._jdf).isDefined()
+    assert not cache_mgr.lookupCachedData(result._jdf).isDefined()
+    assert not cache_mgr.lookupCachedData(build()._jdf).isDefined()
+    assert sorted(r.v for r in result.collect()) == list(range(0, 200, 2))
+
+
+def test_rerun_after_in_place_rewrite_reads_new_data(spark, sf_dir, tmp_path):
+    """A materialize_release row re-run in the same session after its
+    input file is rewritten in place must answer from the new file.  With
+    result caches matched by plan, the second call was served the first
+    call's answer."""
+    import shutil
+
+    from bigdatastructure_a5_spark.queries.pipeline import dedup_simhash
+
+    def answer(d):
+        return sorted(tuple(r) for r in dedup_simhash(spark, str(d)).collect())
+
+    work, fresh = tmp_path / "work", tmp_path / "fresh"
+    work.mkdir()
+    fresh.mkdir()
+    shutil.copy(f"{sf_dir}/documents.parquet", work / "documents.parquet")
+    first = answer(work)
+
+    for d in (work, fresh):
+        shutil.copy("/root/testdata/sf0.01/documents.parquet", d)
+    expected = answer(fresh)
+    assert expected != first  # the rewrite changes the answer
+    assert answer(work) == expected
 
 
 def test_ann_view_refreshes_after_fixture_rewrite(spark, sf_dir, tmp_path):

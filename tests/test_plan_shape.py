@@ -15,6 +15,26 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _run_plans(spark, run):
+    """``run()``'s result and the final physical plans of the SQL
+    executions it started.  A materialize_release result is a checkpoint,
+    so its own plan no longer shows the work that built it."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    before = execs.last().executionId() if execs.size() else -1
+    out = run()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).executionId() > before
+    ]
+    return out, "\n".join(plans)
+
+
 def test_filter_pushed_to_parquet_scan(spark, sf_dir):
     plan = _plan(spark, sf_dir, "filter_eq_conjunctive")
     assert "PushedFilters: [" in plan
@@ -157,17 +177,15 @@ def test_curation_broadcast_gate_both_regimes(spark):
     for k in keys:
         spark.conf.set(k, "-1")
     try:
-        hinted = curate_documents(docs, max_broadcast_drop_ids=10**9)
-        plan_hinted = hinted._jdf.queryExecution().executedPlan().toString()
+        hinted, plan_hinted = _run_plans(
+            spark, lambda: curate_documents(docs, max_broadcast_drop_ids=10**9)
+        )
         a = sorted(map(tuple, hinted.collect()))
-        # broadcast hints are erased in cache-plan canonicalization, so
-        # without this the second run would silently REUSE the first run's
-        # cached result and show its plan
-        spark.catalog.clearCache()
         # 0 is the DOCUMENTED force-shuffle override — it must hold even
         # when the dropped set is empty (0 <= 0 must not re-enable the hint)
-        gated = curate_documents(docs, max_broadcast_drop_ids=0)
-        plan_gated = gated._jdf.queryExecution().executedPlan().toString()
+        gated, plan_gated = _run_plans(
+            spark, lambda: curate_documents(docs, max_broadcast_drop_ids=0)
+        )
         b = sorted(map(tuple, gated.collect()))
     finally:
         for k, v in prior.items():
@@ -330,19 +348,14 @@ def test_curation_scoring_not_duplicated_into_pushed_filter(spark):
         for i in range(30)
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"]).repartition(4)
-    curated = curate_documents(docs)
-    jvm = curated.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = curated._jdf.queryExecution().explainString(mode)
-    # formatted explain lists one "Condition : ..." line per Filter node
-    # (including those inside InMemoryRelation children)
-    bad = [
-        ln
-        for ln in plan.splitlines()
-        if ln.strip().startswith("Condition") and "array_contains" in ln
+    curated, plan = _run_plans(spark, lambda: curate_documents(docs))
+    # the executions' formatted plans list one "Condition : ..." line per
+    # Filter node (including those inside InMemoryRelation children)
+    conditions = [
+        ln for ln in plan.splitlines() if ln.strip().startswith("Condition")
     ]
+    assert conditions, "expected the quality/language filters"
+    bad = [ln for ln in conditions if "array_contains" in ln]
     assert not bad, f"scoring expressions leaked into a Filter: {bad[:1]}"
     # and the result is still right: originals kept, phantom set empty
     assert curated.count() == 30

@@ -36,15 +36,15 @@ PLAN_SIGNATURES = {
     "agg_rollup": (2, 0, 0, 0, 0),
     "agg_then_join": (2, 1, 0, 0, 0),
     "curriculum_bins": (1, 0, 0, 0, 0),
-    "decontam_benchmark": (5, 2, 0, 5, 0),
-    "dedup_clusters": (19, 22, 0, 34, 0),
-    "dedup_clusters_star": (22, 18, 0, 22, 0),
+    "decontam_benchmark": (3, 1, 0, 2, 0),
+    "dedup_clusters": (12, 7, 0, 9, 0),
+    "dedup_clusters_star": (22, 10, 0, 6, 0),
     "dedup_exact": (2, 0, 0, 0, 0),
-    "dedup_minhash_lsh": (6, 6, 0, 14, 0),
+    "dedup_minhash_lsh": (3, 3, 0, 6, 0),
     "dedup_ngram_jaccard": (3, 1, 0, 0, 0),
-    "dedup_retraction": (25, 26, 0, 46, 0),
-    "dedup_semantic": (8, 4, 0, 4, 2),
-    "dedup_simhash": (6, 2, 0, 6, 0),
+    "dedup_retraction": (20, 16, 0, 29, 0),
+    "dedup_semantic": (4, 2, 0, 1, 1),
+    "dedup_simhash": (3, 1, 0, 2, 0),
     "denorm_join_elimination": (2, 1, 0, 0, 0),
     "denorm_many_embed": (1, 0, 0, 0, 0),
     "document_report": (1, 0, 0, 0, 0),
@@ -66,7 +66,7 @@ PLAN_SIGNATURES = {
     "multimodal_decode": (1, 0, 0, 0, 1),
     "pack_assembly_incremental": (10, 2, 0, 4, 0),
     "pack_chunks": (2, 0, 0, 0, 0),
-    "pipeline_curation": (9, 5, 0, 13, 0),
+    "pipeline_curation": (6, 3, 0, 7, 0),
     "pipeline_mixture": (1, 0, 0, 0, 0),
     "projection_computed": (1, 0, 0, 0, 0),
     "set_operations": (2, 2, 0, 0, 0),
@@ -128,7 +128,7 @@ def test_all_queries_run_nonempty_at_sf0001(spark, sf_dir):
     """Every registry row returns rows and keeps its pinned plan signature.
 
     Cross-test state that would change a signature is reset per row:
-    result caches left by earlier rows or tests (they turn pipelines into
+    caches left by earlier tests (they turn pipelines into
     InMemoryTableScan reads)."""
     observed = {}
     for name, fn in entry_mod.queries().items():
@@ -251,10 +251,11 @@ def test_cluster_profile_matches_coverage_deploy_table():
 def test_persist_df_honors_storage_level_env(spark, monkeypatch):
     """session.persist_df routes every tracked-intermediate persist through
     the SPARK_GRAFT_PERSIST_LEVEL knob (EXPERIMENTS §11: DISK_ONLY is the
-    starved-executor mitigation); an unknown level is a loud error."""
+    starved-executor mitigation), and so does materialize_release's result
+    checkpoint; an unknown level is a loud error."""
     import pytest
 
-    from bigdatastructure_a5_spark.session import persist_df
+    from bigdatastructure_a5_spark.session import materialize_release, persist_df
 
     df = spark.range(10)
     try:
@@ -262,6 +263,9 @@ def test_persist_df_honors_storage_level_env(spark, monkeypatch):
         p = persist_df(df)
         assert p.storageLevel.useDisk and not p.storageLevel.useMemory
         p.unpersist()
+        result = materialize_release(df.selectExpr("id * 3 AS v"), [persist_df(df)])
+        level = result._jdf.queryExecution().analyzed().rdd().getStorageLevel()
+        assert level.useDisk() and not level.useMemory()
 
         monkeypatch.setenv("SPARK_GRAFT_PERSIST_LEVEL", "NOT_A_LEVEL")
         with pytest.raises(ValueError, match="NOT_A_LEVEL"):

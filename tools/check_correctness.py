@@ -158,8 +158,8 @@ def _run_oracle(con, sf_dir: str, oracle_sql: str, use_cache: bool):
 #: batch query could compile against the temporary value, and two streaming
 #: runs would race the save/restore itself.  Everything else in the
 #: registry is pool-safe: Spark job submission is thread-safe, DuckDB gets
-#: a cursor per check, and the one shared mutable (the materialize_release
-#: result-cache window) is lock-guarded in session.py.
+#: a cursor per check, and no registry row keeps state from one call to
+#: the next.
 SERIAL_QUERIES = {
     "events_streaming_rollup",
     "events_streaming_interval_join",
