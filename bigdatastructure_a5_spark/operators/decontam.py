@@ -71,14 +71,17 @@ def contamination_matches(
 
     ``max_broadcast_bench_shingles`` overrides the module bound; 0 forces
     the shuffle-join regime (tests exercise both).  ``tracker`` receives
-    the persisted index frame for caller-side unpersist, the
-    materialize_release protocol pipeline.py uses.
+    the persisted index frame (session.adopt_tracker's contract): with
+    one, the caller releases it via materialize_release; without one,
+    the result is checkpointed and the index released before returning.
     """
     from bigdatastructure_a5_spark.session import (
+        adopt_tracker,
         require_generate_filter_exclusion,
     )
 
     require_generate_filter_exclusion(corpus_shingled.sparkSession)
+    tracker, finish = adopt_tracker(tracker)
     bench_ix = persist_df(
         benchmark_shingled.select(
             F.col("id").alias("bench_id"),
@@ -88,8 +91,7 @@ def contamination_matches(
             F.explode("shingles").alias("g"),
         )
     )
-    if tracker is not None:
-        tracker.append(bench_ix)
+    tracker.append(bench_ix)
     limit = (
         MAX_BROADCAST_BENCH_SHINGLES
         if max_broadcast_bench_shingles is None
@@ -117,7 +119,7 @@ def contamination_matches(
             F.first("bench_size").alias("bench_size"),
         )
     )
-    return (
+    return finish(
         hits.withColumn(
             "containment",
             F.col("overlap").cast("double")

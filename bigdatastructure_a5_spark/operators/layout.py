@@ -18,8 +18,8 @@ shiftright / bitwise and-or over the scaled ranks — zero Python, stays
 inside whole-stage codegen, same design rule as the IVF SQL argmax), and
 the clustering is `repartitionByRange(z) + sortWithinPartitions(z)` +
 plain parquet write: every engine that reads parquet footers benefits,
-no table format required.  Measured in EXPERIMENTS §15
-(tools/layout_experiment.py).
+no table format required.  Measured in EXPERIMENTS §15 (historical,
+not regenerated).
 """
 
 from __future__ import annotations

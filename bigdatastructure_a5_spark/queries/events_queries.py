@@ -17,38 +17,6 @@ from bigdatastructure_a5_spark.functions.numeric import dec_sum_double
 from bigdatastructure_a5_spark.registry import query
 
 
-# NOTE (r9 registry rotation, third wave): ``events_hourly_rollup`` was
-# rotated out of the 50-slot registry for ``pipeline_mixture``/
-# ``pack_chunks`` (queries/mixture_queries.py).  Tumbling time-window
-# aggregation stays driver-gated twice over: `events_sliding_window`
-# subsumes the tumbling shape (slide == width is its special case) and
-# `events_streaming_rollup` runs the SAME hourly rollup as a real
-# Structured Streaming query.  This builder keeps an engine-vs-oracle
-# pytest (tests/test_tools.py::test_events_hourly_rollup_matches_duckdb).
-EVENTS_HOURLY_ROLLUP_ORACLE = """
-    SELECT DATE_TRUNC('hour', ts) AS hour_ts,
-           event_type,
-           COUNT(*) AS n_events,
-           COUNT(DISTINCT user_id) AS n_users,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY DATE_TRUNC('hour', ts), event_type
-    """
-
-
-def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour rollup per event type (streaming twin:
-    ``groupBy(window(ts, '1 hour'), event_type)`` with a watermark)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.date_trunc("hour", "ts").alias("hour_ts"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-        dec_sum_double("value").alias("sum_value"),
-    )
-
-
 @query(
     "events_sessionize",
     oracle="""

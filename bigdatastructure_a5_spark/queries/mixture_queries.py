@@ -13,11 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatastructure_a5_spark.catalog import load_table, read_parquet
-from bigdatastructure_a5_spark.operators.mixture import assign_split, mix_domains
-from bigdatastructure_a5_spark.operators.packing import (
-    assemble_chunks,
-    concat_and_chunk,
-)
+from bigdatastructure_a5_spark.operators.mixture import mix_domains
+from bigdatastructure_a5_spark.operators.packing import concat_and_chunk
 from bigdatastructure_a5_spark.registry import query
 
 #: The gate mixture spec — every regime in one run: upsample with a
@@ -71,53 +68,6 @@ def pipeline_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mix_domains(
         docs, MIX_WEIGHTS, domain_col="source", default_weight=MIX_DEFAULT
     )
-
-
-#: The gate split spec — all cut points are exact binary fractions
-#: (0.75, 0.75 + 0.125 = 0.875), so the Python-side cumulative float adds
-#: and the oracle's literal cuts are the same doubles and the ``u < cut``
-#: gates cannot straddle a rounding difference.
-SPLIT_FRACTIONS = {"train": 0.75, "val": 0.125, "test": 0.125}
-
-#: DuckDB twin of operators/mixture.assign_split: the same md5-prefix
-#: uniform (salt 'split' — independent of the mixer's 'mix' draw), carved
-#: by first-match-wins cut points.  No NULL doc_ids exist in the fixture
-#: (and the engine routes NULL to 'train' explicitly — pytest-pinned).
-#: Public: consumed by the r13 rotation net
-#: tests/test_tools.py::test_pipeline_split_matches_duckdb.
-PIPELINE_SPLIT_ORACLE = """
-    SELECT doc_id, source,
-           CASE WHEN u < 0.75  THEN 'train'
-                WHEN u < 0.875 THEN 'val'
-                ELSE 'test' END AS split
-    FROM (
-      SELECT doc_id, source,
-             CAST(CAST('0x' || SUBSTR(
-                    MD5('split:' || CAST(doc_id AS VARCHAR)), 1, 15)
-                  AS BIGINT) AS DOUBLE) / 1152921504606846976.0 AS u
-      FROM documents
-    )
-    """
-
-
-def pipeline_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test assignment (operators/mixture.py
-    ``assign_split``): 75/12.5/12.5 by cut points on the md5-prefix
-    uniform.  Exhaustive + disjoint by construction, stable under corpus
-    growth (a doc's label depends only on its key), and a pure map-side
-    projection — ZERO exchanges at any corpus size.  The salt makes the
-    split draw independent of the mixture draw on the same keys.
-
-    Rotated OUT of the driver registry in r13 (slot balance for
-    ``dedup_retraction``; registry pinned at the driver's 50-row
-    snapshot — VERDICT r12 item 1): the md5-prefix-uniform machinery it
-    shares with the mixer stays driver-gated via ``pipeline_mixture``
-    (same hash, same cross-engine-exact cut-point comparison), and the
-    splitter keeps its engine-vs-DuckDB twin in
-    tests/test_tools.py::test_pipeline_split_matches_duckdb plus the
-    NULL-routing/property tests in tests/test_mixture.py."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    return assign_split(docs, SPLIT_FRACTIONS)
 
 
 #: DuckDB twin of operators/packing.py over whitespace tokens of the
@@ -186,104 +136,13 @@ def pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: DuckDB twin of operators/packing.assemble_chunks: the same geometry
-#: CTEs as _PACK_ORACLE, then LIST_SLICE each document's tokens by its
-#: slice and STRING_AGG the pieces in chunk_offset order — the assembled
-#: chunk text replays bit-for-bit.
-_ASSEMBLY_ORACLE = """
-    WITH t0 AS (
-      SELECT doc_id, doc_id % 8 AS shard,
-             TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g')) AS txt
-      FROM documents
-    ),
-    t AS (
-      SELECT doc_id, shard, STRING_SPLIT(txt, ' ') AS toks,
-             CASE WHEN txt = '' THEN CAST(0 AS BIGINT)
-                  ELSE CAST(LEN(STRING_SPLIT(txt, ' ')) AS BIGINT)
-             END AS n
-      FROM t0
-    ),
-    p AS (
-      SELECT shard, doc_id, toks, n,
-             SUM(n) OVER (PARTITION BY shard ORDER BY doc_id
-                          ROWS UNBOUNDED PRECEDING) AS e
-      FROM t WHERE n > 0
-    ),
-    x AS (
-      SELECT shard, doc_id, toks, e - n AS s, e,
-             UNNEST(GENERATE_SERIES(
-               CAST(FLOOR((e - n) / 512.0) AS BIGINT),
-               CAST(FLOOR((e - 1) / 512.0) AS BIGINT))) AS chunk_id
-      FROM p
-    ),
-    sl AS (
-      SELECT shard, chunk_id, doc_id, toks,
-             GREATEST(s, chunk_id * 512) - s AS slice_start,
-             LEAST(e, (chunk_id + 1) * 512)
-               - GREATEST(s, chunk_id * 512) AS slice_len,
-             GREATEST(s, chunk_id * 512) - chunk_id * 512 AS chunk_offset
-      FROM x
-    )
-    SELECT shard, chunk_id,
-           STRING_AGG(
-             ARRAY_TO_STRING(
-               LIST_SLICE(toks, slice_start + 1, slice_start + slice_len),
-               ' '),
-             ' ' ORDER BY chunk_offset) AS text,
-           CAST(SUM(slice_len) AS BIGINT) AS n_tokens
-    FROM sl
-    GROUP BY shard, chunk_id
-    """
-
-
-def pack_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trainer-shaped packed examples (operators/packing.py
-    ``assemble_chunks``): the pack_chunks geometry joined back to each
-    document's token array, sliced, ordered by chunk_offset, flattened —
-    one row per (shard, chunk_id) with the chunk's space-joined text and
-    its token count (== 512 for every chunk but each shard's last,
-    pytest-pinned).  Pure Catalyst (slice/sort_array/flatten), zero
-    Python; the join and the chunk aggregation are the only exchanges
-    beyond the geometry window.
-
-    Rotated OUT of the driver registry in r12: its slot went to
-    ``pack_assembly_incremental``, which runs the same assembly as a
-    REAL streaming ingest and gates a strict superset of this query's
-    rows (every complete chunk; only each shard's unfilled last chunk —
-    the streaming tail, which never emits by design — is exclusive to
-    this batch variant).  The engine-vs-DuckDB twin lives in
-    tests/test_tools.py::test_pack_assembly_matches_duckdb, so the
-    batch assembler keeps its cross-engine check."""
-    from bigdatastructure_a5_spark.functions.hashing import token_count, tokens
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.col("doc_id") % 8).alias("shard"),
-        tokens("text").alias("toks"),
-        token_count("text").alias("n_tokens"),
-    )
-    geo = concat_and_chunk(
-        docs.select("doc_id", "shard", "n_tokens"),
-        512,
-        n_tokens_col="n_tokens",
-        shard_col="shard",
-    )
-    asm = assemble_chunks(
-        geo, docs.select("doc_id", "toks"), shard_col="shard"
-    )
-    return asm.select(
-        "shard",
-        "chunk_id",
-        F.array_join("toks", " ").alias("text"),
-        "n_tokens",
-    )
-
-
-#: DuckDB twin of the INCREMENTAL assembler's output: the same assembly
-#: CTEs as _ASSEMBLY_ORACLE, restricted to COMPLETE chunks (n_tokens ==
-#: 512) — the streaming assembler's contract is to emit exactly the
-#: chunks that COMPLETED (each shard's unfilled last chunk stays in the
-#: tail store), so batch-complete == streamed-emitted, row for row.
+#: DuckDB twin of the INCREMENTAL assembler's output: the _PACK_ORACLE
+#: geometry CTEs, then LIST_SLICE each document's tokens by its slice and
+#: STRING_AGG the pieces in chunk_offset order, restricted to COMPLETE
+#: chunks (n_tokens == 512) — the streaming assembler's contract is to
+#: emit exactly the chunks that COMPLETED (each shard's unfilled last
+#: chunk stays in the tail store), so batch-complete == streamed-emitted,
+#: row for row.
 _ASSEMBLY_INCREMENTAL_ORACLE = """
     WITH t0 AS (
       SELECT doc_id, doc_id % 8 AS shard,

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from bigdatastructure_a5_spark.catalog import load_table
 from bigdatastructure_a5_spark.functions.numeric import dec_sum_double, det_avg
@@ -51,14 +50,6 @@ def filter_eq_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     out = eq_filter(part, {"p_brand": "Brand#12", "p_type": "PROMO"})
     return project(out, ["p_partkey", "p_name", "p_brand", "p_type", "p_size"])
-
-
-# NOTE (r9 registry rotation): the former ``filter_date_point`` query
-# (Q3_orders_by_date analogue: point date filter over lineitem) was
-# rotated out of the 50-slot registry for the quantization/layout gate
-# queries (queries/quant_queries.py) — O1 point-filter semantics stay
-# gated via filter_eq_conjunctive, date typing via agg_prefiltered's
-# YEAR/MONTH predicates and the shard-targeted scan's pruning plan test.
 
 
 # ---------------------------------------------------------------------------
@@ -364,174 +355,6 @@ def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = c.filter(F.col("c_acctbal") > 9000).select("c_custkey")
     d = c.filter(F.col("c_nationkey") == 3).select("c_custkey")
     return a.union(b).distinct().subtract(d)
-
-
-WINDOW_TOPN_ORACLE = """
-    SELECT c_nationkey, c_custkey, c_acctbal, rn
-    FROM (
-      SELECT c_nationkey, c_custkey, c_acctbal,
-             ROW_NUMBER() OVER (
-               PARTITION BY c_nationkey
-               ORDER BY c_acctbal DESC, c_custkey
-             ) AS rn
-      FROM customer
-    ) t
-    WHERE rn <= 3
-    """
-
-
-def window_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 customers per nation by balance (unique order -> deterministic).
-    At scale: single hash-partition by the window key, no global sort.
-    Rotated out of the driver registry in r10 (slot went to
-    dedup_clusters); stays engine-vs-oracle checked in tests/test_tools.py,
-    and window machinery stays driver-gated via events_sessionize (lag
-    window), events_sliding_window, and curriculum_bins (ntile window)."""
-    c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    return (
-        c.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= 3)
-        .select("c_nationkey", "c_custkey", "c_acctbal", "rn")
-    )
-
-
-SCALAR_FUNCTIONS_ORACLE = """
-    SELECT o_orderkey,
-           LOWER(o_orderstatus) AS status_lower,
-           CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS prio_num,
-           CONCAT(UPPER(o_orderstatus), '-', SUBSTRING(o_orderpriority, 1, 1)) AS status_code,
-           YEAR(CAST(o_orderdate AS DATE))  AS order_year,
-           MONTH(CAST(o_orderdate AS DATE)) AS order_month,
-           CAST(FLOOR(o_totalprice) AS BIGINT) AS total_floor,
-           CAST(o_orderdate AS DATE) + 30 AS due_date
-    FROM orders
-    """
-
-
-def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String/date/math scalar functions (absent from the reference, whose
-    only value semantics is literal equality — SURVEY.md §2.6).  Rotated
-    out of the driver registry in r10 (slot went to the mixture/packing
-    family); stays engine-vs-oracle checked in tests/test_tools.py, and
-    scalar expressions stay driver-gated via events_json_extract +
-    projection_computed."""
-    o = load_table(spark, sf_dir, "orders")
-    d = F.to_date("o_orderdate")
-    return o.select(
-        "o_orderkey",
-        F.lower("o_orderstatus").alias("status_lower"),
-        F.substring("o_orderpriority", 1, 1).cast("int").alias("prio_num"),
-        F.concat(
-            F.upper("o_orderstatus"), F.lit("-"), F.substring("o_orderpriority", 1, 1)
-        ).alias("status_code"),
-        F.year(d).cast("bigint").alias("order_year"),
-        F.month(d).cast("bigint").alias("order_month"),
-        F.floor("o_totalprice").cast("bigint").alias("total_floor"),
-        F.date_add(d, 30).alias("due_date"),
-    )
-
-
-COMPOSITE_SHIPPING_ORACLE = """
-    SELECT l_orderkey,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))
-                AS DOUBLE) AS revenue,
-           o_orderdate, o_orderpriority
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1997-01-01'
-      AND l_shipdate  > TIMESTAMP '1997-01-01'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """
-
-
-def composite_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-shaped composite — every §2 operator family in ONE plan:
-    conjunctive filters on three tables (O1), filter-then-join (O11),
-    3-way join with the customer dimension broadcast (O13), grouped
-    decimal-exact aggregation (O16/O19), and a unique-total-order top-k
-    that compiles to TakeOrderedAndProject.  Pins that Catalyst composes
-    the per-operator guarantees (pushdown below the joins, partial
-    aggregation, no global sort) when everything appears at once.
-
-    Revenue is computed per-row in double (one IEEE multiply, identical
-    cross-engine) then summed exactly as decimal — the numeric.py rule.
-
-    Rotated out of the driver registry in r10 (slot went to the
-    mixture/packing family); stays engine-vs-oracle checked in
-    tests/test_tools.py.  Every component family keeps its own driver
-    row: O1 filter_eq_conjunctive, O11 join_filtered_brand, O13
-    join_three_way, O16/O19 agg_pricing_summary, top-k sort_limit_topk."""
-    cutoff = "1997-01-01"
-    cust = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < cutoff
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
-    joined = li.join(
-        orders, li.l_orderkey == orders.o_orderkey, "inner"
-    ).join(F.broadcast(cust), orders.o_custkey == cust.c_custkey, "inner")
-    return (
-        joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-    )
-
-
-#: Engine-vs-oracle twin for the rotated-out agg_salted_skew (r13) —
-#: consumed by tests/test_tools.py::test_agg_salted_skew_matches_duckdb.
-AGG_SALTED_SKEW_ORACLE = """
-    SELECT l_returnflag,
-           COUNT(*) AS n_rows,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-             AS sum_l_quantity,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS sum_l_extendedprice
-    FROM lineitem
-    GROUP BY l_returnflag
-    """
-
-
-def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase salted aggregation (operators/skew.salted_agg) on a
-    3-group key — the worst reduce-side skew shape: 600k rows land on 3
-    reducers unsalted.  Salting spreads each group over 16 sub-keys before
-    the final combine; the result is EXACTLY the plain GROUP BY (decimal
-    sums are associative), which the oracle hash-checks.  AQE splits skewed
-    joins but not aggregations — this is the aggregation-side tool.
-
-    Rotated OUT of the driver registry in r13 (slot balance for
-    ``dedup_retraction``; the registry is pinned at the driver's 50-row
-    snapshot size — VERDICT r12 item 1): skew salting stays driver-gated
-    via ``join_salted_skew`` (the same operators/skew.py module and the
-    same result-invariance contract), the aggregation side keeps its
-    engine-vs-DuckDB twin in
-    tests/test_tools.py::test_agg_salted_skew_matches_duckdb, and the
-    AQE-vs-manual-salting trade stays measured in EXPERIMENTS §10."""
-    from bigdatastructure_a5_spark.operators.skew import salted_agg
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return salted_agg(
-        li, ["l_returnflag"], ["l_quantity", "l_extendedprice"], salt=16
-    )
 
 
 @query(

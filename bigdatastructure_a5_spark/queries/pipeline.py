@@ -30,7 +30,6 @@ from bigdatastructure_a5_spark.operators.dedup import (
 from bigdatastructure_a5_spark.operators.similarity import (
     ann_lsh_topk,
     brute_force_topk,
-    cosine_pairs,
 )
 from bigdatastructure_a5_spark.registry import query
 
@@ -64,49 +63,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-#: text_fingerprint's oracle, kept importable for its engine-vs-oracle
-#: pytest twin (tests/test_tools.py) after the r11 registry rotation:
-#: its slot went to ``document_report``, which carries the md5
-#: fingerprint column (and the full fused text-signal surface); the
-#: rolling hash stays cross-engine-checked via the pytest twin.
-TEXT_FINGERPRINT_ORACLE = f"""
-    SELECT doc_id,
-           MD5({_NORM_SQL}) AS fingerprint,
-           LIST_REDUCE(
-             LIST_PREPEND(
-               CAST(0 AS BIGINT),
-               LIST_TRANSFORM(STRING_SPLIT({_NORM_SQL}, ''), c -> CAST(ASCII(c) AS BIGINT))
-             ),
-             (a, b) -> (a * 131 + b) % 2147483647
-           ) AS rolling_fp
-    FROM documents
-    """
-
-
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both per-document content fingerprints in one pass: md5 of the
-    normalized text (order-insensitive-of-position content hash, identical
-    hex on every engine) and the order-sensitive polynomial rolling hash
-    (streaming-friendly char-level fold, bit-identical via DuckDB
-    list_reduce).  One scan, two projections — cheaper than two queries,
-    and both hashes stay oracle-checked (pytest twin post-r11-rotation)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        md5_fingerprint("text").alias("fingerprint"),
-        rolling_fingerprint("text").alias("rolling_fp"),
-    )
-
-
-# NOTE (r9 registry rotation): the former ``text_stats`` query (per-doc
-# char/token/distinct-token/BPE-piece counts) was rotated out of the
-# 50-slot registry in favor of the quantization/layout gate queries
-# (queries/quant_queries.py) — its features overlap text_quality's
-# oracle-checked raw features and text_fingerprint's scan, and
-# bpe_token_count keeps direct pytest coverage
-# (tests/test_text_multimodal.py::test_bpe_token_count).
 
 
 #: DuckDB twin of operators.dedup.shingle_sets (word trigrams, distinct):
@@ -582,32 +538,6 @@ def decontam_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize_release(matches, tracked)
 
 
-#: neardup_embedding_cosine's oracle, kept importable for its
-#: engine-vs-oracle pytest twin (tests/test_tools.py) after the r11
-#: rotation: its slot went to ``dedup_semantic``, which shares the SAME
-#: exact cosine refine expression (the within-cell pair set is a strict
-#: subset of this all-pairs answer) — the Arrow tile scorer stays
-#: cross-engine-checked via the pytest twin.
-NEARDUP_EMBEDDING_ORACLE = """
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-    )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           LIST_COSINE_SIMILARITY(a.emb, b.emb) AS cosine
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE LIST_COSINE_SIMILARITY(a.emb, b.emb) >= 0.45
-    """
-
-
-def neardup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space near-dup pairs (cosine >= 0.45), exact all-pairs
-    baseline.  Both engines fold the 64-dim dot product sequentially in
-    double precision, so values are bit-identical (verified) and the oracle
-    hash-matches without rounding (pytest twin post-r11-rotation)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_pairs(emb, threshold=0.45)
-
-
 @query(
     "dedup_semantic",
     # DuckDB twin of cosine_pairs_in_cells over the deterministic
@@ -890,14 +820,12 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Text analysis (operators/text.py): language ID, quality, BPE-ish tokens,
-# rolling fingerprints
+# Text analysis (operators/text.py): language ID, quality, BPE-ish tokens
 # ---------------------------------------------------------------------------
 from bigdatastructure_a5_spark.operators.text import (  # noqa: E402
     STOPWORDS,
     lang_id,
     quality_score,
-    rolling_fingerprint,
 )
 
 

@@ -3,7 +3,7 @@
 The reference's only value semantics is literal equality; its grammar knows
 SELECT/FROM/JOIN-ON/WHERE-AND.  Spark's full SQL surface comes free — these
 queries pin the behaviors down with oracles so "free" is verified, not
-assumed: semi/anti/outer joins, DISTINCT aggregation, HAVING, ROLLUP,
+assumed: semi/anti joins, DISTINCT aggregation, HAVING, ROLLUP,
 JSON extraction.
 """
 
@@ -48,26 +48,6 @@ def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_name", F.lit(False).alias("has_order")
     )
     return with_o.union(without_o)
-
-
-JOIN_LEFT_OUTER_ORACLE = """
-    SELECT n_name, COUNT(s_suppkey) AS n_suppliers
-    FROM nation LEFT JOIN supplier ON n_nationkey = s_nationkey
-    GROUP BY n_name
-    """
-
-
-def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER join preserving empty groups (nations with no suppliers
-    count 0 — COUNT(col) skips the padded NULLs).  Rotated out of the
-    driver registry in r10 (slot went to the mixture/packing family);
-    stays engine-vs-oracle checked in tests/test_tools.py, and the outer
-    join machinery stays driver-gated via join_semi_anti +
-    join_asof_attribution (both outer-shaped)."""
-    n = load_table(spark, sf_dir, "nation")
-    s = load_table(spark, sf_dir, "supplier")
-    j = n.join(s, n.n_nationkey == s.s_nationkey, "left")
-    return j.groupBy("n_name").agg(F.count("s_suppkey").alias("n_suppliers"))
 
 
 @query(
@@ -139,34 +119,6 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE (r9 registry rotation, third wave): ``agg_cube`` was rotated out
-# of the 50-slot registry for ``pipeline_mixture``/``pack_chunks``
-# (queries/mixture_queries.py — two NEW operator families vs a third
-# grouping-sets slot).  The grouping-sets machinery (Spark Expand) stays
-# driver-gated via `agg_rollup` and `agg_distinct_having`, and this
-# builder keeps an engine-vs-oracle pytest
-# (tests/test_tools.py::test_agg_cube_matches_duckdb).
-AGG_CUBE_ORACLE = """
-    SELECT l_returnflag, YEAR(CAST(l_shipdate AS DATE)) AS ship_year,
-           COUNT(*) AS n_lines
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, YEAR(CAST(l_shipdate AS DATE)))
-    """
-
-
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (flag, ship year): all four grouping-set combinations in one
-    pass (Spark Expand + single shuffle, not four scans)."""
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "ship_year", F.year(F.to_date("l_shipdate")).cast("bigint")
-    )
-    return (
-        li.cube("l_returnflag", "ship_year")
-        .agg(F.count(F.lit(1)).alias("n_lines"))
-        .select("l_returnflag", "ship_year", "n_lines")
-    )
-
-
 @query(
     "filter_over_intermediate",
     oracle="""
@@ -190,45 +142,6 @@ def filter_over_intermediate(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec_sum_double("l_quantity").alias("sum_qty"),
     )
     return agg.filter(F.col("n_lines") == 30)
-
-
-# NOTE (r9 registry rotation, second wave): ``array_functions`` was
-# rotated out of the 50-slot registry for ``decontam_benchmark``
-# (queries/pipeline.py — a NEW operator family vs a third scalar-function
-# slot).  The array toolbox stays double-gated: `scalar_functions` and
-# `events_json_extract` keep the §2.6 scalar row in the driver gate, the
-# oracle-gated `sim_sq8_topk`/`sim_pq_adc` serves are themselves array
-# folds, and this builder keeps an engine-vs-oracle pytest
-# (tests/test_tools.py::test_array_functions_matches_duckdb).
-ARRAY_FUNCTIONS_ORACLE = """
-    SELECT vec_id,
-           LEN(embedding) AS dim,
-           CAST(embedding[1] AS DOUBLE) AS first_val,
-           CAST(LIST_MAX(embedding) AS DOUBLE) AS max_val,
-           LEN(LIST_FILTER(embedding, x -> x > 0)) AS n_positive
-    FROM embeddings
-    """
-
-
-def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array-column functions over the embedding vectors: size, element
-    access, max, filtered count — the array toolbox the reference's type
-    system sizes but never computes on (SURVEY §1.2)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        F.size("embedding").cast("bigint").alias("dim"),
-        F.col("embedding").getItem(0).cast("double").alias("first_val"),
-        F.array_max("embedding").cast("double").alias("max_val"),
-        F.size(F.filter("embedding", lambda x: x > 0)).cast("bigint").alias("n_positive"),
-    )
-
-
-# NOTE (r9 registry rotation): the former ``set_intersect`` query was
-# rotated out of the 50-slot registry for the quantization/layout gate
-# queries (queries/quant_queries.py) — UNION/EXCEPT stay gated via
-# set_operations, and INTERSECT keeps an engine-vs-oracle pytest
-# (tests/test_tools.py::test_intersect_matches_duckdb).
 
 
 @query(

@@ -351,7 +351,7 @@ def materialize_release(result, tracked):
 def adopt_tracker(tracker: list | None):
     """The cache contract's entry point, shared by every multi-pass
     operator (minhash LSH, capped inverted-index jaccard, simhash, LSH
-    near-dup): returns ``(tracker, finish)`` where the operator appends its
+    near-dup, benchmark decontamination): returns ``(tracker, finish)`` where the operator appends its
     persisted intermediates to ``tracker`` and returns ``finish(result)``.
 
     With a caller-supplied tracker, ``finish`` is the identity — the

@@ -70,13 +70,14 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling 1-hour rollup per event type — the streaming twin
-    of events_hourly_rollup.  Two documented deviations from the batch twin:
-    countDistinct is not incremental, so the streaming variant uses
-    approx_count_distinct; and NULL event times are DROPPED (a watermarked
-    aggregation cannot window them), where the batch query groups them
-    under a NULL hour_ts — the twin equality holds for non-null-ts data,
-    which the fixtures (and any sane event stream) guarantee."""
+    """Watermarked tumbling 1-hour rollup per event type: the batch
+    ``GROUP BY DATE_TRUNC('hour', ts), event_type`` as a stream.  Two
+    documented deviations from that batch form: countDistinct is not
+    incremental, so the streaming variant uses approx_count_distinct; and
+    NULL event times are DROPPED (a watermarked aggregation cannot window
+    them), where the batch form groups them under a NULL hour_ts — the
+    equality holds for non-null-ts data, which the fixtures (and any sane
+    event stream) guarantee."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

@@ -51,7 +51,8 @@ def test_containment_is_directional_not_jaccard(spark):
 def test_broadcast_gating_both_regimes_same_answer(spark):
     """limit=0 forces the shuffle regime; the default broadcasts a small
     index.  Same answer both ways, and the default plan actually contains
-    a broadcast join on the benchmark side."""
+    a broadcast join on the benchmark side.  Tracked calls return the
+    lazy plan the decontam_benchmark row builds, not a checkpoint."""
     corpus = _docs(
         spark,
         [(i, f"common phrase number {i} with shared tail words") for i in range(20)],
@@ -61,14 +62,21 @@ def test_broadcast_gating_both_regimes_same_answer(spark):
         shingle_sets(corpus, "doc_id", "text", 3),
         shingle_sets(bench, "doc_id", "text", 3),
     )
-    got_b = contamination_matches(*args, min_containment=0.5)
+    tracked: list = []
+    got_b = contamination_matches(*args, min_containment=0.5, tracker=tracked)
     got_s = contamination_matches(
-        *args, min_containment=0.5, max_broadcast_bench_shingles=0
+        *args,
+        min_containment=0.5,
+        max_broadcast_bench_shingles=0,
+        tracker=tracked,
     )
     rows_b = sorted(map(tuple, got_b.collect()))
     rows_s = sorted(map(tuple, got_s.collect()))
+    plan_b = got_b._jdf.queryExecution().executedPlan().toString()
+    for df in tracked:
+        df.unpersist()
     assert rows_b == rows_s and len(rows_b) >= 1
-    assert "BroadcastHashJoin" in got_b._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan_b
 
 
 def test_min_overlap_filters_chance_collisions(spark):
@@ -142,16 +150,48 @@ def test_zero_python_stages(spark):
     ArrowEvalPython stage anywhere in the plan."""
     corpus = _docs(spark, [(1, "a b c d e")])
     bench = _docs(spark, [(2, "a b c")])
+    tracked: list = []
     plan = (
         contamination_matches(
             shingle_sets(corpus, "doc_id", "text", 3),
             shingle_sets(bench, "doc_id", "text", 3),
+            tracker=tracked,
         )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
+    for df in tracked:
+        df.unpersist()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_untracked_call_releases_index(spark, monkeypatch):
+    """Called without a tracker, the operator checkpoints its result and
+    releases the persisted benchmark index before returning: nothing it
+    persisted stays in the CacheManager for the rest of the session."""
+    import bigdatastructure_a5_spark.operators.decontam as D
+
+    persisted = []
+    real = D.persist_df
+
+    def spy(df):
+        persisted.append(real(df))
+        return persisted[-1]
+
+    monkeypatch.setattr(D, "persist_df", spy)
+    spark.catalog.clearCache()
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    corpus = _docs(spark, [(1, "alpha beta gamma delta")])
+    bench = _docs(spark, [(7, "alpha beta gamma delta")])
+    m = contamination_matches(
+        shingle_sets(corpus, "doc_id", "text", 3),
+        shingle_sets(bench, "doc_id", "text", 3),
+    )
+    assert [(r.corpus_id, r.bench_id) for r in m.collect()] == [(1, 7)]
+    assert len(persisted) == 1
+    assert not cache_mgr.lookupCachedData(persisted[0]._jdf).isDefined()
+    assert cache_mgr.isEmpty()
 
 
 def test_no_inferred_generate_filter(spark):

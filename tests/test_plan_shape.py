@@ -122,27 +122,6 @@ def test_simhash_fingerprints_have_no_exchange(spark, sf_dir):
     assert "HashAggregate" not in plan
 
 
-def test_composite_query_composes_all_guarantees(spark, sf_dir):
-    """One plan must show all the per-operator physical properties at once:
-    pushed filters, broadcast dimension, partial aggregation, and top-k
-    without a global sort."""
-    # rotated out of the registry in r10 — call the builder directly
-    from bigdatastructure_a5_spark.queries.parity import (
-        composite_shipping_priority,
-    )
-
-    plan = (
-        composite_shipping_priority(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("HashAggregate") >= 2
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_curation_broadcast_gate_both_regimes(spark):
     """The curation anti-join's broadcast is size-GATED, not assumed
     (VERDICT r4 item 2): a measured dropped-id set under the bound gets the
@@ -288,7 +267,7 @@ def test_aqe_skew_split_fires_join_only_and_defers_to_copartitioning(spark):
         joined = fact.join(dim, "k")
         # unprunable whole-row checksum: a bare count would let Catalyst
         # strip the payload and the tiny key-only shuffle never trips the
-        # threshold (the exact failure mode tools/skew_experiment.py hit)
+        # threshold (the failure mode EXPERIMENTS §10 recorded)
         tail = joined.agg(
             F.sum(
                 F.pmod(F.xxhash64(*joined.columns), F.lit(1_000_000_007))

@@ -98,6 +98,35 @@ def test_every_query_has_callable_and_most_have_oracles(spark):
     assert len(oracles) >= 0.7 * len(qs)
 
 
+def test_every_query_shaped_function_is_registered():
+    """A public module-level function in queries/ with the builder
+    signature ``(spark, sf_dir)`` must be a registered row.  An
+    unregistered one is reached by no gate and no benchmark; test an
+    operator directly instead of keeping a builder for it."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import bigdatastructure_a5_spark.queries as queries_pkg
+    from bigdatastructure_a5_spark.registry import REGISTRY, _load_all
+
+    _load_all()
+    registered = {qd.builder.__wrapped__ for qd in REGISTRY.values()}
+    stray = []
+    for info in pkgutil.iter_modules(queries_pkg.__path__):
+        mod = importlib.import_module(f"{queries_pkg.__name__}.{info.name}")
+        for name, fn in vars(mod).items():
+            if (
+                not name.startswith("_")
+                and inspect.isfunction(fn)
+                and fn.__module__ == mod.__name__
+                and list(inspect.signature(fn).parameters) == ["spark", "sf_dir"]
+                and fn not in registered
+            ):
+                stray.append(f"{info.name}.{name}")
+    assert not stray, f"unregistered builders: {sorted(stray)}"
+
+
 def _newest_execution(spark) -> int:
     """Id of the newest SQL execution, once the listener bus has delivered
     every event posted so far."""

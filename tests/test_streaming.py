@@ -563,47 +563,3 @@ def test_streaming_gate_queries_hash_match_under_both_providers(
     assert sorted(s_cols) == sorted(d_cols)
     assert len(s_rows) == len(d_rows) and len(s_rows) > 0
     assert _canon_rows(s_cols, s_rows) == _canon_rows(d_cols, d_rows)
-
-
-def test_streaming_observer_captures_state_operator_progress(
-    spark, sf_dir, monkeypatch
-):
-    """tools/streaming_scale.py's StreamingQueryListener capture must hand
-    summarize_progress the per-microbatch StreamingQueryProgress of the run
-    itself — with the stateOperators metrics (state rows, memory,
-    watermark drops) its state-growth table is built from."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    import streaming_scale
-
-    caps = []
-    summarize = streaming_scale.summarize_progress
-
-    def spy(query, got, wall, out_rows):
-        caps.extend(got)
-        return summarize(query, got, wall, out_rows)
-
-    monkeypatch.setattr(streaming_scale, "summarize_progress", spy)
-    summary = streaming_scale.run_one(spark, "events_streaming_rollup", sf_dir)
-
-    assert summary["out_rows"] > 0 and summary["peak_state_rows"] > 0
-    assert len(caps) == 1
-    name, progress = caps[0]
-    assert name == "events_streaming_rollup_sink"
-    assert len(progress) >= 1  # at least the data microbatch
-    state_ops = [op for p in progress for op in p.get("stateOperators", [])]
-    assert state_ops, "rollup is a stateful aggregation - must report state"
-    op = state_ops[0]
-    # the fields summarize_progress and the state-growth table read
-    for key in (
-        "operatorName",
-        "numRowsTotal",
-        "numRowsUpdated",
-        "numRowsDroppedByWatermark",
-        "memoryUsedBytes",
-        "numShufflePartitions",
-    ):
-        assert key in op, (key, sorted(op))
-    assert any(op["numRowsTotal"] > 0 for op in state_ops)

@@ -1,11 +1,13 @@
-"""Spark-free units for the measurement tools' pure logic.
+"""Units for the measurement tools and engine-vs-DuckDB operator twins.
 
-The tools themselves are validated by the EXPERIMENTS.md sections they
-regenerate; these tests pin the pure decision logic — the scaling
-sweep's verdict/flagging rules, the shared rep timer, the streaming
-progress fold — which otherwise only runs inside a long full sweep.
-Plan evidence is not a tool artifact: each registry row's plan signature
-is pinned in tests/test_smoke.py.
+The tool tests pin the pure decision logic of the kept tools — the lifted
+x>10 oracles, the bench variance envelope and its reader, the fixture
+cache, the gate's worker-pool partition and oracle cache, bench.py's
+steal accounting — which otherwise only runs inside a long full run.
+The operator twins hold engine operators that no registry row calls
+directly to a DuckDB oracle over the same parquet.  Plan evidence is not
+a tool artifact: each registry row's plan signature is pinned in
+tests/test_smoke.py.
 """
 
 import sys
@@ -14,78 +16,6 @@ from pathlib import Path
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-
-from scaling_sweep import OUTPUT_QUADRATIC, SUPER_LINEAR, render  # noqa: E402
-
-SCALES = [
-    ("sf0.001", 1, "/d/sf0.001"),
-    ("sf0.01", 10, "/d/sf0.01"),
-    ("sf0.1", 100, "/d/sf0.1"),
-    ("x10(sf0.1)", 1000, "/tmp/x10"),
-]
-
-
-def _row(section: str, name: str) -> str:
-    rows = [l for l in section.splitlines() if l.startswith(f"| {name} |")]
-    assert len(rows) == 1, f"expected exactly one row for {name}"
-    return rows[0]
-
-
-def test_render_verdicts_and_flagging():
-    times = {
-        # last step 20x > SUPER_LINEAR: flagged
-        "quadratic_q": [0.1, 0.2, 1.0, 20.0],
-        # last step exactly linear (10x): '~linear', not flagged
-        "linear_q": [0.1, 0.1, 0.5, 5.0],
-        # flat at all scales: overhead-bound
-        "flat_q": [0.2, 0.2, 0.2, 0.2],
-        # failed at one rung: FAILED, flagged, must not raise
-        "broken_q": [0.1, float("nan"), 0.2, 0.3],
-    }
-    section = render(SCALES, times, reps=2)
-
-    assert "**super-linear**" in _row(section, "quadratic_q")
-    assert "~linear" in _row(section, "linear_q")
-    assert "overhead-bound" in _row(section, "flat_q")
-    assert "**FAILED**" in _row(section, "broken_q")
-    # the summary line names both problem queries
-    assert "Flagged super-linear" in section
-    assert "`quadratic_q` (20.0x)" in section
-    assert "`broken_q` (FAILED)" in section
-    assert "nan" not in section
-
-
-def test_output_quadratic_queries_read_output_bound_not_flagged():
-    """The x10 sweep fixture makes the TRUE pair answer ~copies^2 for the
-    dedup/curation family: a >12x last step there is the answer's size,
-    not an implementation defect — rendered as output-bound with the
-    §4/§5 pointer, never flagged."""
-    name = "dedup_ngram_jaccard"
-    assert name in OUTPUT_QUADRATIC
-    times = {name: [0.5, 0.6, 1.6, 24.0]}  # last step 15x
-    section = render(SCALES, times, reps=2)
-    row = _row(section, name)
-    assert "output-bound" in row and "super-linear" not in row
-    assert "Flagged" not in section
-    # a non-exempt query with the same ratios IS still flagged
-    section2 = render(SCALES, {"plain_q": [0.5, 0.6, 1.6, 24.0]}, reps=2)
-    assert "**super-linear**" in _row(section2, "plain_q")
-
-
-def test_render_clean_sweep_has_no_flags():
-    times = {"q": [0.1, 0.2, 0.5, 2.0]}
-    section = render(SCALES, times, reps=3)
-    assert "Flagged" not in section
-    assert "No query is super-linear" in section
-    # header carries the rep count actually used
-    assert "min-of-3" in section
-    # totals row present with all four scale columns
-    assert _row(section, "**total**").count("|") >= 8
-
-
-def test_super_linear_threshold_is_generous_vs_linear():
-    # the threshold must not flag plain linear growth (10x) plus noise
-    assert SUPER_LINEAR >= 12.0
 
 
 def test_lifted_oracles_match_full_at_x10():
@@ -320,28 +250,6 @@ def test_scale_fixture_eviction_drops_stale_generations(tmp_path):
             shutil.rmtree(p, ignore_errors=True)
 
 
-def test_spill_run_case_records_timeout(monkeypatch):
-    """ADVICE r7: a hung constrained-heap child (the exact pathology the
-    spill experiment probes) must land as a TIMEOUT status row through the
-    normal retry path, not abort the whole run with an uncaught
-    TimeoutExpired and lose every previously measured row."""
-    import subprocess
-
-    import spill_experiment as se
-
-    calls = []
-
-    def fake_run(cmd, **kw):
-        calls.append(cmd)
-        raise subprocess.TimeoutExpired(cmd, kw.get("timeout", 3600))
-
-    monkeypatch.setattr(se.subprocess, "run", fake_run)
-    out = se.run_case("some_query", "/tmp/sf", "2g", 4, None)
-    assert out["status"] == "TIMEOUT (3600s) x2"
-    assert out["rows"] == -1
-    assert len(calls) == 2  # both attempts made, neither raised out
-
-
 def test_oracle_cache_key_includes_schema_version(monkeypatch):
     """ADVICE r7: cached oracle entries store POST-canonicalization rows,
     so the cache key must change when _canon_rows (or DuckDB's rendering)
@@ -358,99 +266,6 @@ def test_oracle_cache_key_includes_schema_version(monkeypatch):
     v1 = cc._cache_schema_version()
     monkeypatch.setattr(duckdb, "__version__", "999.0.0-fake")
     assert cc._cache_schema_version() != v1
-
-
-def test_streaming_scale_summarize_progress():
-    """§13's table folds raw StreamingQueryProgress dicts; the r7 lesson
-    (read_bench's CLI shipped broken on its primary input) says pin the
-    consuming shape: multi-operator batches sum state rows/bytes, missing
-    metrics default to 0, peak is across batches."""
-    from streaming_scale import summarize_progress
-
-    caps = [
-        (
-            "sink_a",
-            [
-                {
-                    "batchId": 0,
-                    "numInputRows": 100,
-                    "durationMs": {"triggerExecution": 1500},
-                    "stateOperators": [
-                        {"numRowsTotal": 10, "memoryUsedBytes": 1000},
-                        {"numRowsTotal": 5, "memoryUsedBytes": 500},
-                    ],
-                },
-                {"batchId": 1, "numInputRows": 0},  # finalize: no state ops
-            ],
-        )
-    ]
-    r = summarize_progress("q", caps, wall=2.0, out_rows=7)
-    assert r["input_rows"] == 100
-    assert r["rows_per_sec"] == 50.0
-    assert [b["state_rows"] for b in r["batches"]] == [15, 0]
-    assert [b["state_bytes"] for b in r["batches"]] == [1500, 0]
-    assert r["batches"][0]["batch_ms"] == 1500
-    assert r["batches"][1]["batch_ms"] is None
-    assert r["peak_state_rows"] == 15
-    assert r["peak_state_bytes"] == 1500
-
-
-def test_pq_sizing_timed_reps_excludes_warmup(monkeypatch):
-    """The tools' one rep timer (§14's serving column, §15-§17's walls) is
-    median-of-3 after an excluded warm-up rep (the §12 lesson: warm-up
-    order leaking into per-config numbers made the r7 table contradict
-    itself), and reports the steal share of the timed reps beside it,
-    through bench.py's own /proc/stat reader."""
-    import bench
-    import decontam_scale
-    import layout_experiment
-    import mixpack_scale
-    import pq_sizing
-    import timing
-
-    for tool in (decontam_scale, layout_experiment, mixpack_scale, pq_sizing):
-        assert tool.timed_reps is timing.timed_reps
-    assert timing._cpu_stat is bench._cpu_stat
-    assert timing._steal_pct is bench._steal_pct
-    # the warm-up rep never reads the clock; each timed rep reads it twice
-    ticks = iter([10.0, 11.0, 20.0, 22.0, 30.0, 33.0])
-    monkeypatch.setattr(timing.time, "perf_counter", lambda: next(ticks))
-    calls = []
-    # user nice system idle iowait irq softirq steal: between the two
-    # snapshots 90 busy jiffies of which 9 stolen, plus idle
-    stats = iter([[0] * 8, [60, 0, 21, 500, 7, 0, 0, 9]])
-
-    def cpu_stat():
-        calls.append("stat")
-        return next(stats)
-
-    monkeypatch.setattr(timing, "_cpu_stat", cpu_stat)
-    got = timing.timed_reps(lambda: calls.append(1))
-    # the first snapshot is taken after the warm-up, the second after the
-    # last timed rep
-    assert calls == [1, "stat", 1, 1, 1, "stat"]
-    assert got.sec == 2.0  # median of (1.0, 2.0, 3.0); the warm-up excluded
-    assert got.steal_pct == 10.0
-    assert str(got) == "2.00 (steal 10%)"
-    assert str(timing.Timed(1.234, None)) == "1.23 (steal n/a)"
-
-
-def test_ivf_sizing_jitter_breaks_exact_duplicates(spark):
-    """VERDICT r7 item 4 plumbing: above the dim=64 rotation period the
-    pure xN construction yields exact duplicates; the hash-seeded jitter
-    must make every vector distinct (deterministically) while an
-    unjittered build reproduces the duplicate degeneracy."""
-    from ivf_sizing import scaled_embeddings
-
-    copies = 130  # > 2 full rotation periods of dim 64
-    jittered = scaled_embeddings(spark, copies, jitter=0.03)
-    base_n = jittered.count()
-    assert jittered.select("embedding").distinct().count() == base_n
-    # determinism: same construction twice -> identical corpus
-    again = scaled_embeddings(spark, copies, jitter=0.03)
-    assert jittered.exceptAll(again).count() == 0
-    plain = scaled_embeddings(spark, copies, jitter=0.0)
-    assert plain.select("embedding").distinct().count() < base_n
 
 
 def test_gate_pool_partition_is_sound():
@@ -519,13 +334,23 @@ def test_oracle_cache_roundtrip(tmp_path, monkeypatch):
     assert other[4] is False
 
 
-def test_intersect_matches_duckdb(spark, sf_dir):
-    """INTERSECT stays engine-vs-oracle checked after the r9 registry
-    rotation (its former registry slot, set_intersect, went to the
-    quantization/layout gate queries — VERDICT r8 item 1): DataFrame
-    .intersect must return the same distinct key set as DuckDB's
-    INTERSECT over the same parquet."""
+def _duckdb_over(sf_dir, *tables):
+    """A DuckDB connection with one view per fixture table."""
     import duckdb
+
+    con = duckdb.connect()
+    for t in tables:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def test_intersect_matches_duckdb(spark, sf_dir):
+    """DataFrame .intersect must return the same distinct key set as
+    DuckDB's INTERSECT over the same parquet (UNION/EXCEPT are gated by
+    the set_operations row)."""
     from pyspark.sql import functions as F
 
     from bigdatastructure_a5_spark.catalog import load_table
@@ -543,12 +368,7 @@ def test_intersect_matches_duckdb(spark, sf_dir):
         )
         .collect()
     )
-    con = duckdb.connect()
-    for t in ("customer", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = _duckdb_over(sf_dir, "customer", "orders")
     want = sorted(
         r[0]
         for r in con.sql(
@@ -562,281 +382,119 @@ def test_intersect_matches_duckdb(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_array_functions_matches_duckdb(spark, sf_dir):
-    """The array toolbox stays engine-vs-oracle checked after the r9
-    second-wave rotation (its former registry slot went to
-    decontam_benchmark): the unregistered array_functions builder must
-    match its DuckDB oracle cell-for-cell over the same parquet."""
-    import duckdb
-
-    from bigdatastructure_a5_spark.queries.sql_surface import (
-        ARRAY_FUNCTIONS_ORACLE,
-        array_functions,
-    )
-
-    got = sorted(
-        (r.vec_id, r.dim, round(r.first_val, 12), round(r.max_val, 12), r.n_positive)
-        for r in array_functions(spark, sf_dir).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    )
-    want = sorted(
-        (r[0], r[1], round(r[2], 12), round(r[3], 12), r[4])
-        for r in con.sql(ARRAY_FUNCTIONS_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_agg_cube_matches_duckdb(spark, sf_dir):
-    """CUBE stays engine-vs-oracle checked after the r9 third-wave
-    rotation (its former registry slot went to pipeline_mixture /
-    pack_chunks; the Expand machinery stays driver-gated via agg_rollup
-    and agg_distinct_having)."""
-    import duckdb
-
-    from bigdatastructure_a5_spark.queries.sql_surface import (
-        AGG_CUBE_ORACLE,
-        agg_cube,
-    )
-
-    # CUBE emits NULL grouping values — sort None-safely via str()
-    key = lambda t: tuple(map(str, t))  # noqa: E731
-    got = sorted(
-        (
-            (r.l_returnflag, r.ship_year, r.n_lines)
-            for r in agg_cube(spark, sf_dir).collect()
-        ),
-        key=key,
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/lineitem.parquet')"
-    )
-    want = sorted(
-        ((r[0], r[1], r[2]) for r in con.sql(AGG_CUBE_ORACLE).fetchall()),
-        key=key,
-    )
-    assert got == want and len(got) > 0
-
-
-def test_events_hourly_rollup_matches_duckdb(spark, sf_dir):
-    """The tumbling hourly rollup stays engine-vs-oracle checked after
-    the r9 third-wave rotation (tumbling windows remain driver-gated via
-    events_sliding_window — slide == width is its special case — and the
-    streaming twin events_streaming_rollup)."""
-    import duckdb
-
-    from bigdatastructure_a5_spark.queries.events_queries import (
-        EVENTS_HOURLY_ROLLUP_ORACLE,
-        events_hourly_rollup,
-    )
-
-    got = sorted(
-        (
-            r.hour_ts,
-            r.event_type,
-            r.n_events,
-            r.n_users,
-            round(r.sum_value, 9),
-        )
-        for r in events_hourly_rollup(spark, sf_dir).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/events.parquet')"
-    )
-    want = sorted(
-        (r[0], r[1], r[2], r[3], round(r[4], 9))
-        for r in con.sql(EVENTS_HOURLY_ROLLUP_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_join_left_outer_matches_duckdb(spark, sf_dir):
-    """LEFT OUTER stays engine-vs-oracle checked after the r10 rotation
-    (its former registry slot went to the mixture/packing/curriculum
-    family; outer-join machinery stays driver-gated via join_semi_anti
-    and join_asof_attribution)."""
-    import duckdb
-
-    from bigdatastructure_a5_spark.queries.sql_surface import (
-        JOIN_LEFT_OUTER_ORACLE,
-        join_left_outer,
-    )
-
-    got = sorted(
-        (r.n_name, r.n_suppliers)
-        for r in join_left_outer(spark, sf_dir).collect()
-    )
-    con = duckdb.connect()
-    for t in ("nation", "supplier"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    want = sorted(
-        (r[0], r[1]) for r in con.sql(JOIN_LEFT_OUTER_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_scalar_functions_match_duckdb(spark, sf_dir):
-    """Scalar string/date/math functions stay engine-vs-oracle checked
-    after the r10 rotation (scalar expressions stay driver-gated via
-    events_json_extract and projection_computed)."""
-    import duckdb
-
-    from bigdatastructure_a5_spark.queries.parity import (
-        SCALAR_FUNCTIONS_ORACLE,
-        scalar_functions,
-    )
-
-    got = sorted(
-        tuple(str(v) for v in r)
-        for r in scalar_functions(spark, sf_dir).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/orders.parquet')"
-    )
-    want = sorted(
-        tuple(str(v) for v in r)
-        for r in con.sql(SCALAR_FUNCTIONS_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_composite_shipping_priority_matches_duckdb(spark, sf_dir):
-    """The TPC-H Q3-shaped composite stays engine-vs-oracle checked after
-    the r10 rotation (each component family keeps its own driver row:
-    filter_eq_conjunctive, join_filtered_brand, join_three_way,
-    agg_pricing_summary, sort_limit_topk)."""
-    import duckdb
-
-    from bigdatastructure_a5_spark.queries.parity import (
-        COMPOSITE_SHIPPING_ORACLE,
-        composite_shipping_priority,
-    )
-
-    got = [
-        (r.l_orderkey, round(r.revenue, 9), str(r.o_orderdate), r.o_orderpriority)
-        for r in composite_shipping_priority(spark, sf_dir).collect()
-    ]
-    con = duckdb.connect()
-    for t in ("customer", "orders", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    want = [
-        (r[0], round(r[1], 9), str(r[2]), r[3])
-        for r in con.sql(COMPOSITE_SHIPPING_ORACLE).fetchall()
-    ]
-    assert got == want and len(got) > 0
-
-
-def test_window_topn_per_group_matches_duckdb(spark, sf_dir):
-    """Top-N-per-group stays engine-vs-oracle checked after the r10
-    second rotation wave (its slot went to dedup_clusters; window
-    machinery stays driver-gated via events_sessionize (lag),
-    events_sliding_window, and curriculum_bins (ntile))."""
-    import duckdb
-
-    from bigdatastructure_a5_spark.queries.parity import (
-        WINDOW_TOPN_ORACLE,
-        window_topn_per_group,
-    )
-
-    got = sorted(
-        tuple(r) for r in window_topn_per_group(spark, sf_dir).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW customer AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/customer.parquet')"
-    )
-    want = sorted(tuple(r) for r in con.sql(WINDOW_TOPN_ORACLE).fetchall())
-    assert got == want and len(got) > 0
-
-
 def test_text_fingerprint_matches_duckdb(spark, sf_dir):
-    """Both content fingerprints stay engine-vs-oracle checked after the
-    r11 rotation (the slot went to document_report, which carries the
-    md5 fingerprint column; the rolling polynomial hash is only checked
-    here)."""
-    import duckdb
+    """Both content fingerprints in one pass over the documents: md5 of
+    the normalized text (also carried by the document_report row) and
+    the polynomial rolling hash, which only this test checks; DuckDB
+    replays the rolling fold with LIST_REDUCE."""
+    from bigdatastructure_a5_spark.catalog import load_table
+    from bigdatastructure_a5_spark.functions.hashing import md5_fingerprint
+    from bigdatastructure_a5_spark.operators.text import rolling_fingerprint
+    from bigdatastructure_a5_spark.queries.pipeline import _NORM_SQL
 
-    from bigdatastructure_a5_spark.queries.pipeline import (
-        TEXT_FINGERPRINT_ORACLE,
-        text_fingerprint,
-    )
-
+    docs = load_table(spark, sf_dir, "documents")
     got = sorted(
-        tuple(r) for r in text_fingerprint(spark, sf_dir).collect()
+        tuple(r)
+        for r in docs.select(
+            "doc_id",
+            md5_fingerprint("text").alias("fingerprint"),
+            rolling_fingerprint("text").alias("rolling_fp"),
+        ).collect()
     )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
+    con = _duckdb_over(sf_dir, "documents")
     want = sorted(
-        tuple(r) for r in con.sql(TEXT_FINGERPRINT_ORACLE).fetchall()
+        tuple(r)
+        for r in con.sql(
+            f"""
+            SELECT doc_id,
+                   MD5({_NORM_SQL}) AS fingerprint,
+                   LIST_REDUCE(
+                     LIST_PREPEND(
+                       CAST(0 AS BIGINT),
+                       LIST_TRANSFORM(STRING_SPLIT({_NORM_SQL}, ''),
+                                      c -> CAST(ASCII(c) AS BIGINT))
+                     ),
+                     (a, b) -> (a * 131 + b) % 2147483647
+                   ) AS rolling_fp
+            FROM documents
+            """
+        ).fetchall()
     )
     assert got == want and len(got) > 0
 
 
 def test_neardup_embedding_cosine_matches_duckdb(spark, sf_dir):
-    """The exact all-pairs cosine baseline (Arrow tile scorer) stays
-    engine-vs-oracle checked after the r11 rotation (its slot went to
-    dedup_semantic, whose within-cell pairs are a strict subset sharing
-    the same refine expression)."""
-    import duckdb
+    """The exact all-pairs cosine baseline (operators/similarity
+    ``cosine_pairs``, the Arrow tile scorer) at cosine >= 0.45.  Both
+    engines fold the 64-dim dot product sequentially in double
+    precision, so the values match without rounding.  The dedup_semantic
+    row's within-cell pairs are a strict subset with the same refine
+    expression."""
+    from bigdatastructure_a5_spark.catalog import load_table
+    from bigdatastructure_a5_spark.operators.similarity import cosine_pairs
 
-    from bigdatastructure_a5_spark.queries.pipeline import (
-        NEARDUP_EMBEDDING_ORACLE,
-        neardup_embedding_cosine,
-    )
-
-    got = sorted(
-        tuple(r) for r in neardup_embedding_cosine(spark, sf_dir).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    got = sorted(tuple(r) for r in cosine_pairs(emb, threshold=0.45).collect())
+    con = _duckdb_over(sf_dir, "embeddings")
     want = sorted(
-        tuple(r) for r in con.sql(NEARDUP_EMBEDDING_ORACLE).fetchall()
+        tuple(r)
+        for r in con.sql(
+            """
+            WITH e AS (
+              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+            )
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                   LIST_COSINE_SIMILARITY(a.emb, b.emb) AS cosine
+            FROM e a JOIN e b ON a.vec_id < b.vec_id
+            WHERE LIST_COSINE_SIMILARITY(a.emb, b.emb) >= 0.45
+            """
+        ).fetchall()
     )
     assert got == want and len(got) > 0
 
 
 def test_pack_assembly_matches_duckdb(spark, sf_dir):
-    """The batch assembler stays engine-vs-oracle checked after the r12
-    rotation (its slot went to pack_assembly_incremental, which gates
-    the same assembly as a real streaming run but — by the streaming
-    contract — emits only COMPLETE chunks; each shard's unfilled last
-    chunk is exclusive to this batch variant and is re-checked here)."""
-    import duckdb
+    """The batch assembler (operators/packing ``concat_and_chunk`` then
+    ``assemble_chunks``: 512-token chunks over 8 shards, one row per
+    chunk with its space-joined text) against the pack_assembly_incremental
+    row's oracle without its complete-chunks-only HAVING.  The streaming
+    row emits only complete chunks; each shard's unfilled last chunk is
+    exclusive to the batch form and is checked here."""
+    from pyspark.sql import functions as F
 
+    from bigdatastructure_a5_spark.catalog import load_table
+    from bigdatastructure_a5_spark.functions.hashing import token_count, tokens
+    from bigdatastructure_a5_spark.operators.packing import (
+        assemble_chunks,
+        concat_and_chunk,
+    )
     from bigdatastructure_a5_spark.queries.mixture_queries import (
-        _ASSEMBLY_ORACLE,
-        pack_assembly,
+        _ASSEMBLY_INCREMENTAL_ORACLE,
     )
 
-    got = sorted(tuple(r) for r in pack_assembly(spark, sf_dir).collect())
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        (F.col("doc_id") % 8).alias("shard"),
+        tokens("text").alias("toks"),
+        token_count("text").alias("n_tokens"),
     )
-    want = sorted(tuple(r) for r in con.sql(_ASSEMBLY_ORACLE).fetchall())
+    geo = concat_and_chunk(
+        docs.select("doc_id", "shard", "n_tokens"),
+        512,
+        n_tokens_col="n_tokens",
+        shard_col="shard",
+    )
+    asm = assemble_chunks(geo, docs.select("doc_id", "toks"), shard_col="shard")
+    got = sorted(
+        tuple(r)
+        for r in asm.select(
+            "shard", "chunk_id", F.array_join("toks", " ").alias("text"), "n_tokens"
+        ).collect()
+    )
+    oracle, having = _ASSEMBLY_INCREMENTAL_ORACLE.split("HAVING")
+    assert "= 512" in having
+    con = _duckdb_over(sf_dir, "documents")
+    want = sorted(tuple(r) for r in con.sql(oracle).fetchall())
     assert got == want and len(got) > 0
     # the rows the incremental gate cannot see: at least one per-shard
     # final chunk is under-full here (the streaming tail)
@@ -879,8 +537,6 @@ def test_semantic_multiprobe_hash_gate(spark, scale):
     — HIGHER than §19's 75% because the gate's 8-cell codebook makes
     coarser cells than §19's 71 auto-cells (coarser cells, fewer
     boundary straddles: the cells-vs-recall dial §19 prices)."""
-    import duckdb
-
     from bigdatastructure_a5_spark.catalog import load_table
     from bigdatastructure_a5_spark.operators.similarity import (
         cosine_pairs_in_cells,
@@ -908,11 +564,7 @@ def test_semantic_multiprobe_hash_gate(spark, scale):
         ).collect()
     )
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf}/embeddings.parquet')"
-    )
+    con = _duckdb_over(sf, "embeddings")
     want = sorted(tuple(r) for r in con.sql(_SEMANTIC_4PROBE_ORACLE).fetchall())
     assert got == want
     assert len(got) == want_pairs
@@ -936,50 +588,76 @@ def test_semantic_multiprobe_hash_gate(spark, scale):
 
 
 def test_agg_salted_skew_matches_duckdb(spark, sf_dir):
-    """Salted aggregation stays engine-vs-oracle checked after the r13
-    rotation (its slot went to dedup_retraction; skew salting stays
-    driver-gated via join_salted_skew — same operators/skew.py module)."""
-    import duckdb
+    """Two-phase salted aggregation (operators/skew ``salted_agg``, 16
+    sub-keys) on the 3-group l_returnflag key — the worst reduce-side
+    skew shape — must equal the plain GROUP BY: decimal sums are
+    associative.  The join side of the same module is gated by the
+    join_salted_skew row."""
+    from bigdatastructure_a5_spark.catalog import load_table
+    from bigdatastructure_a5_spark.operators.skew import salted_agg
 
-    from bigdatastructure_a5_spark.queries.parity import (
-        AGG_SALTED_SKEW_ORACLE,
-        agg_salted_skew,
-    )
-
+    li = load_table(spark, sf_dir, "lineitem")
     got = sorted(
         (r.l_returnflag, r.n_rows, r.sum_l_quantity, r.sum_l_extendedprice)
-        for r in agg_salted_skew(spark, sf_dir).collect()
+        for r in salted_agg(
+            li, ["l_returnflag"], ["l_quantity", "l_extendedprice"], salt=16
+        ).collect()
     )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/lineitem.parquet')"
+    con = _duckdb_over(sf_dir, "lineitem")
+    want = sorted(
+        tuple(r)
+        for r in con.sql(
+            """
+            SELECT l_returnflag,
+                   COUNT(*) AS n_rows,
+                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+                     AS sum_l_quantity,
+                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+                     AS sum_l_extendedprice
+            FROM lineitem
+            GROUP BY l_returnflag
+            """
+        ).fetchall()
     )
-    want = sorted(tuple(r) for r in con.sql(AGG_SALTED_SKEW_ORACLE).fetchall())
     assert got == want and len(got) > 0
 
 
 def test_pipeline_split_matches_duckdb(spark, sf_dir):
-    """The train/val/test splitter stays engine-vs-oracle checked after
-    the r13 rotation (its slot went to dedup_retraction; the md5-prefix
-    uniform stays driver-gated via pipeline_mixture)."""
-    import duckdb
+    """The train/val/test splitter (operators/mixture ``assign_split``)
+    at 75/12.5/12.5: DuckDB replays the same md5-prefix uniform (salt
+    'split') and first-match-wins cut points.  The cuts are exact binary
+    fractions, so a ``u < cut`` test cannot straddle a rounding
+    difference.  The md5-prefix uniform is also gated by the
+    pipeline_mixture row."""
+    from bigdatastructure_a5_spark.catalog import load_table
+    from bigdatastructure_a5_spark.operators.mixture import assign_split
 
-    from bigdatastructure_a5_spark.queries.mixture_queries import (
-        PIPELINE_SPLIT_ORACLE,
-        pipeline_split,
-    )
-
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     got = sorted(
         (r.doc_id, r.source, r.split)
-        for r in pipeline_split(spark, sf_dir).collect()
+        for r in assign_split(
+            docs, {"train": 0.75, "val": 0.125, "test": 0.125}
+        ).collect()
     )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
+    con = _duckdb_over(sf_dir, "documents")
+    want = sorted(
+        tuple(r)
+        for r in con.sql(
+            """
+            SELECT doc_id, source,
+                   CASE WHEN u < 0.75  THEN 'train'
+                        WHEN u < 0.875 THEN 'val'
+                        ELSE 'test' END AS split
+            FROM (
+              SELECT doc_id, source,
+                     CAST(CAST('0x' || SUBSTR(
+                            MD5('split:' || CAST(doc_id AS VARCHAR)), 1, 15)
+                          AS BIGINT) AS DOUBLE) / 1152921504606846976.0 AS u
+              FROM documents
+            )
+            """
+        ).fetchall()
     )
-    want = sorted(tuple(r) for r in con.sql(PIPELINE_SPLIT_ORACLE).fetchall())
     assert got == want and len(got) > 0
 
 

@@ -26,10 +26,9 @@ construction makes every document an N-way exact-duplicate group, so the
 registered oracles' shingle joins explode as copies^2 — the lifted oracle
 computes the base-level answer once and lifts it arithmetically, linear
 in the copy count, returning the identical rows (validated vs the full
-oracles at x10 by tests/test_tools.py).  `dedup_semantic` (like the
-rotated-out `neardup_embedding_cosine` before it) is not liftable
-(rotated copies change the fold order, breaking bit-exactness) and runs
-its registered within-cell all-pairs oracle in full — the same
+oracles at x10 by tests/test_tools.py).  `dedup_semantic` is not
+liftable (rotated copies change the fold order, breaking bit-exactness)
+and runs its registered within-cell all-pairs oracle in full — the same
 complexity class as the operator itself.
 """
 
@@ -73,8 +72,7 @@ def _canon_rows(cols, rows):
 #: alone is O(N^2) per group.  Checked in full at x10; above that the four
 #: text-family members run the exact LIFTED oracle (tools/lifted_oracles)
 #: instead, and dedup_semantic runs its registered oracle in full (the
-#: within-cell pair set inherits all-pairs' complexity class per cell;
-#: neardup_embedding_cosine moved to a pytest twin in the r11 rotation).
+#: within-cell pair set inherits all-pairs' complexity class per cell).
 #: Naming one of these explicitly on the command line FORCES the full
 #: registered oracle even above x10 (the escape hatch ADVICE r6 asked to
 #: restore) — expect quadratic oracle cost in that mode.
