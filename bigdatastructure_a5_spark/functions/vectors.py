@@ -10,9 +10,16 @@ Determinism: ``aggregate`` folds the array left-to-right, so the accumulation
 order is the array order on every engine/partition — per-row results are
 bit-stable.  For cross-engine oracle comparison we still round scores, since
 DuckDB's ``list_cosine_similarity`` may accumulate differently.
+
+The rendered-SQL literal helpers (``_sql_double``, ``double_array_sql``) and
+the driver-side folds (``_py_fold_dot``, ``py_l2``) are the one copy every
+operator uses, so a driver-computed constant reads back bit-identical to the
+executor fold over the same values.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -28,6 +35,12 @@ def _sql_double(v: float) -> str:
     return repr(float(v)) + "D"
 
 
+def double_array_sql(values) -> str:
+    """Rendered ``array<double>`` literal: ``array(0.5D,-1.0D,...)``, each
+    element by :func:`_sql_double`."""
+    return "array(" + ",".join(_sql_double(v) for v in values) + ")"
+
+
 def double_array_lit(values) -> Column:
     """``array<double>`` literal built in ONE parser call.
 
@@ -36,7 +49,7 @@ def double_array_lit(values) -> Column:
     ANN queries' wall-clock as pure fixed cost.  A single ``F.expr`` over a
     rendered SQL string is one round-trip; Catalyst parses and
     constant-folds it to the same Literal in milliseconds."""
-    return F.expr("array(" + ",".join(_sql_double(v) for v in values) + ")")
+    return F.expr(double_array_sql(values))
 
 
 def matrix_dots_sql(vec_col: str, col_vectors) -> str:
@@ -60,9 +73,7 @@ def matrix_dots_sql(vec_col: str, col_vectors) -> str:
     # w2[d][j]: column j's weight at dimension d (transposed so the fold
     # indexes by the vector element's position)
     w2_sql = "array(" + ",".join(
-        "array("
-        + ",".join(_sql_double(col_vectors[j][d]) for j in range(j_total))
-        + ")"
+        double_array_sql(col_vectors[j][d] for j in range(j_total))
         for d in range(dim)
     ) + ")"
     return (
@@ -104,3 +115,20 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     bit-identical to the unguarded division."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom != F.lit(0.0), dot_product(a, b) / denom)
+
+
+def _py_fold_dot(vec, weights) -> float:
+    """Driver-side replica of :func:`dot_product`: the same left-to-right
+    double accumulation, so a driver-computed constant (a query's LSH
+    bucket bits or norm, a PQ look-up-table entry, an SQ8 offset) is
+    bit-identical to the executor and DuckDB folds over the same values."""
+    acc = 0.0
+    for x, w in zip(vec, weights):
+        acc += float(x) * float(w)
+    return acc
+
+
+def py_l2(a) -> float:
+    """Driver-side replica of :func:`l2_norm` (sequential square-sum fold +
+    sqrt) — bit-identical to the executor expression."""
+    return math.sqrt(_py_fold_dot(a, a))

@@ -53,8 +53,14 @@ import pandas as pd  # noqa: F401  (pandas_udf resolves annotations here)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity, double_array_lit
-from .similarity import sample_vectors
+from ..functions.vectors import (
+    _py_fold_dot,
+    _sql_double,
+    cosine_similarity,
+    double_array_lit,
+    double_array_sql,
+)
+from .similarity import ivf_probe, sample_vectors
 
 #: LUT entries (m * n_codes) above which pq_adc_topk switches the score
 #: fold from a rendered-SQL literal to the Arrow/BLAS gather stage — the
@@ -209,17 +215,13 @@ def with_pq_codes_sql(
             w[j * dsub : (j + 1) * dsub] = [float(v) for v in book[j, c]]
             padded.append(w)
     dots_sql = matrix_dots_sql(vec_col, padded)
-    # |c|^2 per sub-centroid: sequential Python fold — the oracle twin
-    # recomputes it with list_reduce in the same order
-    def seq_norm2(vec) -> float:
-        acc = 0.0
-        for v in vec:
-            acc += float(v) * float(v)
-        return acc
-
     code_exprs = []
     for j in range(m):
-        cnorms = _double_array_sql(seq_norm2(book[j, c]) for c in range(k))
+        # |c|^2 per sub-centroid: sequential Python fold — the oracle twin
+        # recomputes it with list_reduce in the same order
+        cnorms = double_array_sql(
+            _py_fold_dot(book[j, c], book[j, c]) for c in range(k)
+        )
         code_exprs.append(
             f"array_min(zip_with(slice(__pq_dots, {j * k + 1}, {k}), "
             f"sequence(0, {k - 1}), (d, c) -> struct("
@@ -254,24 +256,21 @@ def adc_lut(codebook: np.ndarray, query_vec: list[float]) -> np.ndarray:
             f"adc_lut: query dim {q.shape[0]} != codebook dim {m * dsub}"
         )
     if m * k <= PQ_SQL_MAX_LUT:
-        lut = np.empty((m, k), dtype=np.float64)
-        for j in range(m):
-            for c in range(k):
-                acc = 0.0
-                for d in range(dsub):
-                    acc += float(book[j, c, d]) * float(q[j * dsub + d])
-                lut[j, c] = acc
-        return lut
+        return np.array(
+            [
+                [_py_fold_dot(book[j, c], q[j * dsub : (j + 1) * dsub])
+                 for c in range(k)]
+                for j in range(m)
+            ],
+            dtype=np.float64,
+        )
     return np.stack([book[j] @ q[j * dsub : (j + 1) * dsub] for j in range(m)])
 
 
 def _adc_score_sql(lut: np.ndarray, code_col: str) -> str:
     """Rendered-SQL ADC fold: element_at into a literal (m x k) LUT,
     summed — stays inside whole-stage codegen, zero Python stages."""
-    rows = ",".join(
-        "array(" + ",".join(repr(float(v)) + "D" for v in row) + ")"
-        for row in lut
-    )
+    rows = ",".join(double_array_sql(row) for row in lut)
     return (
         f"aggregate(zip_with(`{code_col}`, sequence(1, {lut.shape[0]}), "
         f"(c, j) -> element_at(element_at(array({rows}), j), c + 1)), "
@@ -382,10 +381,6 @@ def fit_sq8_bounds(
     return lo, hi
 
 
-def _double_array_sql(vals) -> str:
-    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
-
-
 def with_sq8_codes(
     df: DataFrame,
     bounds: tuple[np.ndarray, np.ndarray],
@@ -414,8 +409,8 @@ def with_sq8_codes(
     expr = (
         f"CASE WHEN size(`{vec_col}`) = {dim} THEN "
         f"transform(`{vec_col}`, (x, i) -> CAST(least(greatest("
-        f"floor((CAST(x AS DOUBLE) - element_at({_double_array_sql(lo)}, "
-        f"i + 1)) * element_at({_double_array_sql(inv)}, i + 1)), 0), 255) "
+        f"floor((CAST(x AS DOUBLE) - element_at({double_array_sql(lo)}, "
+        f"i + 1)) * element_at({double_array_sql(inv)}, i + 1)), 0), 255) "
         "AS INT)) ELSE NULL END"
     )
     return df.withColumn(code_col, F.expr(expr))
@@ -456,13 +451,11 @@ def sq8_dot_topk(
     w = q * step  # per-dim weight on the integer code (one multiply each)
     # sequential fold, NOT np.dot: BLAS may block/pairwise-sum, and this
     # constant must be the bit-exact twin of the oracle's list_reduce
-    const = 0.0
-    for i in range(dim):
-        const += float(q[i]) * float(lo[i])
+    const = _py_fold_dot(q, lo)
     expr = (
         f"CASE WHEN size(`{code_col}`) = {dim} THEN "
-        f"{const!r}D + aggregate(zip_with(`{code_col}`, "
-        f"{_double_array_sql(w)}, (c, w) -> c * w), 0.0D, "
+        f"{_sql_double(const)} + aggregate(zip_with(`{code_col}`, "
+        f"{double_array_sql(w)}, (c, w) -> c * w), 0.0D, "
         "(acc, x) -> acc + x) "
         f"ELSE raise_error(concat('sq8_dot_topk: code array length ', "
         f"CAST(size(`{code_col}`) AS STRING), ' != bounds dim {dim} — "
@@ -495,16 +488,12 @@ def ivf_pq_topk(
     and a write-time PQ code column (with_pq_codes), then ADC-rank only
     the probed rows — the FAISS IVFPQ composition: IVF bounds rows
     SCANNED, PQ bounds bytes PER ROW, so a probe reads
-    n/cells*n_probe rows x ~m bytes instead of n x dim floats."""
-    from .similarity import py_cosine
-
-    scored = [(py_cosine(query_vec, cvec), cid) for cid, cvec in centroids]
-    ranked = sorted(
-        ((c, cid) for c, cid in scored if c == c), key=lambda t: (-t[0], t[1])
-    )
-    probe = [cid for _, cid in ranked[:n_probe]]
+    n/cells*n_probe rows x ~m bytes instead of n x dim floats.  The probe
+    is similarity.ivf_probe, the same ranking ivf_topk uses."""
     return pq_adc_topk(
-        celled_codes.filter(F.col(cell_col).isin(probe)),
+        celled_codes.filter(
+            F.col(cell_col).isin(ivf_probe(query_vec, centroids, n_probe))
+        ),
         codebook,
         query_vec,
         k=k,

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (extension scope, BASELINE.json).
 
-Two tiers, as the brief prescribes:
+Three top-k tiers, as the brief prescribes:
 
 - **brute force**: exact cosine against every vector — the correctness
   baseline, and at 100 TB still the right tool for one-off queries when
@@ -8,23 +8,100 @@ Two tiers, as the brief prescribes:
 - **LSH-bucketed ANN**: sign-random-projection (hyperplane) bucketing; only
   vectors sharing a bucket with the query are scored.  Recall < 1 by
   construction; the scale path when queries are frequent.
+- **IVF**: a coarse codebook assigns each vector a cell; only the cells
+  nearest the query are scored.
 
-All vector math is Catalyst higher-order functions (functions/vectors.py) —
-no UDFs.  Hyperplanes are generated from a fixed seed so results are
-reproducible run-to-run.
+All three end in one rendered-SQL tail, :func:`topk_cosine_sql`; the ANN
+tiers pick rows with :func:`lsh_query_predicate` / :func:`ivf_probe`.
+All vector math is Catalyst higher-order functions (functions/vectors.py)
+— no UDFs below the IVF BLAS scorer's codebook size.  Hyperplanes are
+generated from a fixed seed so results are reproducible run-to-run.
 """
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdatastructure_a5_spark.functions.vectors import (
+    _py_fold_dot,
+    _sql_double,
     cosine_similarity,
-    double_array_lit,
+    double_array_sql,
+    py_l2,
 )
+
+
+def topk_cosine_sql(
+    src: str,
+    query_vec: list[float],
+    k: int,
+    where: str = "TRUE",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> str:
+    """Rendered SQL for the exact cosine top-``k`` of the rows of view
+    ``src`` that ``where`` admits: ``(id_col, cosine)``, ties to the
+    smaller id.  One parser call instead of ~40 Column-API py4j calls.
+
+    Parity with functions.vectors.cosine_similarity: the same dot and
+    row-norm folds; the QUERY norm is folded driver-side (py_l2) in the
+    same order — IEEE-identical, and constant per query (HOFs never
+    constant-fold in Catalyst).  NULLIF guards ANSI DIVIDE_BY_ZERO: a
+    zero-norm, NULL or wrong-length row scores NULL.
+
+    NULL scores sort last under DESC, so the filter runs AFTER the limit,
+    on <= k rows — before the sort it would be pushed into the scan and
+    re-run the scoring fold per row.  The outer ORDER BY declares the
+    output order: Spark does not preserve it through a filter above a
+    limit."""
+    return f"""
+        SELECT `{id_col}`, cosine FROM (
+          SELECT `{id_col}`,
+                 aggregate(zip_with(`{vec_col}`, {double_array_sql(query_vec)},
+                                    (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
+                           CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
+                 / NULLIF(SQRT(aggregate(transform(`{vec_col}`,
+                                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
+                                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))
+                    * {_sql_double(py_l2(query_vec))}, 0.0D) AS cosine
+          FROM {src}
+          WHERE {where}
+          ORDER BY cosine DESC, `{id_col}`
+          LIMIT {int(k)}
+        )
+        WHERE cosine IS NOT NULL
+        ORDER BY cosine DESC, `{id_col}`
+    """
+
+
+def _topk_cosine(
+    frame: DataFrame,
+    query_vec: list[float],
+    k: int,
+    where: str,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Run :func:`topk_cosine_sql` over a temp view of ``frame`` that is
+    dropped before returning, raising or not.  The drop bypasses
+    ``spark.catalog.dropTempView`` (and so ``spark.sql(text, src=frame)``,
+    which uses it): that also uncaches a cached plan equal to the view's,
+    even behind ``select("*")``, so it would unpersist a caller's
+    persisted input (Spark 4.1.2)."""
+    spark = frame.sparkSession
+    name = f"_topk_src_{uuid.uuid4().hex}"
+    frame.createTempView(name)
+    try:
+        return spark.sql(
+            topk_cosine_sql(name, query_vec, k, where, id_col, vec_col)
+        )
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(name)
 
 
 def brute_force_topk(
@@ -38,27 +115,10 @@ def brute_force_topk(
 
     Plan shape at scale: scan -> per-row score (codegen) ->
     TakeOrderedAndProject (per-partition top-k, merge on driver) — no global
-    sort, no shuffle of the corpus.
+    sort, no shuffle of the corpus.  The tail is :func:`topk_cosine_sql`
+    with no row predicate.
     """
-    q = double_array_lit(query_vec)
-    return (
-        embeddings.select(
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col), q).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-        # zero-norm / NULL vectors score NULL (see cosine_similarity) and
-        # rank nowhere.  DESC sorts NULLS LAST, so real matches fill the
-        # top-k first and the filter runs AFTER the limit on <= k rows —
-        # filtering before the sort would push the predicate into the scan
-        # and re-evaluate the whole scoring fold once more per row
-        .filter(F.col("cosine").isNotNull())
-        # Spark does not contractually preserve sort order through a filter
-        # above a limit; re-sorting <= k rows makes the ordering declared,
-        # not an accident of the TakeOrderedAndProject physical plan
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-    )
+    return _topk_cosine(embeddings, query_vec, k, "TRUE", id_col, vec_col)
 
 
 def cosine_pairs(
@@ -212,50 +272,23 @@ def with_ivf_cells_probed(
     a pair is found if the two vectors share ANY of their probed cells,
     so boundary-straddling pairs that single-cell assignment splits get
     a second (third, ...) chance at ~n_probe x the scoring work.  Same
-    BLAS shape and tie rules as the single-cell path (stable argsort —
-    ties break toward the smaller cell id, matching argmax-first);
-    ``n_probe=1`` reproduces ``with_ivf_cells(method='blas')`` exactly
-    on well-formed vectors, pinned in pytest.
+    scorer as ``with_ivf_cells(method='blas')`` (:func:`_ivf_cells_blas`),
+    so ``n_probe=1`` reproduces it exactly on well-formed vectors, pinned
+    in pytest.
 
-    NULL or wrong-dimension vectors get an EMPTY cell array (the explode
-    drops them): they cannot score a meaningful cosine anyway, and
-    zero-filling them instead would argsort all-zero scores — piling
-    every malformed vector into the n_probe smallest cell ids, inflating
-    those cells' O(members^2) work, and (for wrong-length vectors)
-    crashing the cell scorer's np.stack (ADVICE r10)."""
+    NULL or wrong-dimension vectors get no row at all (the explode drops
+    them): they cannot score a meaningful cosine anyway, and keeping their
+    zero-vector ranking instead would pile every malformed vector into
+    the n_probe smallest cell ids, inflating those cells' O(members^2)
+    work, and (for wrong-length vectors) crash the cell scorer's
+    np.stack (ADVICE r10)."""
     if n_probe < 1:
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    ranked = sorted(centroids, key=lambda t: int(t[0]))
-    cids = np.array([int(cid) for cid, _ in ranked], dtype=np.int64)
-    cmat = np.array([cv for _, cv in ranked], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    degenerate = cnorm == 0.0
-    scale = 1.0 / np.where(degenerate, 1.0, cnorm)
-    p = min(n_probe, len(ranked))
-    bc = df.sparkSession.sparkContext.broadcast(
-        (cids, cmat, scale, degenerate, p)
+    dim = len(centroids[0][1])
+    cells = _ivf_cells_blas(df, centroids, n_probe, vec_col)
+    return df.withColumn(
+        cell_col, F.explode(F.when(F.size(F.col(vec_col)) == dim, cells))
     )
-
-    @F.pandas_udf("array<int>")
-    def _cells(vecs: pd.Series) -> pd.Series:
-        b_cids, b_cmat, b_scale, b_degen, b_p = bc.value
-        mat = np.zeros((len(vecs), b_cmat.shape[1]), dtype=np.float64)
-        valid = np.zeros(len(vecs), dtype=bool)
-        for i, v in enumerate(vecs):
-            if v is not None and len(v) == b_cmat.shape[1]:
-                mat[i] = v
-                valid[i] = True
-        scores = (mat @ b_cmat.T) * b_scale
-        scores[:, b_degen] = -np.inf
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :b_p]
-        return pd.Series(
-            [
-                b_cids[row].astype("int32").tolist() if ok else []
-                for row, ok in zip(order, valid)
-            ]
-        )
-
-    return df.withColumn(cell_col, F.explode(_cells(F.col(vec_col))))
 
 
 def cosine_pairs_in_cells(
@@ -623,16 +656,6 @@ def cosine_pairs_lsh(
     return finish(result)
 
 
-def _py_fold_dot(vec, weights) -> float:
-    """Driver-side replica of with_lsh_buckets' per-plane dot fold: same
-    left-to-right double accumulation, so the query point's bucket bits are
-    bit-identical to the executor-computed (and oracle-computed) ones."""
-    acc = 0.0
-    for x, w in zip(vec, weights):
-        acc += float(x) * w
-    return acc
-
-
 def py_bucket(vec, table_signs: list[list[float]]) -> int:
     b = 0
     for p, srow in enumerate(table_signs):
@@ -641,21 +664,10 @@ def py_bucket(vec, table_signs: list[list[float]]) -> int:
     return b
 
 
-def py_l2(a) -> float:
-    """Driver-side replica of functions.vectors.l2_norm (sequential
-    square-sum fold + sqrt) — bit-identical to the executor expression."""
-    import math
-
-    s = 0.0
-    for x in a:
-        s += float(x) * float(x)
-    return math.sqrt(s)
-
-
 def py_cosine(a, b) -> float:
     """Driver-side replica of functions.vectors.cosine_similarity —
-    COMPOSED from the same canonical helpers (_py_fold_dot, py_l2), so the
-    three functions cannot drift apart; the operation order is identical
+    COMPOSED from the same canonical folds (functions.vectors._py_fold_dot
+    and py_l2), so they cannot drift apart; the operation order is identical
     to the executor expression and to DuckDB's list_cosine_similarity for
     non-degenerate inputs.  A zero vector returns NaN (the executor
     expression returns NULL for the same row): both mean 'ranks nowhere'
@@ -664,6 +676,35 @@ def py_cosine(a, b) -> float:
     if denom == 0.0:
         return float("nan")
     return _py_fold_dot(a, b) / denom
+
+
+def lsh_query_predicate(
+    query_vec: list[float],
+    signs: list[list[list[float]]],
+    prefix: str = "bucket_",
+) -> str:
+    """SQL predicate for the rows sharing a bucket with the query in ANY
+    table of ``signs`` (``bucket_0 = 5L OR ...``), the query's buckets
+    from py_bucket."""
+    return " OR ".join(
+        f"`{prefix}{t}` = {py_bucket(query_vec, table)}L"
+        for t, table in enumerate(signs)
+    )
+
+
+def ivf_probe(
+    query_vec: list[float],
+    centroids: list[tuple[int, list[float]]],
+    n_probe: int,
+) -> list[int]:
+    """Ids of the ``n_probe`` cells nearest the query by py_cosine, ties
+    to the smaller id.  A zero-vector centroid scores NaN and is never
+    probed (NaN would poison the sort order)."""
+    scored = ((py_cosine(query_vec, cvec), cid) for cid, cvec in centroids)
+    ranked = sorted(
+        ((c, cid) for c, cid in scored if c == c), key=lambda t: (-t[0], t[1])
+    )
+    return [cid for _, cid in ranked[:n_probe]]
 
 
 def ann_lsh_topk(
@@ -683,10 +724,11 @@ def ann_lsh_topk(
 
     Plan shape: bucket columns are Catalyst expressions (write-time columns
     in production — see with_lsh_buckets), the query's buckets are literals
-    computed driver-side with identical arithmetic, so candidate pruning is
-    a JVM-side OR-of-equalities filter followed by scan-speed scoring +
-    TakeOrderedAndProject.  ZERO Python stages — the previous design paid a
-    full mapInPandas corpus scan per query.
+    computed driver-side with identical arithmetic (lsh_query_predicate),
+    so candidate pruning is a JVM-side OR-of-equalities filter followed by
+    scan-speed scoring + TakeOrderedAndProject (the topk_cosine_sql tail).
+    ZERO Python stages — the previous design paid a full mapInPandas
+    corpus scan per query.
 
     Pass ``bucketed`` (a corpus already carrying bucket_0..bucket_{T-1}
     columns from with_lsh_buckets with the SAME family parameters — e.g. a
@@ -696,7 +738,6 @@ def ann_lsh_topk(
     computation is amortized across every ANN lookup.
     """
     signs = rademacher_signs(n_tables, n_planes, len(query_vec), seed)
-    qb = [py_bucket(query_vec, table) for table in signs]
     if bucketed is None:
         # deliberately NO repartition: a production corpus is already wide
         # (and carries write-time bucket columns); on a one-split test
@@ -704,25 +745,9 @@ def ann_lsh_topk(
         # more than the single-task projection it would parallelize
         # (measured r4)
         bucketed = with_lsh_buckets(embeddings, signs, vec_col)
-    cond = None
-    for t in range(n_tables):
-        c = F.col(f"bucket_{t}") == F.lit(qb[t])
-        cond = c if cond is None else (cond | c)
-    q = double_array_lit(query_vec)
-    return (
-        bucketed.filter(cond)
-        .select(
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col), q).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-        # post-limit on <= k rows (see brute_force_topk): degenerate rows
-        # sort NULLS LAST and rank nowhere; pre-sort filtering would
-        # duplicate the scoring fold into a pushed-down predicate
-        .filter(F.col("cosine").isNotNull())
-        # declared output order (see brute_force_topk) — cheap on <= k rows
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+    return _topk_cosine(
+        bucketed, query_vec, k, lsh_query_predicate(query_vec, signs),
+        id_col, vec_col,
     )
 
 
@@ -865,29 +890,32 @@ def seed_point_centroids(
 IVF_SQL_MAX_CELLS = 32
 
 
-def _with_ivf_cells_blas(
+def _ivf_cells_blas(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
+    n_probe: int,
     vec_col: str,
-    cell_col: str,
-) -> DataFrame:
-    """Arrow-batched BLAS twin of the rendered-SQL cell assignment: one
-    (batch x dim) @ (dim x cells) matmul per Arrow batch — the same shape
-    as cosine_pairs' tile scorer, and the only way a sqrt(n) codebook
-    scales (per-row work is a BLAS3 row, not an interpreted cells-wide
-    fold).  Row norms are irrelevant to the argmax (a positive per-row
-    scale), so cos reduces to dots / |centroid| per column.
+) -> Column:
+    """Arrow-batched BLAS cell scorer, the twin of the rendered-SQL
+    assignment: an ``array<int>`` column holding each row's ``n_probe``
+    nearest cells, nearest first.  One (batch x dim) @ (dim x cells)
+    matmul per Arrow batch — the same shape as cosine_pairs' tile scorer,
+    and the only way a sqrt(n) codebook scales (per-row work is a BLAS3
+    row, not an interpreted cells-wide fold).  Row norms are irrelevant to
+    the ranking (a positive per-row scale), so cos reduces to
+    dots / |centroid| per column.
 
     Parity with the SQL path: centroids are ranked in ascending-cid order
-    and numpy's argmax takes the FIRST max, matching the SQL
-    max-by-(cos, -cid) tie-break; degenerate zero-norm centroids score
-    -inf (the SQL path's literal -2.0) so they never win.  NULL/zero-norm
-    ROWS differ harmlessly (both paths park them in an arbitrary cell;
-    their cosine is NULL downstream and ranks nowhere).  Not bit-exact vs
-    the SQL fold (pairwise/SIMD vs sequential summation can flip an
-    argmax only when two cells tie within float noise) — the gate query
-    pins the SQL path; parity on real corpora is pinned by
-    test_ivf_blas_assignment_matches_sql."""
+    and the stable argsort puts the FIRST of tied cells first (what
+    argmax takes), matching the SQL max-by-(cos, -cid) tie-break;
+    degenerate zero-norm centroids score -inf (the SQL path's literal
+    -2.0) so they rank last.  A NULL or wrong-length ROW is scored as the
+    zero vector (cid order, degenerate cells last): the callers decide
+    whether it is parked in a cell (with_ivf_cells) or dropped
+    (with_ivf_cells_probed).  Not bit-exact vs the SQL fold
+    (pairwise/SIMD vs sequential summation can flip a ranking only when
+    two cells tie within float noise) — the gate query pins the SQL path;
+    parity on real corpora is pinned by test_ivf_blas_assignment_matches_sql."""
     ranked = sorted(centroids, key=lambda t: int(t[0]))
     cids = np.array([int(cid) for cid, _ in ranked], dtype=np.int64)
     cmat = np.array([cv for _, cv in ranked], dtype=np.float64)  # cells x dim
@@ -898,20 +926,23 @@ def _with_ivf_cells_blas(
     # at the production codebook (sqrt(1e9) ~ 31k cells x 128 dims) the
     # matrix is ~32 MB — broadcast ships it once per EXECUTOR and the
     # serialized UDF command stays metadata-sized per task
-    bc = df.sparkSession.sparkContext.broadcast((cids, cmat, scale, degenerate))
+    bc = df.sparkSession.sparkContext.broadcast(
+        (cids, cmat, scale, degenerate, min(n_probe, len(ranked)))
+    )
 
-    @F.pandas_udf("int")
-    def _cell(vecs: pd.Series) -> pd.Series:
-        b_cids, b_cmat, b_scale, b_degen = bc.value
+    @F.pandas_udf("array<int>")
+    def _cells(vecs: pd.Series) -> pd.Series:
+        b_cids, b_cmat, b_scale, b_degen, b_p = bc.value
         mat = np.zeros((len(vecs), b_cmat.shape[1]), dtype=np.float64)
         for i, v in enumerate(vecs):
             if v is not None and len(v) == b_cmat.shape[1]:
                 mat[i] = v
         scores = (mat @ b_cmat.T) * b_scale
         scores[:, b_degen] = -np.inf
-        return pd.Series(b_cids[np.argmax(scores, axis=1)].astype("int32"))
+        order = np.argsort(-scores, axis=1, kind="stable")[:, :b_p]
+        return pd.Series(b_cids[order].astype("int32").tolist())
 
-    return df.withColumn(cell_col, _cell(F.col(vec_col)))
+    return _cells(F.col(vec_col))
 
 
 def with_ivf_cells(
@@ -927,8 +958,9 @@ def with_ivf_cells(
 
     ``method``: ``"sql"`` — rendered-SQL argmax (bit-exact vs the DuckDB
     oracle, zero Python stages; only viable up to a few dozen cells);
-    ``"blas"`` — Arrow-batched matmul (_with_ivf_cells_blas, the scale
-    path for sqrt(n) codebooks); ``"auto"`` (default) — sql at
+    ``"blas"`` — Arrow-batched matmul (_ivf_cells_blas, the scale
+    path for sqrt(n) codebooks; every input row keeps a cell);
+    ``"auto"`` (default) — sql at
     <= IVF_SQL_MAX_CELLS cells, blas above, so small/gate codebooks keep
     the exact zero-Python plan and corpus-tracking codebooks get the one
     that finishes.
@@ -946,13 +978,12 @@ def with_ivf_cells(
     if method == "auto":
         method = "sql" if len(centroids) <= IVF_SQL_MAX_CELLS else "blas"
     if method == "blas":
-        return _with_ivf_cells_blas(df, centroids, vec_col, cell_col)
+        return df.withColumn(
+            cell_col, _ivf_cells_blas(df, centroids, 1, vec_col)[0]
+        )
     if method != "sql":
         raise ValueError(f"unknown with_ivf_cells method {method!r}")
-    from bigdatastructure_a5_spark.functions.vectors import (
-        _sql_double,
-        matrix_dots_sql,
-    )
+    from bigdatastructure_a5_spark.functions.vectors import matrix_dots_sql
 
     for c in df.columns:
         if c in (cell_col, "__ivf_dots", "__ivf_nv"):
@@ -1037,16 +1068,17 @@ def ivf_topk(
 
     - ``"seed_points"`` (default): deterministic lowest-id codebook
       (seed_point_centroids) — SQL-expressible, so the whole query is
-      oracle-checkable bit-for-bit.  Probe selection uses the driver-side
-      cosine replica (py_cosine), bit-identical to the executor/oracle
-      arithmetic.
+      oracle-checkable bit-for-bit.  Probe selection (ivf_probe) uses the
+      driver-side cosine replica (py_cosine), bit-identical to the
+      executor/oracle arithmetic.
     - ``"lloyd"``: sample-fit Lloyd codebook (fit_centroids_sample) — the
       production-quality quantizer; same plan shape, not SQL-checkable.
 
     Plan shape either way: ONE scan with a per-row argmax projection +
-    IN-filter + scan-speed scoring + TakeOrderedAndProject.  ZERO Python
-    stages on the sql assignment path — the previous design paid a
-    mapInPandas pass over the full corpus per query.  Complements the
+    IN-filter + scan-speed scoring + TakeOrderedAndProject (the
+    topk_cosine_sql tail).  ZERO Python stages on the sql assignment
+    path — the previous design paid a mapInPandas pass over the full
+    corpus per query.  Complements the
     hyperplane-LSH variant (data-dependent cells vs data-independent
     planes).
 
@@ -1081,31 +1113,16 @@ def ivf_topk(
         # codebook yields fewer centroids), never the requested one
         n_probe = auto_probe(len(cents))
 
-    scored = [(py_cosine(query_vec, cvec), cid) for cid, cvec in cents]
-    # degenerate (zero-vector) codebook entries score NaN — exclude them
-    # from probing rather than letting NaN poison the sort order
-    ranked = sorted(
-        ((c, cid) for c, cid in scored if c == c), key=lambda t: (-t[0], t[1])
-    )
-    probe = [cid for _, cid in ranked[:n_probe]]
-
+    probe = ivf_probe(query_vec, cents, n_probe)
     # deliberately NO repartition (see ann_lsh_topk: the exchange costs more
     # than the one-task argmax projection it would spread on a test corpus)
     if celled is None:
         celled = with_ivf_cells(
             embeddings, cents, vec_col, cell_col, method=assign_method
         )
-    q_lit = double_array_lit(query_vec)
-    return (
-        celled.filter(F.col(cell_col).isin(probe))
-        .select(
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col), q_lit).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-        # post-limit on <= k rows (see brute_force_topk)
-        .filter(F.col("cosine").isNotNull())
-        # declared output order (see brute_force_topk) — cheap on <= k rows
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+    where = (
+        f"`{cell_col}` IN ({', '.join(str(int(c)) for c in probe)})"
+        if probe
+        else "FALSE"  # every centroid degenerate: nothing to probe
     )
+    return _topk_cosine(celled, query_vec, k, where, id_col, vec_col)

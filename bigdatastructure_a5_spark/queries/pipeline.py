@@ -717,57 +717,6 @@ def _lsh_oracle_sql(n_planes: int = 4, n_tables: int = 8, dim: int = 64, seed: i
     """
 
 
-def _topk_cosine_sql(
-    spark: SparkSession, view: str, qv: list[float], where: str, k: int = 10
-) -> DataFrame:
-    """Shared rendered-SQL probe+score tail for the ANN queries: exact
-    cosine over the rows ``where`` selects from ``view``, deterministic
-    ties, top-``k``.  One spark.sql call instead of ~40 Column-API py4j
-    round-trips.
-
-    Arithmetic parity with functions.vectors.cosine_similarity: dot and
-    corpus-norm are the same zip_with/transform+aggregate folds; the QUERY
-    vector's norm is folded driver-side over the same values in the same
-    sequential order (IEEE-identical, and constant per query — HOFs never
-    constant-fold in Catalyst, so inlining it also saves per-row work)."""
-    import math
-
-    from bigdatastructure_a5_spark.functions.vectors import _sql_double
-
-    q_sql = "array(" + ",".join(_sql_double(v) for v in qv) + ")"
-    nq = 0.0
-    for x in qv:
-        nq += float(x) * float(x)
-    # NULLIF guards ANSI-mode DIVIDE_BY_ZERO on a zero-norm corpus row
-    # (same contract as functions.vectors.cosine_similarity: degenerate
-    # rows score NULL — DESC sorts them NULLS LAST so real matches fill
-    # the top-k, and the outer filter drops them AFTER the limit, on <= k
-    # rows.  Filtering inside the subquery would push the predicate down
-    # and re-evaluate the whole scoring fold once more per row.)  For
-    # non-degenerate rows the division value is bit-identical.  The outer
-    # ORDER BY re-sorts the <= k surviving rows: Spark does not
-    # contractually preserve sort order through a filter above a limit,
-    # so the output ordering must be declared, not inherited.
-    return spark.sql(f"""
-        SELECT vec_id, cosine FROM (
-          SELECT vec_id,
-                 aggregate(zip_with(`embedding`, {q_sql},
-                                    (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-                           CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-                 / NULLIF(SQRT(aggregate(transform(`embedding`,
-                                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))
-                    * {_sql_double(math.sqrt(nq))}, 0.0D) AS cosine
-          FROM {view}
-          WHERE {where}
-          ORDER BY cosine DESC, vec_id
-          LIMIT {k}
-        )
-        WHERE cosine IS NOT NULL
-        ORDER BY cosine DESC, vec_id
-    """)
-
-
 @query("sim_ann_lsh", oracle=_lsh_oracle_sql(), tags=("ext:similarity",))
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-10 via multi-table hyperplane LSH (4 planes x 8
@@ -780,8 +729,9 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from bigdatastructure_a5_spark.operators.similarity import (
-        py_bucket,
+        lsh_query_predicate,
         rademacher_signs,
+        topk_cosine_sql,
         with_lsh_buckets,
     )
 
@@ -814,9 +764,12 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
         ),
     )
-    qb = [py_bucket(qv, table) for table in signs]
-    cond = " OR ".join(f"bucket_{t} = {qb[t]}L" for t in range(8))
-    return _topk_cosine_sql(spark, view, qv, cond)
+    # the tail reads the view by name: a {src} frame or DataFrame ops over
+    # the view re-check its plan on every call (+30-50 ms of build per
+    # call at sf0.1, local[4], 4 vCPUs)
+    return spark.sql(
+        topk_cosine_sql(view, qv, 10, lsh_query_predicate(qv, signs))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1243,11 +1196,12 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tail — the same two amortizations as sim_ann_lsh (see its comments):
     # the codebook-literal argmax projection is analyzed once per session
     # (write-time cell columns in production), and the probe+score tail is
-    # one spark.sql call.  No data is cached.
+    # one spark.sql call over the view's name.  No data is cached.
     import hashlib
 
     from bigdatastructure_a5_spark.operators.similarity import (
-        py_cosine,
+        ivf_probe,
+        topk_cosine_sql,
         with_ivf_cells,
     )
 
@@ -1269,12 +1223,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         key,
         lambda: with_ivf_cells(emb, cents, "embedding", "__cell"),
     )
-    scored = [(py_cosine(qv, cvec), cid) for cid, cvec in cents]
-    ranked = sorted(
-        ((c, cid) for c, cid in scored if c == c), key=lambda t: (-t[0], t[1])
-    )
-    probe = ", ".join(str(cid) for _, cid in ranked[:4])
-    return _topk_cosine_sql(spark, view, qv, f"__cell IN ({probe})")
+    probe = ", ".join(str(cid) for cid in ivf_probe(qv, cents, 4))
+    return spark.sql(topk_cosine_sql(view, qv, 10, f"__cell IN ({probe})"))
 
 
 _QUALITY_EXPR_SQL = """

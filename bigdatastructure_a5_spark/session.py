@@ -71,7 +71,6 @@ def get_spark(
     app_name: str = "bigdatastructure-a5-spark",
     cpus: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
     profile: str = "local",
 ) -> SparkSession:
     """Build (or fetch) the session.
@@ -83,7 +82,9 @@ def get_spark(
 
     ``profile="cluster"`` layers :func:`cluster_overrides` (the COVERAGE.md
     deploy checklist, executable) over the defaults; ``extra_conf`` still
-    wins over both.  Note most of those are STATIC confs — the profile
+    wins over both.  Streaming state uses Spark's in-memory provider
+    unless one of the two sets ``stateStore.providerClass`` (the cluster
+    profile sets RocksDB).  Note most of those are STATIC confs — the profile
     takes effect on a fresh session, not via getOrCreate against a live
     one.  Two guards
     because each alone has a blind spot: SparkConf() only sees spark.*
@@ -151,20 +152,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    # RocksDB state store (flag-gated): the default in-memory (HDFS-backed)
-    # provider keeps every streaming operator's state on the executor HEAP —
-    # fine for the fixture streams, an OOM ceiling for 100 TB stateful jobs
-    # (stream-stream interval joins and sessionization hold state
-    # proportional to the watermark window x key cardinality).  RocksDB
-    # spills state to local disk with bounded memory and incremental
-    # checkpointing; it ships in the Spark JVM (no extra install).  Gated
-    # rather than default-on because state-store files are
-    # provider-specific: flipping the provider mid-checkpoint breaks
-    # restart compatibility for existing checkpoints.
-    if rocksdb_state or os.environ.get("SPARK_GRAFT_ROCKSDB") == "1":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
     if profile == "cluster":
         for k, v in cluster_overrides().items():
             builder = builder.config(k, v)

@@ -365,6 +365,98 @@ def test_ann_recall_vs_brute_force(spark, sf_dir):
     assert recall >= 0.3, (recall, exact, approx)
 
 
+def _corpus_with_degenerate_rows(spark, sf_dir):
+    """The sf0.001 embeddings plus one zero-norm, one NULL and two
+    wrong-length rows, and the query vector (vec_id 0)."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
+    dim = len(qv)
+    bad = spark.createDataFrame(
+        [
+            (10_000_001, [0.0] * dim),
+            (10_000_002, None),
+            (10_000_003, [0.5] * (dim - 1)),
+            (10_000_004, [0.5] * (dim + 3)),
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    return emb.unionByName(bad), qv
+
+
+def test_topk_renderer_score_equals_cosine_similarity(spark, sf_dir):
+    """The one cosine top-k tail (topk_cosine_sql) scores every row
+    bit-for-bit like functions.vectors.cosine_similarity, and a row that
+    scores NULL there (zero norm, NULL, wrong length) is dropped from the
+    top-k, never ranked."""
+    from bigdatastructure_a5_spark.functions.vectors import cosine_similarity
+    from bigdatastructure_a5_spark.operators.similarity import topk_cosine_sql
+
+    corpus, qv = _corpus_with_degenerate_rows(spark, sf_dir)
+    n = corpus.count()
+    want = {
+        r.vec_id: r.cosine
+        for r in corpus.select(
+            "vec_id",
+            cosine_similarity(
+                F.col("embedding"), F.array(*[F.lit(x) for x in qv])
+            ).alias("cosine"),
+        ).collect()
+    }
+    rendered = spark.sql(topk_cosine_sql("{src}", qv, n), src=corpus).collect()
+    got = {r.vec_id: r.cosine for r in rendered}
+    assert {i for i, c in want.items() if c is None} == {
+        10_000_001, 10_000_002, 10_000_003, 10_000_004,
+    }
+    assert got == {i: c for i, c in want.items() if c is not None}
+    assert [r.vec_id for r in rendered] == sorted(got, key=lambda i: (-got[i], i))
+    # a zero query vector has no direction: NULL against every row
+    assert spark.sql(
+        topk_cosine_sql("{src}", [0.0] * len(qv), n), src=corpus
+    ).count() == 0
+
+
+def test_topk_operators_leave_catalog_and_caches_unchanged(spark, sf_dir):
+    """The top-k operators and the IVF BLAS scorer register no view that
+    outlives the call, also when the rendered SQL raises, and a persisted
+    input frame is still cached afterwards."""
+    from pyspark.errors import AnalysisException
+
+    from bigdatastructure_a5_spark.operators.similarity import (
+        ivf_topk,
+        seed_point_centroids,
+        with_ivf_cells,
+        with_ivf_cells_probed,
+    )
+
+    corpus, qv = _corpus_with_degenerate_rows(spark, sf_dir)
+    corpus = corpus.filter(F.col("vec_id") != 0).persist()
+    corpus.count()
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+
+    def views():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = views()
+    cents = seed_point_centroids(corpus, 16)
+    brute = brute_force_topk(corpus, qv, k=10).collect()
+    assert len(brute) == 10
+    assert ann_lsh_topk(corpus, qv, k=10).count() > 0
+    assert ivf_topk(corpus, qv, k=10, centroids=cents, n_probe=4).count() > 0
+    assert ivf_topk(
+        corpus, qv, k=10, centroids=cents, n_probe=4, assign_method="blas"
+    ).count() > 0
+    with_ivf_cells(corpus, cents, method="blas").select("ivf_cell").collect()
+    with_ivf_cells_probed(corpus, cents, n_probe=2).select("ivf_cell").collect()
+    # every centroid degenerate: nothing is probed, nothing is returned
+    zero = [(0, [0.0] * len(qv))]
+    assert ivf_topk(corpus, qv, k=10, centroids=zero, n_probe=1).count() == 0
+    with pytest.raises(AnalysisException):
+        brute_force_topk(corpus, qv, k=10, vec_col="no_such_column")
+    assert views() == before
+    assert cache_mgr.lookupCachedData(corpus._jdf).isDefined()
+    corpus.unpersist()
+
+
 def test_cosine_pairs_symmetric_threshold(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     rows = cosine_pairs(emb, threshold=0.45).collect()
@@ -1105,7 +1197,7 @@ def test_multi_probe_cells_raise_within_cell_recall(spark, sf_dir):
 
 def test_probed_cells_drop_malformed_vectors(spark, sf_dir):
     """ADVICE r10: NULL / wrong-dimension vectors must get NO probed
-    cells (empty array, dropped by the explode) — zero-filling them
+    cells (no row after the explode) — zero-filling them
     would pile every malformed vector into the smallest cell ids
     (inflating those cells' O(members^2) work) and a wrong-length
     vector reaching the cell scorer crashes its np.stack.  The pair
@@ -1113,6 +1205,7 @@ def test_probed_cells_drop_malformed_vectors(spark, sf_dir):
     from bigdatastructure_a5_spark.operators.similarity import (
         cosine_pairs_in_cells,
         fit_centroids_sample,
+        with_ivf_cells,
         with_ivf_cells_probed,
     )
 
@@ -1139,6 +1232,12 @@ def test_probed_cells_drop_malformed_vectors(spark, sf_dir):
     assert (
         celled_bad.filter(F.col("vec_id") >= 10_000_000).count() == 0
     )
+    # the single-cell form over the same scorer keeps every input row,
+    # each with a cell
+    cells = with_ivf_cells(corrupted, cents, method="blas").select("ivf_cell")
+    got_cells = [r.ivf_cell for r in cells.collect()]
+    assert len(got_cells) == corrupted.count()
+    assert None not in got_cells
     tracked: list = []
     got = {
         (r.id_a, r.id_b)

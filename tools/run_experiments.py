@@ -540,9 +540,9 @@ def ann_recall_sweep(spark) -> list[str]:
     from bigdatastructure_a5_spark.operators.similarity import (
         ann_lsh_topk,
         brute_force_topk,
+        ivf_probe,
         ivf_topk,
-        py_bucket,
-        py_cosine,
+        lsh_query_predicate,
         rademacher_signs,
         seed_point_centroids,
         with_ivf_cells,
@@ -574,15 +574,10 @@ def ann_recall_sweep(spark) -> list[str]:
     cents = seed_point_centroids(emb, 16)
     celled = with_ivf_cells(emb, cents, "embedding", "__cell").persist()
     celled.count()
-    # same NaN (degenerate-centroid) guard as ivf_topk's probe ranking, so
-    # the scanned counts describe exactly the cells the operator probes
-    scored = sorted(
-        ((c, cid) for c, cid in
-         ((py_cosine(qv, cvec), cid) for cid, cvec in cents) if c == c),
-        key=lambda t: (-t[0], t[1]),
-    )
+    # ivf_topk's own probe ranking, so the scanned counts describe exactly
+    # the cells the operator probes
     for n_probe in (1, 2, 4, 8, 16):
-        probe = [cid for _, cid in scored[:n_probe]]
+        probe = ivf_probe(qv, cents, n_probe)
         scanned = celled.filter(F.col("__cell").isin(probe)).count()
         got = {
             r.vec_id
@@ -603,12 +598,8 @@ def ann_recall_sweep(spark) -> list[str]:
     signs8 = rademacher_signs(8, 4, len(qv), 42)
     bucketed = with_lsh_buckets(emb, signs8).persist()
     bucketed.count()
-    qb = [py_bucket(qv, table) for table in signs8]
     for n_tables in (1, 2, 4, 8):
-        cond = None
-        for t in range(n_tables):
-            c = F.col(f"bucket_{t}") == F.lit(qb[t])
-            cond = c if cond is None else (cond | c)
+        cond = lsh_query_predicate(qv, signs8[:n_tables])
         scanned = bucketed.filter(cond).count()
         got = {
             r.vec_id
