@@ -60,7 +60,7 @@ from ..functions.vectors import (
     double_array_lit,
     double_array_sql,
 )
-from .similarity import ivf_probe, sample_vectors
+from .similarity import ivf_probe_predicate, sample_vectors
 
 #: LUT entries (m * n_codes) above which pq_adc_topk switches the score
 #: fold from a rendered-SQL literal to the Arrow/BLAS gather stage — the
@@ -489,10 +489,10 @@ def ivf_pq_topk(
     the probed rows — the FAISS IVFPQ composition: IVF bounds rows
     SCANNED, PQ bounds bytes PER ROW, so a probe reads
     n/cells*n_probe rows x ~m bytes instead of n x dim floats.  The probe
-    is similarity.ivf_probe, the same ranking ivf_topk uses."""
+    is similarity.ivf_probe_predicate, the same one ivf_topk uses."""
     return pq_adc_topk(
         celled_codes.filter(
-            F.col(cell_col).isin(ivf_probe(query_vec, centroids, n_probe))
+            ivf_probe_predicate(query_vec, centroids, n_probe, cell_col)
         ),
         codebook,
         query_vec,

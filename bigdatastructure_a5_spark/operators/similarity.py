@@ -12,7 +12,8 @@ Three top-k tiers, as the brief prescribes:
   nearest the query are scored.
 
 All three end in one rendered-SQL tail, :func:`topk_cosine_sql`; the ANN
-tiers pick rows with :func:`lsh_query_predicate` / :func:`ivf_probe`.
+tiers pick rows with :func:`lsh_query_predicate` /
+:func:`ivf_probe_predicate`.
 All vector math is Catalyst higher-order functions (functions/vectors.py)
 — no UDFs below the IVF BLAS scorer's codebook size.  Hyperplanes are
 generated from a fixed seed so results are reproducible run-to-run.
@@ -40,7 +41,7 @@ def topk_cosine_sql(
     src: str,
     query_vec: list[float],
     k: int,
-    where: str = "TRUE",
+    where: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
@@ -286,6 +287,8 @@ def with_ivf_cells_probed(
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
     dim = len(centroids[0][1])
     cells = _ivf_cells_blas(df, centroids, n_probe, vec_col)
+    if n_probe == 1:
+        cells = F.array(cells)
     return df.withColumn(
         cell_col, F.explode(F.when(F.size(F.col(vec_col)) == dim, cells))
     )
@@ -679,32 +682,34 @@ def py_cosine(a, b) -> float:
 
 
 def lsh_query_predicate(
-    query_vec: list[float],
-    signs: list[list[list[float]]],
-    prefix: str = "bucket_",
+    query_vec: list[float], signs: list[list[list[float]]]
 ) -> str:
     """SQL predicate for the rows sharing a bucket with the query in ANY
     table of ``signs`` (``bucket_0 = 5L OR ...``), the query's buckets
     from py_bucket."""
     return " OR ".join(
-        f"`{prefix}{t}` = {py_bucket(query_vec, table)}L"
+        f"`bucket_{t}` = {py_bucket(query_vec, table)}L"
         for t, table in enumerate(signs)
     )
 
 
-def ivf_probe(
+def ivf_probe_predicate(
     query_vec: list[float],
     centroids: list[tuple[int, list[float]]],
     n_probe: int,
-) -> list[int]:
-    """Ids of the ``n_probe`` cells nearest the query by py_cosine, ties
-    to the smaller id.  A zero-vector centroid scores NaN and is never
-    probed (NaN would poison the sort order)."""
+    cell_col: str,
+) -> str:
+    """SQL predicate for the rows in the ``n_probe`` cells nearest the
+    query by py_cosine, ties to the smaller id (`` `__cell` IN (3, 0)``).
+    A zero-vector centroid scores NaN and is never probed (NaN would
+    poison the sort order); with every centroid degenerate nothing is
+    probed and the predicate is ``FALSE``."""
     scored = ((py_cosine(query_vec, cvec), cid) for cid, cvec in centroids)
     ranked = sorted(
         ((c, cid) for c, cid in scored if c == c), key=lambda t: (-t[0], t[1])
     )
-    return [cid for _, cid in ranked[:n_probe]]
+    probe = [str(int(cid)) for _, cid in ranked[:n_probe]]
+    return f"`{cell_col}` IN ({', '.join(probe)})" if probe else "FALSE"
 
 
 def ann_lsh_topk(
@@ -897,8 +902,11 @@ def _ivf_cells_blas(
     vec_col: str,
 ) -> Column:
     """Arrow-batched BLAS cell scorer, the twin of the rendered-SQL
-    assignment: an ``array<int>`` column holding each row's ``n_probe``
-    nearest cells, nearest first.  One (batch x dim) @ (dim x cells)
+    assignment: each row's nearest cell as an ``int`` column when
+    ``n_probe`` is 1 (one argmax per row), else an ``array<int>`` column
+    of its ``n_probe`` nearest cells, nearest first (a stable argsort).
+    Both rank the same scores; the argmax form skips the per-row sort and
+    list (5x the wall at 1,414 cells).  One (batch x dim) @ (dim x cells)
     matmul per Arrow batch — the same shape as cosine_pairs' tile scorer,
     and the only way a sqrt(n) codebook scales (per-row work is a BLAS3
     row, not an interpreted cells-wide fold).  Row norms are irrelevant to
@@ -906,8 +914,8 @@ def _ivf_cells_blas(
     dots / |centroid| per column.
 
     Parity with the SQL path: centroids are ranked in ascending-cid order
-    and the stable argsort puts the FIRST of tied cells first (what
-    argmax takes), matching the SQL max-by-(cos, -cid) tie-break;
+    and argmax takes the FIRST of tied cells, as the stable argsort puts
+    it first, matching the SQL max-by-(cos, -cid) tie-break;
     degenerate zero-norm centroids score -inf (the SQL path's literal
     -2.0) so they rank last.  A NULL or wrong-length ROW is scored as the
     zero vector (cid order, degenerate cells last): the callers decide
@@ -930,16 +938,29 @@ def _ivf_cells_blas(
         (cids, cmat, scale, degenerate, min(n_probe, len(ranked)))
     )
 
-    @F.pandas_udf("array<int>")
-    def _cells(vecs: pd.Series) -> pd.Series:
-        b_cids, b_cmat, b_scale, b_degen, b_p = bc.value
+    def scores(vecs: pd.Series) -> np.ndarray:
+        _, b_cmat, b_scale, b_degen, _ = bc.value
         mat = np.zeros((len(vecs), b_cmat.shape[1]), dtype=np.float64)
         for i, v in enumerate(vecs):
             if v is not None and len(v) == b_cmat.shape[1]:
                 mat[i] = v
-        scores = (mat @ b_cmat.T) * b_scale
-        scores[:, b_degen] = -np.inf
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :b_p]
+        out = (mat @ b_cmat.T) * b_scale
+        out[:, b_degen] = -np.inf
+        return out
+
+    if n_probe == 1:
+
+        @F.pandas_udf("int")
+        def _cell(vecs: pd.Series) -> pd.Series:
+            best = np.argmax(scores(vecs), axis=1)
+            return pd.Series(bc.value[0][best].astype("int32"))
+
+        return _cell(F.col(vec_col))
+
+    @F.pandas_udf("array<int>")
+    def _cells(vecs: pd.Series) -> pd.Series:
+        b_cids, b_p = bc.value[0], bc.value[4]
+        order = np.argsort(-scores(vecs), axis=1, kind="stable")[:, :b_p]
         return pd.Series(b_cids[order].astype("int32").tolist())
 
     return _cells(F.col(vec_col))
@@ -979,7 +1000,7 @@ def with_ivf_cells(
         method = "sql" if len(centroids) <= IVF_SQL_MAX_CELLS else "blas"
     if method == "blas":
         return df.withColumn(
-            cell_col, _ivf_cells_blas(df, centroids, 1, vec_col)[0]
+            cell_col, _ivf_cells_blas(df, centroids, 1, vec_col)
         )
     if method != "sql":
         raise ValueError(f"unknown with_ivf_cells method {method!r}")
@@ -1068,9 +1089,9 @@ def ivf_topk(
 
     - ``"seed_points"`` (default): deterministic lowest-id codebook
       (seed_point_centroids) — SQL-expressible, so the whole query is
-      oracle-checkable bit-for-bit.  Probe selection (ivf_probe) uses the
-      driver-side cosine replica (py_cosine), bit-identical to the
-      executor/oracle arithmetic.
+      oracle-checkable bit-for-bit.  Probe selection
+      (ivf_probe_predicate) uses the driver-side cosine replica
+      (py_cosine), bit-identical to the executor/oracle arithmetic.
     - ``"lloyd"``: sample-fit Lloyd codebook (fit_centroids_sample) — the
       production-quality quantizer; same plan shape, not SQL-checkable.
 
@@ -1113,16 +1134,11 @@ def ivf_topk(
         # codebook yields fewer centroids), never the requested one
         n_probe = auto_probe(len(cents))
 
-    probe = ivf_probe(query_vec, cents, n_probe)
     # deliberately NO repartition (see ann_lsh_topk: the exchange costs more
     # than the one-task argmax projection it would spread on a test corpus)
     if celled is None:
         celled = with_ivf_cells(
             embeddings, cents, vec_col, cell_col, method=assign_method
         )
-    where = (
-        f"`{cell_col}` IN ({', '.join(str(int(c)) for c in probe)})"
-        if probe
-        else "FALSE"  # every centroid degenerate: nothing to probe
-    )
+    where = ivf_probe_predicate(query_vec, cents, n_probe, cell_col)
     return _topk_cosine(celled, query_vec, k, where, id_col, vec_col)

@@ -1200,7 +1200,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from bigdatastructure_a5_spark.operators.similarity import (
-        ivf_probe,
+        ivf_probe_predicate,
         topk_cosine_sql,
         with_ivf_cells,
     )
@@ -1223,8 +1223,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         key,
         lambda: with_ivf_cells(emb, cents, "embedding", "__cell"),
     )
-    probe = ", ".join(str(cid) for cid in ivf_probe(qv, cents, 4))
-    return spark.sql(topk_cosine_sql(view, qv, 10, f"__cell IN ({probe})"))
+    where = ivf_probe_predicate(qv, cents, 4, "__cell")
+    return spark.sql(topk_cosine_sql(view, qv, 10, where))
 
 
 _QUALITY_EXPR_SQL = """

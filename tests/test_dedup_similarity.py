@@ -402,7 +402,9 @@ def test_topk_renderer_score_equals_cosine_similarity(spark, sf_dir):
             ).alias("cosine"),
         ).collect()
     }
-    rendered = spark.sql(topk_cosine_sql("{src}", qv, n), src=corpus).collect()
+    rendered = spark.sql(
+        topk_cosine_sql("{src}", qv, n, "TRUE"), src=corpus
+    ).collect()
     got = {r.vec_id: r.cosine for r in rendered}
     assert {i for i, c in want.items() if c is None} == {
         10_000_001, 10_000_002, 10_000_003, 10_000_004,
@@ -411,7 +413,7 @@ def test_topk_renderer_score_equals_cosine_similarity(spark, sf_dir):
     assert [r.vec_id for r in rendered] == sorted(got, key=lambda i: (-got[i], i))
     # a zero query vector has no direction: NULL against every row
     assert spark.sql(
-        topk_cosine_sql("{src}", [0.0] * len(qv), n), src=corpus
+        topk_cosine_sql("{src}", [0.0] * len(qv), n, "TRUE"), src=corpus
     ).count() == 0
 
 

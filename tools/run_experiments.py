@@ -540,7 +540,7 @@ def ann_recall_sweep(spark) -> list[str]:
     from bigdatastructure_a5_spark.operators.similarity import (
         ann_lsh_topk,
         brute_force_topk,
-        ivf_probe,
+        ivf_probe_predicate,
         ivf_topk,
         lsh_query_predicate,
         rademacher_signs,
@@ -577,8 +577,8 @@ def ann_recall_sweep(spark) -> list[str]:
     # ivf_topk's own probe ranking, so the scanned counts describe exactly
     # the cells the operator probes
     for n_probe in (1, 2, 4, 8, 16):
-        probe = ivf_probe(qv, cents, n_probe)
-        scanned = celled.filter(F.col("__cell").isin(probe)).count()
+        probe = ivf_probe_predicate(qv, cents, n_probe, "__cell")
+        scanned = celled.filter(probe).count()
         got = {
             r.vec_id
             for r in ivf_topk(
